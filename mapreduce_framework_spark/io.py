@@ -230,14 +230,14 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     pinned to UTC the values are bit-identical to the naive timestamps
     DuckDB reads from the same files.  The testdata generator has shipped
     the column both as parquet TIMESTAMP(NANOS) — which Spark's
-    vectorized reader rejects, so we read raw nanos (legacy conf) and
-    truncate to microseconds, the same ns→µs truncation DuckDB applies —
+    vectorized reader rejects, so we read raw nanos (``nanosAsLong``,
+    set in session.RUNTIME_CONFS) and truncate to microseconds, the same
+    ns→µs truncation DuckDB applies —
     and as TIMESTAMP(MICROS, isAdjustedToUTC=false), which a default
     session infers as TIMESTAMP_NTZ; both normalize to TIMESTAMP here.
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         df = spark.read.parquet(path)
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":

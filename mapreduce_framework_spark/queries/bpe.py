@@ -56,7 +56,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduce_framework_spark.io import table
-from mapreduce_framework_spark.operators.components import iter_checkpoint
+from mapreduce_framework_spark.operators.materialize import iter_checkpoint
 from mapreduce_framework_spark.registry import register
 
 N_MERGES = 8

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduce_framework_spark.io import table
-from mapreduce_framework_spark.operators.components import iter_checkpoint
+from mapreduce_framework_spark.operators.materialize import iter_checkpoint, iterate
 from mapreduce_framework_spark.registry import register
 
 _N_ITER = 3
@@ -82,121 +82,59 @@ def pagerank(
     lazy job — ReuseExchange computes the edge subtree once, and for
     shallow fixed-round runs this measured FASTER than eager
     checkpointing (3.7 s lazy vs 4.5 s checkpointed at 3 rounds,
-    sf0.1).  But the unrolled plan doubles in depth every round:
-    analysis/optimization cost grows superlinearly and deep plans blow
-    past codegen limits — so for N ≳ 5 pass ``checkpoint_every=k`` to
-    localCheckpoint the rank frame every k rounds (components.py's
-    iterative hygiene: truncate lineage, keep the frame materialized).
-    The edge-with-degree frame is persisted in that mode because each
-    checkpoint action would otherwise recompute it from the scan.
-    Measured at 1M synthetic edges (SCALE.md §Iterative): N=10 lazy is
-    plan-explosion-bound, N=10 with k=3 stays flat per round; results
-    are bit-identical on either path."""
+    sf0.1).  But the unrolled plan doubles in depth every round, so for
+    N ≳ 5 pass ``checkpoint_every=k``: the rounds then run on
+    :func:`~mapreduce_framework_spark.operators.materialize.iterate`
+    with the edge-with-degree frame pinned and a final checkpoint.
+    Bit-identical results either way (N-curves in SCALE.md
+    §Iterative)."""
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     # In checkpoint mode every per-round join is pinned to shuffle-hash.
     # Scale-honest: deg and ranks are node-sized — the same magnitude as
     # the frontier — so at 100 TB neither side broadcasts anyway; and in
     # local/driver-constrained sessions each eager checkpoint job would
     # otherwise BUILD a fresh driver-side broadcast per cadence, which is
-    # what OOMed a long 167-key sf0.1 sweep (round-5 finding: broadcast
-    # build needs free driver storage memory the shared session no longer
-    # had).  The shallow lazy path keeps Catalyst/AQE's free choice.
-    edges_deg = edges.join(deg.hint("shuffle_hash") if checkpoint_every else deg, "src")
-    if checkpoint_every:
-        # Round-12 measured NON-change: an explicit repartition("src")
-        # before the persist (the components.py cached-partitioning
-        # trick) was A/B'd here — a first pass suggested a win, but a
-        # warmup-controlled re-measure (two discard runs, alternating
-        # order) showed parity (prepart 6.72 vs base 6.76 s min-of-3 at
-        # N=10/sf0.1): the shuffle-hash join's output partitioning on
-        # src is already what every round's join needs, so the cached
-        # frame re-exchanges nothing and the explicit repartition only
-        # adds a build-time exchange.  Left as-is deliberately.
-        edges_deg = edges_deg.persist()
+    # what OOMed a long 167-key sf0.1 sweep (broadcast build needs free
+    # driver storage memory the shared session no longer had).  The
+    # shallow lazy path keeps Catalyst/AQE's free choice.
+    def hint(df: DataFrame) -> DataFrame:
+        return df.hint("shuffle_hash") if checkpoint_every else df
+
+    # No repartition("src") before pinning: A/B'd at parity (6.72 vs
+    # 6.76 s min-of-3 at N=10/sf0.1) — the shuffle-hash join's output
+    # partitioning on src is already what every round's join needs.
+    edges_deg = edges.join(hint(deg), "src")
     ranks = deg.select(
         F.col("src").alias("node"), F.lit(1_000_000).cast("bigint").alias("rank")
     )
-    spark = edges.sparkSession
-    prev_parts = prev_aqe = None
-    if checkpoint_every:
-        # Round-13 (round-12 verdict task #4; guide §1.2/§2.2): in
-        # checkpoint mode the iteration runs as ~rounds/cadence SMALL
-        # jobs, and two per-job overheads dominate at depth:
-        #
-        # 1. AQE re-plans every one of those jobs (each shuffle becomes
-        #    a materialized query stage with its own scheduling round-
-        #    trip).  The loop's join strategy is already pinned
-        #    (shuffle_hash hints above) and its partitioning static, so
-        #    AQE has nothing left to improve — bypass it for the loop's
-        #    jobs and restore after.  Bit-identical results (AQE never
-        #    changes values; the cadence-identity test pins it).
-        # 2. The session's shuffle width (sized for corpus scans) makes
-        #    every tiny per-round shuffle pay ~32 near-empty tasks per
-        #    barrier.  Derive the loop's width from the edge frame's
-        #    EXACT row count instead (the count also materializes the
-        #    persist, a job the first round would otherwise run):
-        #    (src, dst, deg) is 3 longs ≈ 24 serialized bytes/row,
-        #    target ~4 MiB of shuffle per partition in the
-        #    overhead-bound small-job regime, clamped to
-        #    [2, defaultParallelism] — per-round jobs are sequential,
-        #    so width beyond the core count only adds barrier cost.
-        #    (Catalyst's sizeInBytes is useless here: the join estimate
-        #    overshoots a 19 MiB frame to 3.5 TB.)
-        #
-        # Measured at sf0.1, N=10, warm, min-of-2: 6.67 s (AQE on,
-        # 32 parts) → 5.89 (AQE off) → 3.30 (AQE off, derived width 8);
-        # AQE back on at width 8 costs 1.45× — the per-job re-planning
-        # is the residual.  Width curve: p2 5.38, p4 3.58, p8 3.30,
-        # p16 3.85, p32 7.46.  A/B grid in OPTIMIZATION_r13.md.
-        n_edges = edges_deg.count()
-        loop_parts = max(
-            2,
-            min(
-                spark.sparkContext.defaultParallelism,
-                (n_edges * 24) // (4 << 20) + 1,
-            ),
+
+    def damped_round(ranks: DataFrame, _pinned: DataFrame | None) -> DataFrame:
+        rhs = hint(ranks)
+        contrib = edges_deg.join(rhs, edges_deg.src == rhs.node).select(
+            "dst",
+            F.floor(F.col("rank") / F.col("deg")).cast("bigint").alias("c"),
         )
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-        spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        for i in range(rounds):
-            rhs = ranks.hint("shuffle_hash") if checkpoint_every else ranks
-            contrib = edges_deg.join(rhs, edges_deg.src == rhs.node).select(
-                "dst",
-                F.floor(F.col("rank") / F.col("deg")).cast("bigint").alias("c"),
+        return (
+            contrib.groupBy("dst")
+            .agg(F.sum("c").alias("s"))
+            .select(
+                F.col("dst").alias("node"),
+                (F.lit(150000) + F.floor(F.lit(85) * F.col("s") / F.lit(100)))
+                .cast("bigint")
+                .alias("rank"),
             )
-            ranks = (
-                contrib.groupBy("dst")
-                .agg(F.sum("c").alias("s"))
-                .select(
-                    F.col("dst").alias("node"),
-                    (F.lit(150000) + F.floor(F.lit(85) * F.col("s") / F.lit(100)))
-                    .cast("bigint")
-                    .alias("rank"),
-                )
-            )
-            if (
-                checkpoint_every
-                and (i + 1) % checkpoint_every == 0
-                and (i + 1) < rounds
-            ):
-                ranks = iter_checkpoint(ranks, reliable, checkpoint_dir)
-        if checkpoint_every:
-            # Final eager checkpoint makes the returned frame independent
-            # of the persisted edge frame, so we can release it here — in
-            # local mode persisted blocks live in the DRIVER's JVM, and a
-            # leak per run is what pushed a long multi-query session into
-            # broadcast OOM (round-5 sf0.1 sweep finding).
-            ranks = iter_checkpoint(ranks, reliable, checkpoint_dir)
-            edges_deg.unpersist()
-    finally:
-        if prev_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        if prev_aqe is not None:
-            spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-    return ranks
+        )
+
+    return iterate(
+        ranks,
+        damped_round,
+        rounds,
+        pinned=edges_deg if checkpoint_every else None,
+        checkpoint_every=checkpoint_every,
+        final_checkpoint=bool(checkpoint_every),
+        reliable=reliable,
+        checkpoint_dir=checkpoint_dir,
+    )
 
 
 @register("graph_pagerank", oracle=_PR_ORACLE, tags=("graph", "iterative"), bench=True)
@@ -211,18 +149,10 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     an IEEE quotient equals the true floor whenever the quotient isn't
     exactly representable-adjacent, which int64/int64 < 2^53 guarantees),
     and the damped update is pure int math.  Each round is one
-    shuffle-join on ``src`` plus one aggregation on ``dst`` — the edges
-    DataFrame (with degrees attached) is computed once and reused, so a
-    1000-executor run shuffles the edge list once per round, exactly
-    like the reference would chain N MapReduce jobs (design.md:74).
-    At N=3 rounds the loop runs fully lazy (checkpoint_every=None —
-    deliberately NO persist/localCheckpoint: a fixed-round unrolled
-    loop is ONE job, and ReuseExchange computes the identical edge
-    subtree once within it; adding eager checkpoints only inserts job
-    barriers, measured 3.7 s lazy vs 4.5 s checkpointed at sf0.1).  At
-    deeper N the same :func:`pagerank` takes ``checkpoint_every=k`` —
-    see its docstring and SCALE.md §Iterative for the measured N=10
-    curve."""
+    shuffle-join on ``src`` plus one aggregation on ``dst`` over the
+    edges-with-degrees frame, exactly like the reference would chain N
+    MapReduce jobs (design.md:74).  At N=3 the rounds run fully lazy, as
+    ONE job (see :func:`pagerank`)."""
     return pagerank(
         _customer_supplier_edges(spark, sf_dir), rounds=_N_ITER, checkpoint_every=None
     )
@@ -258,16 +188,11 @@ def graph_pagerank_deep(spark: SparkSession, sf_dir: str) -> DataFrame:
     as graph_pagerank — the key whose EXECUTION path is the lineage-
     truncated one: ``checkpoint_every=2`` localCheckpoints the rank
     frame every 2 rounds, so the plan the optimizer sees stays 2 rounds
-    deep no matter how far the iteration runs (round-5; previously the
-    truncation path existed only behind a test).  Cadence 2 was chosen
-    by measurement (round-7, SCALE.md §Iterative: k=2/3/5 priced at
-    sf0.1 and 1 M synthetic edges — plan-growth cost dominates barrier
-    cost at these sizes, so the shortest cadence wins; 5.45 s vs
-    6.54/8.41 s at sf0.1).  Results are bit-identical to the fully-lazy
-    unroll at the pinned cadence (by
-    tests/test_scale_operators.py::test_pagerank_checkpoint_cadence_identical);
-    the wall-vs-N curve for both paths, measured from THIS function, is
-    in SCALE.md §Iterative."""
+    deep no matter how far the iteration runs.  Cadence 2 was chosen
+    by measurement (5.45 s vs 6.54/8.41 s for k=3/5 at sf0.1; the
+    curves are in SCALE.md §Iterative).  Results are bit-identical to
+    the fully-lazy unroll (tests/test_scale_operators.py::
+    test_pagerank_checkpoint_cadence_identical)."""
     return pagerank(
         _customer_supplier_edges(spark, sf_dir), rounds=_N_DEEP, checkpoint_every=2
     )
@@ -582,13 +507,9 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: each round is one skinny degree aggregate plus two
     node-key joins of the edge frame against the shrinking survivor
-    set (survivors broadcast once they fit); the corpus-sized work
-    remains the single co-occurrence shuffle shared with
-    graph_triangle_knn via knn_edges_frame.  At true 100 TB depth the
-    rounds checkpoint on the graph_pagerank_deep cadence — pass
-    ``checkpoint_every=2`` to :func:`kcore_frame` (the declared key
-    keeps 3 lazy rounds; the deep-peel price curve for rounds∈{3,6,10}
-    is in SCALE.md §Iterative) instead of growing lineage."""
+    set; the corpus-sized work remains the single co-occurrence shuffle
+    shared with graph_triangle_knn via knn_edges_frame.  Deeper peels
+    pass ``checkpoint_every`` to :func:`kcore_frame`."""
     l = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     return kcore_frame(knn_edges_frame(l, k=5), k=3, rounds=3)
 
@@ -794,12 +715,9 @@ FROM reach GROUP BY a
 def graph_components_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components of the co-supply graph, served from the
     persisted adjacency artifact — the graph-family twin of
-    dedup_clusters' min-label propagation (operators/components.py:
-    converged early-stop loop, per-round lineage truncation, optional
-    reliable checkpointing), probing the same write-once edge table as
-    the degree/kcore/neighborhood keys, so the co-occurrence shuffle
-    is amortized here too (no lineitem scan — covered by the family
-    plan pin's artifact).  Hash-checked against an exact transitive-
+    dedup_clusters' min-label propagation (operators/components.py),
+    probing the same write-once edge table as the degree/kcore/
+    neighborhood keys.  Hash-checked against an exact transitive-
     closure oracle: label propagation CONVERGES (the loop stops when a
     round changes nothing), so no round-count coupling exists between
     the engines — the comparison is the fixpoint itself.
@@ -826,39 +744,38 @@ def bfs_hops(
     """Single-source BFS hop distances over a directed (src, dst)
     adjacency frame — frontier expansion, the third iterative-dataflow
     class in the graph family after damped flow (pagerank) and peeling
-    (kcore): each round joins ONLY the current frontier against the
-    adjacency (frontier-sized, not graph-sized work), anti-joins out
-    already-settled nodes, and stops when the frontier empties (true
-    BFS converges in diameter rounds; ``max_hops`` is a runaway bound,
-    not a tuning knob).  Per-round lineage truncation + the optional
-    reliable-checkpoint switch follow components.py's hygiene.
+    (kcore): each round joins ONLY the frontier (the nodes the previous
+    round settled, flagged ``_new``) against the adjacency, anti-joins
+    out settled nodes, and stops when the frontier empties (``max_hops``
+    is a runaway bound, not a tuning knob).  Total work across rounds is
+    O(|E|) like any BFS.  Runs on
+    :func:`~mapreduce_framework_spark.operators.materialize.iterate`,
+    checkpointing every round."""
 
-    Scale: round r shuffles |frontier_r| + its out-edges — total work
-    across all rounds is O(|E|) like any BFS; the settled set is
-    (node, hops) longs only.  The driver loop iterates ROUNDS (bounded
-    by diameter), never rows — the emptiness check is a limit-1
-    count."""
-    spark = adj.sparkSession
-    dist = iter_checkpoint(
-        spark.createDataFrame([(source, 0)], "node long, hops int"),
-        reliable,
-        checkpoint_dir,
-    )
-    frontier = dist.select("node")
-    for h in range(1, max_hops + 1):
+    def expand(dist: DataFrame, _pinned: DataFrame | None) -> DataFrame:
+        frontier = dist.where("_new")
         nxt = (
             frontier.join(adj, frontier.node == adj.src)
-            .select(F.col("dst").alias("node"))
+            .select(F.col("dst").alias("node"), (F.col("hops") + 1).alias("hops"))
             .distinct()
             .join(dist.select("node"), "node", "left_anti")
-            .select("node", F.lit(h).cast("int").alias("hops"))
         )
-        nxt = iter_checkpoint(nxt, reliable, checkpoint_dir)
-        if nxt.limit(1).count() == 0:
-            break
-        dist = iter_checkpoint(dist.unionByName(nxt), reliable, checkpoint_dir)
-        frontier = nxt.select("node")
-    return dist
+        return dist.select("node", "hops", F.lit(False).alias("_new")).unionByName(
+            nxt.withColumn("_new", F.lit(True))
+        )
+
+    dist = iterate(
+        adj.sparkSession.createDataFrame(
+            [(source, 0, True)], "node long, hops int, _new boolean"
+        ),
+        expand,
+        max_hops,
+        final_checkpoint=True,
+        changed="_new",
+        reliable=reliable,
+        checkpoint_dir=checkpoint_dir,
+    )
+    return dist.drop("_new")
 
 
 @register(
@@ -914,33 +831,37 @@ def kcore_frame(
     sf0.1 (bit-identical results); the checkpointed frame is k·n edges,
     tiny next to the co-occurrence join it pins.
 
-    ``checkpoint_every`` (round-8 verdict task #3 — pagerank_frame's
-    signature, mirrored): the unrolled-lineage problem RECURS inside
-    the loop — each peel level's plan embeds its predecessor 3×, so a
-    deep peel (rounds ≳ 5) grows a 3^rounds plan even with the base
-    frame pinned.  Passing ``checkpoint_every=c`` localCheckpoints the
-    SHRINKING edge frame every c rounds (never after the final round —
-    the result stays a lazy frame), truncating lineage at the same
-    measured cadence as graph_pagerank_deep (c=2; SCALE.md §Iterative
-    prices rounds∈{3,6,10}).  Bit-identical results with or without —
-    pinned by tests/test_scale_operators.py."""
+    The same 3^rounds growth RECURS inside a deep peel (rounds ≳ 5):
+    ``checkpoint_every=c`` checkpoints the shrinking edge frame on
+    :func:`~mapreduce_framework_spark.operators.materialize.iterate`'s
+    cadence (c=2 as for graph_pagerank_deep; SCALE.md §Iterative prices
+    rounds∈{3,6,10}), bit-identically (tests/test_scale_operators.py)."""
     edges = iter_checkpoint(edges, reliable, checkpoint_dir)
-    for r in range(rounds):
-        deg = (
-            edges.select(F.col("u").alias("node"))
-            .unionByName(edges.select(F.col("v").alias("node")))
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
-        alive = deg.where(F.col("c") >= k).select("node")
-        edges = edges.join(
-            alive.withColumnRenamed("node", "u"), "u", "left_semi"
-        ).join(alive.withColumnRenamed("node", "v"), "v", "left_semi")
-        if checkpoint_every and (r + 1) % checkpoint_every == 0 and (r + 1) < rounds:
-            edges = iter_checkpoint(edges, reliable, checkpoint_dir)
+    edges = iterate(
+        edges,
+        lambda e, _pinned: _peel(e, k),
+        rounds,
+        checkpoint_every=checkpoint_every,
+        reliable=reliable,
+        checkpoint_dir=checkpoint_dir,
+    )
     return (
         edges.select(F.col("u").alias("node"))
         .unionByName(edges.select(F.col("v").alias("node")))
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("core_degree"))
+    )
+
+
+def _peel(edges: DataFrame, k: int) -> DataFrame:
+    """One k-core round: keep the edges whose both ends have degree ≥ k."""
+    deg = (
+        edges.select(F.col("u").alias("node"))
+        .unionByName(edges.select(F.col("v").alias("node")))
+        .groupBy("node")
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
+    alive = deg.where(F.col("c") >= k).select("node")
+    return edges.join(alive.withColumnRenamed("node", "u"), "u", "left_semi").join(
+        alive.withColumnRenamed("node", "v"), "v", "left_semi"
     )

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from mapreduce_framework_spark.functions.numeric import dsum, dsum_sql
 from mapreduce_framework_spark.io import table
 from mapreduce_framework_spark.registry import register
+from mapreduce_framework_spark.session import scoped_confs
 
 
 @register(
@@ -628,18 +629,9 @@ def join_bloom_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     the confs would silently re-plan without the bloom."""
     import tempfile
 
-    prev = {k: spark.conf.get(k, None) for k in BLOOM_JOIN_CONFS}
     out = tempfile.mkdtemp(prefix="mfs_bloomjoin_")
-    try:
-        for k, v in BLOOM_JOIN_CONFS.items():
-            spark.conf.set(k, v)
+    with scoped_confs(spark, BLOOM_JOIN_CONFS):
         bloom_join_frame(spark, sf_dir).write.mode("overwrite").parquet(out)
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     return spark.read.parquet(out)
 
 

@@ -9,6 +9,8 @@ survives a 100 TB run, so they live in one audited place.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -32,13 +34,6 @@ def get_spark(app_name: str = "mapreduce_framework_spark") -> SparkSession:
     builder = (
         SparkSession.builder.appName(app_name)
         .master(os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]"))
-        # --- Adaptive execution: re-plan at runtime from observed sizes.
-        # Coalesces small shuffle partitions, converts to broadcast joins
-        # late, and splits skewed partitions — the main line of defense
-        # against skew at 100 TB.
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # --- Shuffle parallelism.  Local testing uses one partition per
         # core; a cluster deployment raises this (rule of thumb: 2-3× the
         # total core count) and lets AQE coalesce down.
@@ -46,36 +41,39 @@ def get_spark(app_name: str = "mapreduce_framework_spark") -> SparkSession:
         # --- Scan split sizing: 128 MiB splits amortize task overhead on
         # big files while keeping per-task memory bounded.
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        # --- Broadcast threshold: dims ≤ 64 MiB ship to every executor
-        # instead of shuffling the fact table.
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # --- Arrow for every pandas UDF / toPandas boundary (vectorized
-        # columnar transfer instead of pickled rows).
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        # --- Parquet: prune columns + push predicates into the scan.
-        .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.parquet.aggregatePushdown", "true")
-        # Session timezone pinned for deterministic timestamp semantics
-        # across engines (oracle parity).
-        .config("spark.sql.session.timeZone", "UTC")
         # Keep the UI off in harness runs; one less port/thread.
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
     )
+    for k, v in RUNTIME_CONFS.items():
+        builder = builder.config(k, v)
     return builder.getOrCreate()
 
 
-# Runtime-settable confs the engine's semantics depend on.  The driver
-# contract hands our queries an externally-built SparkSession, so these
-# must be (re-)applied per entry call, not only at build time:
+# Runtime-settable confs the engine's semantics depend on.  get_spark
+# builds with them; the driver contract hands our queries an
+# externally-built SparkSession, so they are also (re-)applied per entry
+# call by apply_runtime_confs:
 #   - session.timeZone: timestamp columns collect in session-local time;
 #     a non-UTC harness session would shift every timestamp result
 #     against the (naive-UTC) parquet data and the DuckDB oracle.
 #   - arrow.*: pandas/mapInPandas/UDTF paths must take the Arrow lane —
 #     correctness is unaffected but a pickled-row fallback is 10-100×
 #     slower, which at bench scale reads as a regression.
-#   - adaptive.*: the skew/coalesce safety nets every plan assumes.
+#   - adaptive.*: re-plan at runtime from observed sizes — coalesces
+#     small shuffle partitions, converts to broadcast joins late, and
+#     splits skewed partitions; the skew/coalesce safety nets every plan
+#     assumes.
+#   - parquet.filterPushdown: push predicates into the scan.
+#   - autoBroadcastJoinThreshold: dims ≤ 64 MiB ship to every executor
+#     instead of shuffling the fact table.
+#   - parquet.nanosAsLong: the testdata's events.ts may be parquet
+#     TIMESTAMP(NANOS), which the vectorized reader rejects; io.table
+#     reads it as raw nanos.  The reader consults this conf when the scan
+#     EXECUTES, so it must hold for the session's lifetime, not around
+#     the read call.
 RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.adaptive.enabled": "true",
@@ -84,6 +82,7 @@ RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.parquet.filterPushdown": "true",
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Semantics pins (the values every oracle was validated under — a
     # harness session configured differently would silently change
     # division-by-zero/cast behavior, identifier resolution, or decimal
@@ -103,6 +102,26 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
         except Exception:  # pragma: no cover - locked custom conf
             pass
     return spark
+
+
+@contextmanager
+def scoped_confs(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
+    """Set ``confs`` for the ``with`` block — the one place engine code
+    writes session confs.  Every exit path restores the prior values and
+    unsets keys that were unset.  Confs are session-global: a query on
+    another thread plans under the scope's values while it is open, and
+    a conf read at execution must still be set when the action runs."""
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def stop_spark() -> None:

@@ -76,16 +76,15 @@ def overwrite_partitions_dynamic(
     """Dynamic partition overwrite: replace ONLY the partitions present
     in ``df``, leave every other partition untouched — the incremental
     pattern for daily/hourly re-runs over a 100 TB table (static
-    overwrite mode would truncate the whole dataset first).  The conf is
-    scoped to this write and restored after."""
-    spark = df.sparkSession
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(key, "static")
-    spark.conf.set(key, "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
-    finally:
-        spark.conf.set(key, prev)
+    overwrite mode would truncate the whole dataset first).  The
+    per-write option takes precedence over the session conf, which stays
+    untouched."""
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_cols)
+        .parquet(path)
+    )
 
 
 def write_compacted(

@@ -22,6 +22,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from mapreduce_framework_spark.session import scoped_confs
+
 
 def run_file_stream(
     spark: SparkSession,
@@ -87,6 +89,83 @@ def run_file_stream(
     """
     src_dir = tempfile.mkdtemp(prefix="mfs_stream_src_")
     ckpt_dir = tempfile.mkdtemp(prefix="mfs_stream_ckpt_")
+    try:
+        part_files = _stage_batches(source_df, src_dir, n_batches, order_col, batch_col)
+        if state_partitions is None:
+            # Scale-adaptive partitioning ("fewer, larger partitions"):
+            # the staged files' parquet footers give the exact replay row
+            # count for free (driver-side metadata, no job), and the A/B
+            # grid in OPTIMIZATION_r13.md shows both failure modes a
+            # constant invites — 8 partitions starves the Python stateful
+            # lanes on 32 cores, 32 partitions drowns the windowed/join
+            # lanes in near-empty state-store commits.
+            import pyarrow.parquet as pq
+
+            n_rows = sum(pq.ParquetFile(f).metadata.num_rows for f in part_files)
+            state_partitions = max(
+                2,
+                min(
+                    spark.sparkContext.defaultParallelism,
+                    n_rows // max(state_rows_per_partition, 1) + 1,
+                ),
+            )
+
+        reader = spark.readStream.schema(source_df.schema)
+        if max_files_per_trigger is not None:
+            reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+        stream = reader.parquet(src_dir)
+        if watermark is not None:
+            stream = stream.withWatermark(*watermark)
+
+        out = transform(stream)
+        sink_name = f"mfs_sink_{uuid.uuid4().hex[:12]}"
+        confs = {"spark.sql.shuffle.partitions": str(state_partitions)}
+        # recentProgress retains only the last numRecentProgressUpdates
+        # entries (default 100) — a deeper replay would silently truncate
+        # the metrics `collect_progress` hands to
+        # stream_watermark_drop_report.  Size the buffer to the replay and
+        # verify nothing was evicted below.
+        min_batches = (
+            -(-len(part_files) // max_files_per_trigger)
+            if max_files_per_trigger is not None
+            else 1
+        )
+        if collect_progress is not None:
+            confs["spark.sql.streaming.numRecentProgressUpdates"] = str(
+                max(100, min_batches + 16)
+            )
+        with scoped_confs(spark, confs):
+            query = (
+                out.writeStream.format("memory")
+                .queryName(sink_name)
+                .outputMode(output_mode)
+                .option("checkpointLocation", ckpt_dir)
+                .trigger(availableNow=True)
+                .start()
+            )
+            query.awaitTermination()
+    finally:
+        shutil.rmtree(src_dir, ignore_errors=True)
+        shutil.rmtree(ckpt_dir, ignore_errors=True)
+    if collect_progress is not None:
+        got = [p for p in query.recentProgress if p["numInputRows"] > 0]
+        assert len(got) >= min_batches, (
+            f"progress buffer evicted entries: {len(got)} data batches "
+            f"retained < {min_batches} replayed files/trigger groups"
+        )
+        collect_progress.extend(query.recentProgress)
+    # The memory sink holds its rows in the driver, so the bound frame
+    # outlives both scratch directories and the catalog view.
+    df = spark.table(sink_name)
+    spark.catalog.dropTempView(sink_name)
+    return df
+
+
+def _stage_batches(
+    source_df: DataFrame, src_dir: str, n_batches: int, order_col: str, batch_col: str | None
+) -> list[str]:
+    """Write ``source_df`` into ``src_dir`` as the replay's batch files,
+    time-ordered by name and mtime; return their paths in order."""
     if batch_col is not None:
         from pyspark.sql import functions as F
 
@@ -140,77 +219,4 @@ def run_file_stream(
     base = 1_600_000_000
     for i, f in enumerate(part_files):
         os.utime(f, (base + i * 60, base + i * 60))
-
-    if state_partitions is None:
-        # Scale-adaptive partitioning (round-13; guide §2.2 "fewer,
-        # larger partitions" / round-12 verdict task #1): the staged
-        # files' parquet footers give the exact replay row count for
-        # free (driver-side metadata, no job), and the A/B grid in
-        # OPTIMIZATION_r13.md shows both failure modes a constant
-        # invites — 8 partitions starves the Python stateful lanes on
-        # 32 cores, 32 partitions drowns the windowed/join lanes in
-        # near-empty state-store commits.
-        import pyarrow.parquet as pq
-
-        n_rows = sum(pq.ParquetFile(f).metadata.num_rows for f in part_files)
-        state_partitions = max(
-            2,
-            min(
-                spark.sparkContext.defaultParallelism,
-                n_rows // max(state_rows_per_partition, 1) + 1,
-            ),
-        )
-
-    reader = spark.readStream.schema(source_df.schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(src_dir)
-    if watermark is not None:
-        stream = stream.withWatermark(*watermark)
-
-    out = transform(stream)
-    sink_name = f"mfs_sink_{uuid.uuid4().hex[:12]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    # recentProgress retains only the last numRecentProgressUpdates
-    # entries (default 100) — a deeper replay would silently truncate the
-    # metrics `collect_progress` hands to stream_watermark_drop_report.
-    # Size the buffer to the replay and verify nothing was evicted below.
-    min_batches = (
-        -(-len(part_files) // max_files_per_trigger)
-        if max_files_per_trigger is not None
-        else 1
-    )
-    prev_recent = None
-    if collect_progress is not None:
-        prev_recent = spark.conf.get(
-            "spark.sql.streaming.numRecentProgressUpdates", "100"
-        )
-        spark.conf.set(
-            "spark.sql.streaming.numRecentProgressUpdates",
-            str(max(100, min_batches + 16)),
-        )
-    try:
-        query = (
-            out.writeStream.format("memory")
-            .queryName(sink_name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        if prev_recent is not None:
-            spark.conf.set(
-                "spark.sql.streaming.numRecentProgressUpdates", prev_recent
-            )
-    if collect_progress is not None:
-        got = [p for p in query.recentProgress if p["numInputRows"] > 0]
-        assert len(got) >= min_batches, (
-            f"progress buffer evicted entries: {len(got)} data batches "
-            f"retained < {min_batches} replayed files/trigger groups"
-        )
-        collect_progress.extend(query.recentProgress)
-    return spark.table(sink_name)
+    return part_files

@@ -29,18 +29,12 @@ def idempotent_parquet_writer(path: str):
     ``spark.read.parquet(path)`` (optionally dropping ``_batch_id``)."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        key = "spark.sql.sources.partitionOverwriteMode"
-        prev = spark.conf.get(key, "static")
-        spark.conf.set(key, "dynamic")
-        try:
-            (
-                batch_df.withColumn("_batch_id", F.lit(int(batch_id)))
-                .write.mode("overwrite")
-                .partitionBy("_batch_id")
-                .parquet(path)
-            )
-        finally:
-            spark.conf.set(key, prev)
+        (
+            batch_df.withColumn("_batch_id", F.lit(int(batch_id)))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("_batch_id")
+            .parquet(path)
+        )
 
     return write_batch

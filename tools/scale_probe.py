@@ -732,16 +732,13 @@ def build_tiers(spark, small: int, big: int) -> dict[str, dict[int, callable]]:
         # dying at n=5e6) must be raised to the expected output size
         # on any real corpus; the test-SF key never nears it.
         from mapreduce_framework_spark.queries.sql_surface import _RECURSIVE
+        from mapreduce_framework_spark.session import scoped_confs
 
-        prev = spark.conf.get("spark.sql.cteRecursionRowLimit", "1000000")
-        spark.conf.set("spark.sql.cteRecursionRowLimit", str(2 * n + 100))
-        try:
+        with scoped_confs(spark, {"spark.sql.cteRecursionRowLimit": str(2 * n + 100)}):
             spark.range(n).selectExpr(
                 "id AS s_suppkey"
             ).createOrReplaceTempView("supplier")
             return forced_count(spark.sql(_RECURSIVE), [r"Join|UnionLoop"])
-        finally:
-            spark.conf.set("spark.sql.cteRecursionRowLimit", prev)
 
     def t_session_timers(n):
         # Timer-driven sessionization on the real micro-batch replay:
