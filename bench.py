@@ -29,6 +29,11 @@ def main() -> None:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
 
+    queries = bench_queries()
+    missing = [k for k in _PINNED_STDOUT_KEYS if k not in queries]
+    if missing:
+        raise SystemExit(f"pinned bench keys missing from the registry: {missing}")
+
     spark = get_spark("mfs-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -65,7 +70,7 @@ def main() -> None:
     # best-of-N.
     timings: dict[str, float] = {}
     for _ in range(3):
-        for name, spec in sorted(bench_queries().items()):
+        for name, spec in sorted(queries.items()):
             t0 = time.perf_counter()
             df = spec.fn(spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
@@ -111,8 +116,6 @@ def main() -> None:
     import hashlib
 
     rest_names = sorted(k for k in timings if k not in _PINNED_STDOUT_KEYS)
-    missing = [k for k in _PINNED_STDOUT_KEYS if k not in timings]
-    assert not missing, f"pinned bench keys missing from registry run: {missing}"
     rest_sha = hashlib.sha256(
         json.dumps(rest_names, separators=(",", ":")).encode()
     ).hexdigest()[:8]

@@ -196,12 +196,18 @@ def publish_cached(
 
 
 def user_scratch_dir(kind: str) -> str:
-    """Pid-scoped FIXED scratch path under a per-user 0700 root, with
-    a dead-pid sweep of sibling entries so crashed runs don't orphan
-    their scratch forever (the streaming module's sweep contract).
-    Fixed, not mkdtemp-fresh: repeated invocations in one process —
-    bench min-of-3, sweep re-runs — overwrite instead of accrete.
-    Returns the path; the caller creates/overwrites it."""
+    """The one per-call scratch primitive: returns an existing, EMPTY
+    ``<kind>_<pid>`` directory under the per-user 0700 root, where
+    ``kind`` is the calling registry key's name.
+
+    Fixed, not mkdtemp-fresh: a repeated call in one process (bench
+    min-of-3, sweep re-runs) removes the previous call's contents
+    instead of accreting a copy per call, and sibling entries of dead
+    pids are swept so a crashed run does not orphan its scratch.  The
+    pid keeps concurrent sessions apart.  Callers' returned frames read
+    the directory lazily, so two calls of the same key in one process
+    must not be in flight at once — the second empties the first's
+    input."""
     import shutil
 
     root = user_tmp_root("mfs_scratch")
@@ -218,7 +224,10 @@ def user_scratch_dir(kind: str) -> str:
             shutil.rmtree(os.path.join(root, entry), ignore_errors=True)
         except PermissionError:
             pass  # live pid owned by someone else — leave it
-    return os.path.join(root, f"{kind}_{os.getpid()}")
+    path = os.path.join(root, f"{kind}_{os.getpid()}")
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path)
+    return path
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

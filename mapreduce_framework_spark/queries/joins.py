@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduce_framework_spark.functions.numeric import dsum, dsum_sql
-from mapreduce_framework_spark.io import table
+from mapreduce_framework_spark.io import table, user_scratch_dir
 from mapreduce_framework_spark.registry import register
 from mapreduce_framework_spark.session import scoped_confs
 
@@ -325,12 +325,9 @@ def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf-sized fixture from broadcasting, which would hide the property
     being demonstrated."""
     import os
-    import tempfile
 
     tag = os.path.basename(sf_dir.rstrip("/"))
-    # pid-suffixed path: table NAMES are per-session catalogs, but the
-    # data path is shared /tmp — a fixed name races concurrent sessions.
-    base = os.path.join(tempfile.gettempdir(), f"mfs_bucketed_{tag}_{os.getpid()}")
+    base = user_scratch_dir("join_bucketed")
     li_t, ord_t = f"li_bucketed_{tag.replace('.', '_')}", f"ord_bucketed_{tag.replace('.', '_')}"
     for name, src, key in (
         (li_t, table(spark, sf_dir, "lineitem").select("l_orderkey", "l_extendedprice"), "l_orderkey"),
@@ -627,9 +624,7 @@ def join_bloom_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     no shuffle for a bloom to protect), then read back — runtime confs
     are read at action time, so returning a lazy frame and restoring
     the confs would silently re-plan without the bloom."""
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="mfs_bloomjoin_")
+    out = user_scratch_dir("join_bloom_filtered")
     with scoped_confs(spark, BLOOM_JOIN_CONFS):
         bloom_join_frame(spark, sf_dir).write.mode("overwrite").parquet(out)
     return spark.read.parquet(out)

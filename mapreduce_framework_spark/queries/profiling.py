@@ -12,12 +12,11 @@ R reducers → R output blobs per job, forever).
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from mapreduce_framework_spark.io import table
+from mapreduce_framework_spark.io import table, user_scratch_dir
 from mapreduce_framework_spark.registry import register
 
 # (column, null-count expr source, representation for min/max)
@@ -138,12 +137,7 @@ def sink_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     metrics row so the operation itself stays a DataFrame.
     """
     docs = table(spark, sf_dir, "documents").select("doc_id", "lang", "source", "n_chars")
-    # pid-suffixed against the cross-session overwrite race (see
-    # queries/mapreduce_job.py).
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"mfs_compact_{os.path.basename(sf_dir)}_{os.getpid()}",
-    )
+    base = user_scratch_dir("sink_compaction")
     small, compacted = os.path.join(base, "small"), os.path.join(base, "compacted")
     docs.repartition(64).write.mode("overwrite").parquet(small)
     spark.read.parquet(small).repartition(4).write.mode("overwrite").parquet(compacted)

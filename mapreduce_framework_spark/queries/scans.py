@@ -9,12 +9,10 @@ tests assert `PushedFilters`/`ReadSchema` on these plans.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mapreduce_framework_spark.io import table
+from mapreduce_framework_spark.io import table, user_scratch_dir
 from mapreduce_framework_spark.registry import register
 
 
@@ -78,7 +76,7 @@ def sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("l_quantity") > 25)
         .select("l_orderkey", "l_quantity", "l_returnflag")
     )
-    out = tempfile.mkdtemp(prefix="mfs_sink_")
+    out = user_scratch_dir("sink_roundtrip")
     src.write.mode("overwrite").partitionBy("l_returnflag").parquet(out)
     back = spark.read.parquet(out)
     return back.groupBy("l_returnflag").agg(F.count(F.lit(1)).alias("cnt"))
@@ -136,7 +134,7 @@ def sink_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     merged = o.join(
         F.broadcast(updates.select("o_orderkey")), "o_orderkey", "left_anti"
     ).unionByName(updates)
-    out = tempfile.mkdtemp(prefix="mfs_merge_")
+    out = user_scratch_dir("sink_merge_upsert")
     merged.write.mode("overwrite").parquet(out)
     back = spark.read.parquet(out)
     return back.groupBy("o_orderstatus").agg(
@@ -217,7 +215,7 @@ def sink_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(None).cast("timestamp").alias("valid_to"),
     )
     history = closed.unionByName(inserted)
-    out = tempfile.mkdtemp(prefix="mfs_scd2_")
+    out = user_scratch_dir("sink_scd2")
     history.write.mode("overwrite").parquet(out)
     back = spark.read.parquet(out)
     return back.select(
@@ -257,7 +255,7 @@ def sink_sorted_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_shipdate", "l_extendedprice", "l_discount"
     )
-    out = tempfile.mkdtemp(prefix="mfs_clustered_")
+    out = user_scratch_dir("sink_sorted_clustered")
     src.sortWithinPartitions("l_shipdate").write.mode("overwrite").parquet(out)
     back = spark.read.parquet(out).where(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
@@ -496,7 +494,7 @@ def zorder_cluster(spark: SparkSession, sf_dir: str) -> tuple:
         .withColumn("zbucket", F.expr("zval div 1024"))
         .select("x", "y", "cents", "zval", "zbucket")
     )
-    out = tempfile.mkdtemp(prefix="mfs_zorder_")
+    out = user_scratch_dir("sink_zorder")
     clustered.repartition("zbucket").sortWithinPartitions("zval").write.mode(
         "overwrite"
     ).partitionBy("zbucket").parquet(out)
@@ -626,19 +624,15 @@ def sink_snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json
     import os
 
-    from mapreduce_framework_spark.io import user_scratch_dir
-
     base = table(spark, sf_dir, "orders").select(
         "o_orderkey",
         (F.col("o_orderkey") % 8).cast("int").alias("bucket"),
         "o_orderstatus",
         "o_totalprice",
     )
-    # Pid-scoped fixed scratch (swept on crash, overwritten on re-run —
-    # a fresh mkdtemp per invocation leaked two orders copies per run,
-    # round-9 review finding); ONE partitioned write replaces the 8
-    # per-bucket jobs that each re-scanned orders.
-    root = user_scratch_dir("tt")
+    # ONE partitioned write replaces the 8 per-bucket jobs that each
+    # re-scanned orders.
+    root = user_scratch_dir("sink_snapshot_time_travel")
     v1_dir = os.path.join(root, "v1")
     base.write.mode("overwrite").partitionBy("bucket").parquet(v1_dir)
     v1_files = [os.path.join(v1_dir, f"bucket={b}") for b in range(8)]

@@ -5,7 +5,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mapreduce_framework_spark.io import table
+from mapreduce_framework_spark.io import table, user_scratch_dir
 from mapreduce_framework_spark.operators.annsearch import brute_force_topk, ivf_topk
 from mapreduce_framework_spark.registry import register
 
@@ -20,16 +20,6 @@ def _query_vec(vectors: DataFrame) -> DataFrame:
     """The query = embedding of vec_id 0, kept in-plan (broadcast) —
     no driver-side collect."""
     return vectors.where(F.col("vec_id") == 0).select(F.col("v").alias("qv"))
-
-
-def _scratch_idx_dir(name: str) -> str:
-    """Pid-scoped fixed scratch path for a per-invocation persisted
-    index (round-8 ADVICE item) — the 0700-root + dead-pid-sweep
-    pattern lives once in io.user_scratch_dir (round-9 review
-    consolidation)."""
-    from mapreduce_framework_spark.io import user_scratch_dir
-
-    return user_scratch_dir(f"idx_{name}")
 
 
 @register(
@@ -649,7 +639,7 @@ def sim_search_pq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     qvecs = table(spark, sf_dir, "embeddings").select(
         "vec_id", kquantize(F.col("embedding")).alias("v")
     )
-    idx_dir = _scratch_idx_dir("pq")
+    idx_dir = user_scratch_dir("sim_search_pq_persisted")
     codes, codebook = persist_pq_index(
         qvecs, idx_dir, n_sub=4, sub_dim=16, n_seeds=8
     )
@@ -913,7 +903,7 @@ def sim_search_ivf_pq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     qvecs = table(spark, sf_dir, "embeddings").select(
         "vec_id", kquantize(F.col("embedding")).alias("v")
     )
-    idx_dir = _scratch_idx_dir("ivfpq")
+    idx_dir = user_scratch_dir("sim_search_ivf_pq_persisted")
     codes, codebook = persist_ivf_pq_index(
         vectors.where(F.col("vec_id") != 0),
         qvecs,

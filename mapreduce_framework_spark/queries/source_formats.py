@@ -12,7 +12,6 @@ to the formats a Spark user expects.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -27,19 +26,8 @@ from pyspark.sql.types import (
 )
 
 from mapreduce_framework_spark import sources
-from mapreduce_framework_spark.io import table
+from mapreduce_framework_spark.io import table, user_scratch_dir
 from mapreduce_framework_spark.registry import register
-
-
-def _tmp(sf_dir: str, tag: str) -> str:
-    # pid-suffixed: a fixed shared name lets two sessions on one host
-    # overwrite each other's roundtrip dirs mid-read (same race class
-    # as queries/mapreduce_job.py's run_dir note).  Within one process
-    # re-runs serialize on the driver, so overwrite is safe.
-    return os.path.join(
-        tempfile.gettempdir(),
-        f"mfs_src_{tag}_{os.path.basename(sf_dir)}_{os.getpid()}",
-    )
 
 
 _CSV_ORACLE = """
@@ -56,7 +44,7 @@ def source_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """orders → CSV (header) → explicit-schema read → per-year totals.
     Timestamps survive via Spark's default ISO-8601 CSV format; the
     schema declares types so no inference pass runs."""
-    path = _tmp(sf_dir, "csv")
+    path = user_scratch_dir("source_csv_roundtrip")
     src = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice", "o_orderdate"
     )
@@ -89,7 +77,7 @@ GROUP BY p_brand
 @register("source_json_roundtrip", oracle=_JSON_ORACLE, tags=("source",))
 def source_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """part → JSON lines → explicit-schema read → per-brand stats."""
-    path = _tmp(sf_dir, "json")
+    path = user_scratch_dir("source_json_roundtrip")
     src = table(spark, sf_dir, "part").select(
         "p_partkey", "p_name", "p_brand", "p_retailprice"
     )
@@ -125,7 +113,7 @@ def source_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """supplier → ORC → explicit-schema read → per-nation stats.  ORC is
     the other vectorized columnar format Spark ships natively; the hash
     match proves longs/ints/doubles/strings survive the roundtrip."""
-    path = _tmp(sf_dir, "orc")
+    path = user_scratch_dir("source_orc_roundtrip")
     src = table(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_name", "s_nationkey", "s_acctbal"
     )
@@ -163,7 +151,7 @@ def source_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-matching directories are never opened — at 100 TB this is the
     difference between scanning one partition and scanning the table
     (tests/test_plans.py pins the plan shape)."""
-    path = _tmp(sf_dir, "hive")
+    path = user_scratch_dir("source_partition_pruning")
     src = table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_quantity", "l_linestatus", "l_returnflag"
     )
@@ -194,7 +182,7 @@ def scan_dynamic_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     read.  At 100 TB this is what makes star-schema joins against a
     date/category dim scan 1/Nth of the fact table with no literal
     filter in the query text (plan pinned in tests/test_plans.py)."""
-    path = _tmp(sf_dir, "hive")  # reuse the partitioned copy
+    path = user_scratch_dir("scan_dynamic_pruning")
     src = table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_quantity", "l_linestatus", "l_returnflag"
     )
@@ -246,7 +234,7 @@ def source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     here do) and keep per-vintage directories so old files are never
     rewritten; the read path is then the ordinary vectorized scan with
     column pruning intact, NULL-filling absent columns for free."""
-    base = _tmp(sf_dir, "evo")
+    base = user_scratch_dir("source_schema_evolution")
     d = table(spark, sf_dir, "documents")
     d.where(F.col("doc_id") % 2 == 0).select("doc_id", "lang").write.mode(
         "overwrite"
@@ -290,20 +278,7 @@ def source_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
     the quarantine column a production pipeline writes to a dead-letter
     sink.  Scale: parsing is scan-side per-split; the corruption rate
     is observable via observe()-style counters with zero extra passes."""
-    import os
-    import tempfile
-
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"mfs_badcsv_{os.path.basename(sf_dir)}_{os.getpid()}",
-    )
+    path = user_scratch_dir("source_csv_malformed")
     d = table(spark, sf_dir, "documents").select("doc_id", "n_chars")
     lines = d.select(
         F.concat_ws(
@@ -419,17 +394,13 @@ def sink_kvtext_writer_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     matches if the Python writer's published shards are byte-compatible
     with the format the fast reader expects.  Complements
     source_kvtext_datasource (Python READER over a JVM-written sink);
-    together the two keys close the write↔read matrix.  Overwrite
-    into the module's pid-scoped fixed path (_tmp) — a per-invocation
-    mkdtemp accreted one full sink per bench/sweep run — and overwrite
-    exercises the SAME two-phase commit plus the old-generation
-    removal step."""
+    together the two keys close the write↔read matrix."""
     from mapreduce_framework_spark.compat import read_kv_text
     from mapreduce_framework_spark.queries.wordcount import wordcount
     from mapreduce_framework_spark.sources.kvtext_datasource import register_kvtext
 
     register_kvtext(spark)
-    out = _tmp(sf_dir, "kvw")
+    out = user_scratch_dir("sink_kvtext_writer_roundtrip")
     counts = wordcount(spark, sf_dir).select(
         F.col("word").alias("key"), F.col("cnt").alias("value")
     )
@@ -456,22 +427,17 @@ def stream_kvtext_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     resume/mutation behavior is pinned by tests/test_kvtext_source.py;
     this key puts the lane itself under the driver's hash gate.
 
-    Resource hygiene (review finding): the checkpoint lives at a
-    pid-scoped FIXED path cleared per invocation (a per-invocation
-    mkdtemp accreted debris; REUSING the checkpoint would make the
-    second availableNow pass read zero new shards and return empty),
-    and the memory sink uses one fixed pid-scoped table name so
-    repeated runs REPLACE the driver-held result instead of
-    accumulating one full copy per invocation."""
-    import shutil
-
-    from mapreduce_framework_spark.io import user_scratch_dir
+    Resource hygiene: the checkpoint lives in per-call scratch, empty
+    on every call (REUSING it would make the second availableNow pass
+    read zero new shards and return empty), and the memory sink uses
+    one fixed pid-scoped table name so repeated runs REPLACE the
+    driver-held result instead of accumulating one full copy per
+    invocation."""
     from mapreduce_framework_spark.sources.kvtext_datasource import register_kvtext
 
     register_kvtext(spark)
     path = _kv_sink_cache(spark, sf_dir)
-    ckpt = os.path.join(user_scratch_dir("kvstream"), "ckpt")
-    shutil.rmtree(ckpt, ignore_errors=True)
+    ckpt = os.path.join(user_scratch_dir("stream_kvtext_source"), "ckpt")
     sink = f"kvstream_sink_{os.getpid()}"
     q = (
         spark.readStream.format("kvtext")
@@ -505,19 +471,15 @@ def sink_kvtext_stream_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same oracle as every other kvtext lane.  Exactly-once replay
     semantics are pinned separately by tests/test_kvtext_source.py
     (idempotent re-commit of a batchId, multi-run resume)."""
-    import shutil
-
-    from mapreduce_framework_spark.io import user_scratch_dir
     from mapreduce_framework_spark.sources.kvtext_datasource import register_kvtext
 
     register_kvtext(spark)
     src = _kv_sink_cache(spark, sf_dir)
-    root = user_scratch_dir("kvstreamw")
+    # Empty per call: a reused checkpoint would make the second
+    # availableNow pass a no-op and return the PREVIOUS generation.
+    root = user_scratch_dir("sink_kvtext_stream_writer")
     out = os.path.join(root, "sink")
     ckpt = os.path.join(root, "ckpt")
-    # Fresh per invocation: a reused checkpoint would make the second
-    # availableNow pass a no-op and return the PREVIOUS generation.
-    shutil.rmtree(root, ignore_errors=True)
     q = (
         spark.readStream.format("kvtext")
         .load(src)

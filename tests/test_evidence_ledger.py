@@ -176,7 +176,6 @@ def test_env_gated_skip_ledger_is_exact():
     ]
     expected_files = {
         "test_multimodal.py",
-        "test_streaming.py",
         "test_scale_gate.py",
         "test_scale_operators.py",
     }

@@ -3,7 +3,8 @@
 A key may change session confs, persist frames, register catalog
 tables and write scratch only for its own run: confs go through
 ``session.scoped_confs``, pinned loop frames through ``iterate``'s
-``finally``, and stream scratch is removed when the stream ends.
+``finally``, per-call scratch through ``io.user_scratch_dir``, and
+stream scratch is removed when the stream ends.
 """
 
 from __future__ import annotations
@@ -27,6 +28,55 @@ STATEFUL_KEYS = (
     "dedup_clusters",
     "join_bloom_filtered",
     "stream_watermark_late",
+)
+
+# Every key that writes per-call scratch through io.user_scratch_dir.
+SCRATCH_KEYS = (
+    "sink_roundtrip",
+    "sink_merge_upsert",
+    "sink_scd2",
+    "sink_sorted_clustered",
+    "sink_zorder",
+    "sink_snapshot_time_travel",
+    "sink_compaction",
+    "join_bloom_filtered",
+    "join_bucketed",
+    "mapreduce_job_wordcount",
+    "mapreduce_job_chained",
+    "source_csv_roundtrip",
+    "source_json_roundtrip",
+    "source_orc_roundtrip",
+    "source_partition_pruning",
+    "scan_dynamic_pruning",
+    "source_schema_evolution",
+    "source_csv_malformed",
+    "sink_kvtext_writer_roundtrip",
+    "sink_kvtext_stream_writer",
+    "stream_kvtext_source",
+    "stream_exactly_once_sink",
+    "stream_cdc_upsert",
+    "sim_search_pq_persisted",
+    "sim_search_ivf_pq_persisted",
+)
+
+# Engine-code lint rules: (what, pattern, the only files that may match,
+# lines allowed anywhere).  Each pattern has one owning helper.
+ENGINE_RULES = (
+    (
+        "conf writes outside scoped_confs",
+        r"\bconf\.(set|unset)\(",
+        {"session.py"},
+        # the data source's one-time registration
+        {'spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")'},
+    ),
+    (
+        "scratch paths outside io.user_scratch_dir",
+        r"mkdtemp|gettempdir",
+        # io.publish_cached stages for a cross-process atomic rename;
+        # the stream runner removes its own scratch before returning.
+        {"io.py", "streaming/runner.py"},
+        set(),
+    ),
 )
 
 
@@ -89,23 +139,35 @@ def test_queries_restore_confs_and_session_state(spark):
     assert sorted(t.name for t in spark.catalog.listTables()) == tables
     assert _new_persistent_rdds(spark, rdds) == set()
 
-    # A second run of the stream key leaves no scratch behind.
+    # A second run of every scratch-writing key and of the stream key
+    # leaves the temp dir and the scratch root as the first run did.
+    from mapreduce_framework_spark.io import user_tmp_root
+
     tmp = tempfile.gettempdir()
-    n_tmp = len(os.listdir(tmp))
-    _run(spark, "stream_watermark_late")
-    assert len(os.listdir(tmp)) <= n_tmp
+    scratch_root = user_tmp_root("mfs_scratch")
+
+    def footprint():
+        mfs = {e for e in os.listdir(tmp) if e.startswith("mfs_")}
+        return mfs, set(os.listdir(scratch_root))
+
+    keys = (*SCRATCH_KEYS, "stream_watermark_late")
+    for key in keys:
+        assert _run(spark, key) > 0, key
+    after_first = footprint()
+    for key in keys:
+        _run(spark, key)
+    assert footprint() == after_first
 
 
-def test_conf_writes_go_through_scoped_confs():
-    """Engine code writes session confs only in session.py (where
-    scoped_confs lives) and in the data source's one-time registration;
-    everything else scopes its confs with scoped_confs."""
-    registration = 'spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")'
+def test_engine_patterns_go_through_their_helper():
+    """Engine code writes session confs only through scoped_confs
+    (session.py) and takes scratch directories only from
+    io.user_scratch_dir; see ENGINE_RULES."""
     hits = []
     for path in sorted(PKG.rglob("*.py")):
-        if path.name == "session.py":
-            continue
+        rel = path.relative_to(PKG).as_posix()
         for lineno, line in enumerate(path.read_text().splitlines(), 1):
-            if re.search(r"\bconf\.(set|unset)\(", line) and line.strip() != registration:
-                hits.append(f"{path.relative_to(PKG.parent)}:{lineno}: {line.strip()}")
-    assert hits == [], "conf writes outside scoped_confs:\n" + "\n".join(hits)
+            for what, pattern, files, lines in ENGINE_RULES:
+                if rel not in files and line.strip() not in lines and re.search(pattern, line):
+                    hits.append(f"{what}: {rel}:{lineno}: {line.strip()}")
+    assert hits == [], "\n".join(hits)

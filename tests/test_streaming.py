@@ -402,34 +402,6 @@ def test_session_timers_batching_invariant(spark, events):
     )
 
 
-def test_session_timer_lanes_identical(spark, events):
-    """timer_sessions (transformWithStateInPandas) and timeout_sessions
-    (applyInPandasWithState + EventTimeTimeout) implement the same
-    emission contract — pinned whenever the TWS lane's protobuf
-    dependency is available.  Skipped in this container (no
-    google.protobuf), same policy as the multimodal real-codec seam."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithStateInPandas state protocol needs protobuf",
-    )
-    from mapreduce_framework_spark.streaming.runner import run_file_stream
-    from mapreduce_framework_spark.streaming.stateful import (
-        timeout_sessions,
-        timer_sessions,
-    )
-
-    ev = events.select("ts", "user_id")
-    tws = run_file_stream(
-        spark, ev, timer_sessions,
-        watermark=("ts", "10 seconds"), output_mode="append",
-    )
-    legacy = run_file_stream(
-        spark, ev, timeout_sessions,
-        watermark=("ts", "10 seconds"), output_mode="append",
-    )
-    assert sorted(map(tuple, tws.collect())) == sorted(map(tuple, legacy.collect()))
-
-
 def test_session_proof_closed_emits_even_inside_watermark(spark):
     """Round-9 review regression: a session closed by its SUCCESSOR
     event (gap exceeded) emits immediately — even when the closed

@@ -574,9 +574,7 @@ def build_tiers(spark, small: int, big: int) -> dict[str, dict[int, callable]]:
         (the write-once layout of queries/graphs.py
         persisted_cosupply_adjacency, on the synthetic membership)."""
         if n not in adj_paths:
-            import os
-            import tempfile
-
+            from mapreduce_framework_spark.io import user_scratch_dir
             from mapreduce_framework_spark.queries.graphs import knn_edges_frame
 
             edges = knn_edges_frame(corpus("membership", n), 5)
@@ -585,7 +583,7 @@ def build_tiers(spark, small: int, big: int) -> dict[str, dict[int, callable]]:
             ).unionByName(
                 edges.select(F.col("v").alias("src"), F.col("u").alias("dst"))
             )
-            path = os.path.join(tempfile.mkdtemp(prefix="mfs_probe_adj_"), f"a{n}")
+            path = user_scratch_dir(f"scale_probe_adjacency_{n}")
             (
                 adj.withColumn(
                     "src_bucket", F.pmod(F.col("src"), F.lit(16)).cast("int")
