@@ -9,7 +9,6 @@
 
 round-start:
 	python tools/evidence_ledger.py
-	-python tools/bench_adjudicate.py
 	python -m pytest tests/test_evidence_ledger.py tests/test_registry_parity.py -q
 
 # Judge-methodology sample (round-11 verdict task #4): a FRESH bare-session

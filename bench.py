@@ -82,8 +82,7 @@ def main() -> None:
     # records only the last ~2000 chars of stdout, and the r9/r10
     # BENCH artifacts came back `parsed: null` because the 81-key dict
     # straddled the truncation point (key names alone exceed the
-    # budget).  BENCH_last.json is the untruncatable copy —
-    # tools/bench_adjudicate.py and the round ledger read it.
+    # budget).  BENCH_last.json is the untruncatable copy.
     full = json.dumps(
         {
             "metric": "bench_suite_wall_seconds",

@@ -205,3 +205,38 @@ def jaccard(tokens_a: Column, tokens_b: Column) -> Column:
     inter = F.size(F.array_intersect(tokens_a, tokens_b))
     union = F.size(F.array_union(tokens_a, tokens_b))
     return inter.cast("double") / union.cast("double")
+
+
+def containment(tokens_a: Column, tokens_b: Column) -> Column:
+    """Exact containment |A∩B| / |A| of token set A in token set B —
+    asymmetric, so a short doc quoted inside a long one scores ~1 where
+    its Jaccard is low.  Same integer-cardinality determinism as
+    :func:`jaccard`."""
+    return F.size(F.array_intersect(tokens_a, tokens_b)).cast("double") / F.size(
+        tokens_a
+    )
+
+
+def verified_pairs(
+    pairs: DataFrame, docs: DataFrame, id_col: str, tokens_col: str, threshold: float
+) -> DataFrame:
+    """(id_a, id_b, jaccard): the candidate pairs (id_a, id_b) whose
+    exact token-set Jaccard is ≥ ``threshold`` — the verify stage every
+    MinHash candidate passes before it can count, so sketch noise never
+    reaches an answer.  Each pair joins back to ``docs`` once per side
+    for the two token arrays.  Any other column of ``docs`` is a
+    blocking key the two sides must share: it joins the second side
+    alongside ``id_b``, so a candidate that crosses blocks is dropped."""
+    keys = [c for c in docs.columns if c not in (id_col, tokens_col)]
+
+    def side(s: str) -> DataFrame:
+        return docs.select(
+            F.col(id_col).alias(f"id_{s}"), *keys, F.col(tokens_col).alias(f"_t{s}")
+        )
+
+    return (
+        pairs.join(side("a"), "id_a")
+        .join(side("b"), [*keys, "id_b"])
+        .select("id_a", "id_b", jaccard(F.col("_ta"), F.col("_tb")).alias("jaccard"))
+        .where(F.col("jaccard") >= threshold)
+    )

@@ -16,13 +16,21 @@ each tier prunes the next one's input:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import math
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mapreduce_framework_spark.functions.idsplit import id_hexdigit
 from mapreduce_framework_spark.functions.vector import cosine
 from mapreduce_framework_spark.io import table
 from mapreduce_framework_spark.operators.materialize import sized_local_checkpoint
-from mapreduce_framework_spark.operators.minhash import candidate_pairs, jaccard
+from mapreduce_framework_spark.operators.minhash import (
+    candidate_pairs,
+    containment,
+    jaccard,
+    verified_pairs,
+)
 from mapreduce_framework_spark.operators.simhash import (
     fingerprints,
     md5_prefix60,
@@ -55,53 +63,69 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _count_band(toks: str) -> F.Column:
-    """Geometric distinct-token-count band (factor 1.25): the LOSSLESS
-    pruning key for Jaccard ≥ 0.8 joins — a qualifying pair's counts
-    differ by ≤ one band, so probing band±2 (±1 suffices mathematically;
-    ±2 absorbs float rounding at the 0.8/1.25 boundaries) finds every
-    pair exactly once.  Shared by banded_jaccard_pairs and
-    dedup_clusters so the band math cannot drift between the tiers."""
-    import math
+def _band_radius(threshold: float) -> int:
+    """Probe radius of the token-count band join, in bands: Jaccard ≥ t
+    bounds the distinct-count ratio by 1/t, i.e. log₁.₂₅(1/t) bands;
+    +1 absorbs float rounding at the band edges (t = 0.8 gives ±2).
+    round(…, 9) keeps binary-float dust (1/0.8 → 1.2500000000000002)
+    from bumping the ceil a whole band at exact band-edge thresholds."""
+    return math.ceil(round(math.log(1.0 / threshold) / math.log(1.25), 9)) + 1
 
-    return F.floor(
-        F.log(F.greatest(F.size(toks), F.lit(1))) / F.lit(math.log(1.25))
-    ).cast("int")
+
+def _split_by_cap(
+    d: DataFrame, size_cols: list[str], block_cap: int
+) -> tuple[DataFrame, DataFrame]:
+    """(small, big): ``d`` split by (lang, source) category.  A category
+    is big when any of its ``size_cols`` groups holds more than
+    ``block_cap`` rows; routing whole categories keeps every pair in
+    exactly one tier.  The big-category list is tiny, so both routing
+    joins broadcast."""
+    big_cats = (
+        d.groupBy(*size_cols)
+        .agg(F.count(F.lit(1)).alias("k"))
+        .where(F.col("k") > block_cap)
+        .select("lang", "source")
+        .distinct()
+    )
+    cats = ["lang", "source"]
+    return (
+        d.join(F.broadcast(big_cats), cats, "left_anti"),
+        d.join(F.broadcast(big_cats), cats, "left_semi"),
+    )
 
 
 def banded_jaccard_pairs(
-    d: DataFrame, threshold: float = 0.8, block_cap: int = 1000
+    d: DataFrame, threshold: float = 0.8, block_cap: int | None = 1000
 ) -> DataFrame:
     """(doc_a, doc_b, jaccard) pairs at ``jaccard ≥ threshold`` from a
-    (doc_id, lang, source, toks) frame — the guarded exact tier.
+    (doc_id, lang, source, toks) frame — the one band join of the
+    token-set tiers.
 
     Blocking on (lang, source) alone is a scale-killer: block membership
     grows linearly with the corpus, so within-block pairs grow
     quadratically.  Two defenses, both enforced in-plan:
 
-    1. LOSSLESS token-count band in the join key: Jaccard ≥ 0.8 forces
-       the DISTINCT-token counts within 25% of each other
-       (|A∩B| ≥ 0.8·|A∪B| ≥ 0.8·max ⇒ min ≥ 0.8·max), so with geometric
+    1. LOSSLESS token-count band in the join key: Jaccard ≥ t forces
+       the DISTINCT-token counts within a ratio of 1/t
+       (|A∩B| ≥ t·|A∪B| ≥ t·max ⇒ min ≥ t·max), so with geometric
        bands of factor 1.25 (band = ⌊log₁.₂₅ n⌋) a qualifying pair
-       differs by at most one band.  The probe side explodes band±2 (±1
-       suffices mathematically; ±2 absorbs float rounding at the
-       0.8/1.25 boundaries) and the build side keeps its single band,
+       differs by at most ``_band_radius(t)`` bands.  The probe side
+       explodes band ± radius and the build side keeps its single band,
        so every qualifying pair matches EXACTLY once — no post-join
        distinct, the result multiset is identical to unbanded.
 
-    2. ENFORCED block cap with MinHash overflow (round-4; the round-3
-       docstring merely advised it): per-(lang, source, band) group
-       sizes are aggregated (skinny rows), and any CATEGORY
+    2. ENFORCED block cap with MinHash overflow: per-(lang, source,
+       band) group sizes are aggregated (skinny rows), and any CATEGORY
        (lang, source) containing a group above ``block_cap`` routes
        wholly to the MinHash-LSH tier — candidates from
        operators/minhash.py banding over the same distinct-token sets,
-       verified by the same exact Jaccard ≥ threshold predicate.
-       Category-level routing keeps every pair in exactly one tier, so
-       the union is duplicate-free by construction.  The exact tier can
-       no longer go quadratic: its per-group work is bounded by
-       ~5·block_cap² comparisons regardless of corpus size.  The
-       overflow sets are tiny category lists, so both the anti- and
-       semi-joins broadcast.
+       verified by the same exact Jaccard ≥ threshold predicate.  The
+       exact tier can no longer go quadratic: its per-group work is
+       bounded by ~(2·radius+1)·block_cap² comparisons regardless of
+       corpus size.  ``block_cap=None`` runs the exact tier alone on the
+       lazy input — the cluster keys' choice, where the cap aggregate
+       and the two-tier union cost two more jobs per call on pair sets
+       their size.
 
        Overflow candidates come from unigram-set MinHash (16×4) over
        the same distinct-token arrays the verify step uses — MinHash is
@@ -119,37 +143,23 @@ def banded_jaccard_pairs(
        ≈ true pairs and the overflow tier is linear — measured ~1× at
        4× data on the wide-vocab single-category probe corpus
        (tools/scale_probe.py banded_overflow)."""
-    # Materialize the banded frame ONCE (round-12 optimization; guide
-    # §1.2 "don't compute things you throw away"): the lazy frame is
-    # consumed ~6× below (the big_cats aggregate, both sides of the
-    # exact-tier self-join, and the overflow tier's candidate/verify
-    # sides), and each consumer re-executes the caller's scan +
-    # tokenize lineage — the most expensive stage of the whole key.
-    # SIZE-GATED (round-13): at bench scale the materialization job
-    # costs more than the re-scans it saves (driver r12: ngram_jaccard
-    # 0.84×, ladder_funnel 0.78×), and an unbounded corpus-sized
-    # localCheckpoint is a §5 availability risk — the gate keeps small
-    # inputs lazy, mid-scale on executor disk, and huge inputs on
-    # re-scan/reliable FS (operators/materialize.py).
-    banded = sized_local_checkpoint(d.withColumn("band", _count_band("toks")))
-    # Probe radius DERIVED from the threshold (round-12 ADVICE): Jaccard
-    # ≥ t bounds the distinct-count ratio by 1/t, i.e. log₁.₂₅(1/t)
-    # bands; +1 absorbs float rounding at the band edges.  At t = 0.8
-    # this is the former hard-coded ±2, bit-identically.
-    import math
-
-    # round(…, 9) keeps binary-float dust (1/0.8 → 1.2500000000000002)
-    # from bumping the ceil a whole band at exact band-edge thresholds.
-    radius = math.ceil(round(math.log(1.0 / threshold) / math.log(1.25), 9)) + 1
-    big_cats = (
-        banded.groupBy("lang", "source", "band")
-        .agg(F.count(F.lit(1)).alias("k"))
-        .where(F.col("k") > block_cap)
-        .select("lang", "source")
-        .distinct()
+    radius = _band_radius(threshold)
+    banded = d.withColumn(
+        "band",
+        F.floor(
+            F.log(F.greatest(F.size("toks"), F.lit(1))) / F.lit(math.log(1.25))
+        ).cast("int"),
     )
-
-    small = banded.join(F.broadcast(big_cats), ["lang", "source"], "left_anti")
+    if block_cap is None:
+        small = banded
+    else:
+        # The capped frame is consumed ~6× (the cap aggregate, both
+        # sides of the exact tier, the overflow candidate and verify
+        # sides), each re-running the caller's scan + tokenize; the size
+        # gate in operators/materialize.py decides whether materializing
+        # it pays.
+        banded = sized_local_checkpoint(banded)
+        small, big = _split_by_cap(banded, ["lang", "source", "band"], block_cap)
     a = small.select(
         F.col("doc_id").alias("doc_a"),
         "lang",
@@ -180,37 +190,16 @@ def banded_jaccard_pairs(
         .select("doc_a", "doc_b", j.alias("jaccard"))
         .where(F.col("jaccard") >= threshold)
     )
-
-    big = banded.join(F.broadcast(big_cats), ["lang", "source"], "left_semi")
-    cands = candidate_pairs(big, "doc_id", "toks")
-    ma = big.select(
-        F.col("doc_id").alias("id_a"),
-        F.col("lang").alias("lang_a"),
-        F.col("source").alias("source_a"),
-        F.col("toks").alias("toks_a"),
-    )
-    mb = big.select(
-        F.col("doc_id").alias("id_b"),
-        F.col("lang").alias("lang_b"),
-        F.col("source").alias("source_b"),
-        F.col("toks").alias("toks_b"),
-    )
-    lsh_pairs = (
-        cands.join(ma, "id_a")
-        .join(mb, "id_b")
-        .where(
-            (F.col("lang_a") == F.col("lang_b"))
-            & (F.col("source_a") == F.col("source_b"))
-        )
-        .select(
-            F.col("id_a").alias("doc_a"),
-            F.col("id_b").alias("doc_b"),
-            jaccard(F.col("toks_a"), F.col("toks_b")).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
+    if block_cap is None:
+        return exact_pairs
+    lsh_pairs = verified_pairs(
+        candidate_pairs(big, "doc_id", "toks"),
+        big.select("doc_id", "lang", "source", "toks"),
+        "doc_id",
+        "toks",
+        threshold,
+    ).select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"), "jaccard")
     return exact_pairs.unionByName(lsh_pairs)
-
 
 
 @register(
@@ -310,37 +299,25 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     higher-order function touches them — an unnamed expression inside a
     HOF lambda is re-evaluated per use site (measured 10× on this
     query).  The shingle arrays are NOT array_distinct'ed: MinHash is
-    duplicate-invariant and the verify Jaccard's array_intersect/union
-    are set-semantic already, while array_distinct is an O(n²)
-    interpreted string-compare per doc (measured ~40% of the whole
-    query)."""
+    duplicate-invariant and the verify Jaccard is set-semantic already,
+    while array_distinct is an O(n²) interpreted string-compare per doc
+    (measured ~40% of the whole query)."""
     from mapreduce_framework_spark.functions.tokenize import word_ngrams
 
     # Filter on size(toks), not size(sh): a filter on the ngram array
     # gets pushdown-reordered below the projection and re-computes every
     # shingle array just to test emptiness (measured ~3s of ~4s here).
-    # Size-gated checkpoint (round-12 added it eager; round-13 gates
-    # it): the shingled frame is consumed THREE times (candidate
-    # generation + both verify sides), and shingle construction is the
-    # most expensive stage of the key — lazily it runs 3× per query.
-    # But at bench scale the materialization job undercuts itself
-    # (driver r12: 0.80×), and an unbounded corpus-sized localCheckpoint
-    # is a §5 risk — operators/materialize.py sizes the decision.
+    # The shingled frame is consumed three times (candidate generation
+    # and both verify sides) and shingling is the key's most expensive
+    # stage; operators/materialize.py decides whether materializing it
+    # pays.
     d = sized_local_checkpoint(
         table(spark, sf_dir, "documents")
         .select("doc_id", F.split("text", " ").alias("toks"))
         .where(F.size("toks") >= 3)
         .select("doc_id", word_ngrams(F.col("toks"), 3).alias("sh"))
     )
-    cands = candidate_pairs(d, "doc_id", "sh")
-    ta = d.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"))
-    tb = d.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b"))
-    verified = (
-        cands.join(ta, "id_a")
-        .join(tb, "id_b")
-        .select("id_a", "id_b", jaccard(F.col("sh_a"), F.col("sh_b")).alias("jaccard"))
-        .where(F.col("jaccard") >= 0.7)
-    )
+    verified = verified_pairs(candidate_pairs(d, "doc_id", "sh"), d, "doc_id", "sh", 0.7)
     return verified.select(
         F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"), "jaccard"
     )
@@ -472,21 +449,26 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _semantic_assignment(e: DataFrame, occupancy: int = 64):
-    """Shared k-means assignment for the SemDeDup family: quantized
-    base frame, in-plan seed derivation (k = max(8, n // occupancy),
-    no collect), argmin assignment, and the k-row cluster-size frame.
-    Returns ``(base, assigned, counts)``; both `semantic_dedup_frame`
-    and `dedup_semantic_cap_report` build on it so the accounting key
-    audits the EXACT assignment the dedup key runs."""
+def _semantic_assignment(
+    e: DataFrame, occupancy: int = 64, k_rows: Column | None = None
+):
+    """Shared k-means assignment for the SemDeDup family over ``e =
+    (vec_id, v, *extra)``: quantized base frame (extra columns ride
+    along), in-plan seed derivation (k = max(8, n // occupancy) over the
+    rows ``k_rows`` selects, all rows when None; no collect), argmin
+    assignment, and the k-row cluster-size frame.  Returns ``(base,
+    assigned, counts)``; every semantic key builds on it, so the
+    accounting key audits the EXACT assignment the dedup keys run."""
     from mapreduce_framework_spark.operators.kmeans import assign, quantize
 
     base = e.select(
         "vec_id",
         quantize(F.col("v")).alias("qv"),
         F.col("v").cast("array<double>").alias("vd"),
+        *[c for c in e.columns if c not in ("vec_id", "v")],
     )
-    kf = base.agg(
+    sized = base if k_rows is None else base.where(k_rows)
+    kf = sized.agg(
         F.greatest(F.lit(8), F.expr(f"count(1) div {occupancy}")).alias("k")
     )
     seeds = (
@@ -494,13 +476,11 @@ def _semantic_assignment(e: DataFrame, occupancy: int = 64):
         .where(F.col("vec_id") < F.col("k"))
         .select(F.col("vec_id").cast("int").alias("cid"), F.col("qv").alias("c"))
     )
-    # Materialize the assignment once (round-12 optimization; guide
-    # §1.2): the n·k argmin is the flops-heavy stage of the whole
-    # family and its lazy frame has 3-4 consumers (cluster-size counts,
-    # both sides of the within-cluster pair join, the final keep join)
-    # — ReuseExchange dedups only identical exchanges, so the
-    # assignment still executed ~3× per query.  The checkpointed frame
-    # is (vec_id, cid) ints — n×~8 bytes, safe at any corpus size.
+    # The n·k argmin is the flops-heavy stage of the family and has 3-4
+    # consumers (cluster sizes, both sides of the within-cluster pair
+    # join, the final keep join); ReuseExchange dedups only identical
+    # exchanges, so it is materialized once.  The checkpointed frame is
+    # (vec_id, cid) ints — n×~8 bytes, safe at any corpus size.
     assigned = (
         assign(base.select("vec_id", F.col("qv").alias("v")), seeds)
         .select("vec_id", "cid")
@@ -512,6 +492,21 @@ def _semantic_assignment(e: DataFrame, occupancy: int = 64):
     return base, assigned, counts
 
 
+def _sub_split(
+    base: DataFrame, assigned: DataFrame, counts: DataFrame, cap: int
+) -> DataFrame:
+    """Cluster members with their base columns (minus the quantized
+    vector) and the balanced sub-split key ``_sub = vec_id mod
+    ceil(m_c / cap)`` — the identity below the cap."""
+    return (
+        assigned.join(base.drop("qv"), "vec_id")
+        .join(counts, "cid")
+        .withColumn(
+            "_sub", F.pmod(F.col("vec_id"), F.expr(f"(_mc + {cap - 1}) div {cap}"))
+        )
+    )
+
+
 def semantic_dedup_frame(
     e: DataFrame, tau: float = 0.4, occupancy: int = 64, cluster_cap: int = 1024
 ) -> DataFrame:
@@ -520,33 +515,21 @@ def semantic_dedup_frame(
     growth on synthetic corpora with the REAL operator code.  Returns
     (vec_id, cluster_id, keep).
 
-    ``cluster_cap`` is the ENFORCED guard against assignment skew (the
-    round-3/4 lesson: expected-size bounds need an in-plan cap for the
-    adversarial corpus).  k pins EXPECTED occupancy at ~``occupancy``,
-    but a near-identical vector ball can still pile one cluster to
-    O(n); any cluster over the cap is sub-split by the balanced key
-    ``vec_id mod ceil(m_c / cap)``, so pair work per cluster is
-    ≤ ~cap·m_c regardless of skew.  Below the cap (every real corpus
-    here — 16× the expected occupancy) the split is the identity, so
-    semantics are unchanged; above it, cross-sub-block pairs go
-    uncompared — acceptable for the pathological case it guards,
-    because a ball of near-dups still collapses within every sub-block
-    (each keeps ~1 survivor), and EXACT duplicates were already removed
-    by the dedup ladder's earlier tiers.  HOW OFTEN the cap engages (and
-    the exact count of pairs it declined to compare) is surfaced by the
-    companion key `dedup_semantic_cap_report`."""
-    base, assigned, counts = _semantic_assignment(e, occupancy)
-    m = (
-        assigned.join(base.select("vec_id", "vd"), "vec_id")
-        .join(counts, "cid")
-        .withColumn(
-            "_sub",
-            F.pmod(
-                F.col("vec_id"),
-                F.expr(f"(_mc + {cluster_cap - 1}) div {cluster_cap}"),
-            ),
-        )
-    )
+    ``cluster_cap`` is the ENFORCED guard against assignment skew.  k
+    pins EXPECTED occupancy at ~``occupancy``, but a near-identical
+    vector ball can still pile one cluster to O(n); any cluster over
+    the cap is sub-split by the balanced key ``vec_id mod ceil(m_c /
+    cap)``, so pair work per cluster is ≤ ~cap·m_c regardless of skew.
+    Below the cap (every real corpus here — 16× the expected occupancy)
+    the split is the identity, so semantics are unchanged; above it,
+    cross-sub-block pairs go uncompared — acceptable for the
+    pathological case it guards, because a ball of near-dups still
+    collapses within every sub-block (each keeps ~1 survivor), and
+    EXACT duplicates were already removed by the dedup ladder's earlier
+    tiers.  HOW OFTEN the cap engages (and the exact count of pairs it
+    declined to compare) is surfaced by the companion key
+    `dedup_semantic_cap_report`."""
+    m = _sub_split(*_semantic_assignment(e, occupancy), cluster_cap)
     a = m.select(
         F.col("vec_id").alias("id_a"), "cid", "_sub", F.col("vd").alias("va")
     )
@@ -840,51 +823,15 @@ def dedup_semantic_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster, so the probe reads matching cells only, the same
     bucket-probe posture as dedup_minhash_incremental).  The
     `cluster_cap` sub-split guard applies unchanged."""
-    from mapreduce_framework_spark.operators.kmeans import assign, quantize
-
-    cap = 1024
-    base = table(spark, sf_dir, "embeddings").select(
+    e = table(spark, sf_dir, "embeddings").select(
         "vec_id",
-        quantize(F.col("embedding")).alias("qv"),
-        F.col("embedding").cast("array<double>").alias("vd"),
-        F.when(
-            F.substring(F.md5(F.col("vec_id").cast("string").cast("binary")), 1, 1)
-            < "4",
-            "new",
-        )
-        .otherwise("corpus")
-        .alias("split"),
+        F.col("embedding").alias("v"),
+        F.when(id_hexdigit("vec_id") < "4", "new").otherwise("corpus").alias("split"),
     )
-    kf = (
-        base.where(F.col("split") == "corpus")
-        .agg(F.greatest(F.lit(8), F.expr("count(1) div 64")).alias("k"))
+    base, assigned, counts = _semantic_assignment(
+        e, k_rows=F.col("split") == "corpus"
     )
-    seeds = (
-        base.crossJoin(F.broadcast(kf))
-        .where(F.col("vec_id") < F.col("k"))
-        .select(F.col("vec_id").cast("int").alias("cid"), F.col("qv").alias("c"))
-    )
-    # Materialize the assignment once (round-12 optimization; guide
-    # §1.2): the n·k argmin is the flops-heavy stage of the whole
-    # family and its lazy frame has 3-4 consumers (cluster-size counts,
-    # both sides of the within-cluster pair join, the final keep join)
-    # — ReuseExchange dedups only identical exchanges, so the
-    # assignment still executed ~3× per query.  The checkpointed frame
-    # is (vec_id, cid) ints — n×~8 bytes, safe at any corpus size.
-    assigned = (
-        assign(base.select("vec_id", F.col("qv").alias("v")), seeds)
-        .select("vec_id", "cid")
-        .localCheckpoint(eager=True)
-    )
-    counts = assigned.groupBy("cid").agg(F.count(F.lit(1)).alias("_mc"))
-    m = (
-        assigned.join(base.select("vec_id", "vd", "split"), "vec_id")
-        .join(counts, "cid")
-        .withColumn(
-            "_sub",
-            F.pmod(F.col("vec_id"), F.expr(f"(_mc + {cap - 1}) div {cap}")),
-        )
-    )
+    m = _sub_split(base, assigned, counts, 1024)
     newm = m.where(F.col("split") == "new")
     corm = m.where(F.col("split") == "corpus")
     a = newm.select(
@@ -955,7 +902,8 @@ GROUP BY u
 )
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate CLUSTERS: transitive closure of the blocked-Jaccard
-    near-dup pairs via iterative min-label propagation
+    near-dup pairs (the uncapped :func:`banded_jaccard_pairs`) via
+    iterative min-label propagation
     (operators/components.py) — the pipeline deliverable is one
     canonical doc per cluster, not pairs.  The oracle computes the same
     components with a recursive CTE; rounds = cluster diameter (shallow
@@ -966,72 +914,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "lang", "source", F.array_distinct(F.split("text", " ")).alias("toks")
     )
     return connected_components(
-        cluster_pairs_banded(d, threshold=0.8), "doc_a", "doc_b"
-    )
-
-
-def cluster_pairs_banded(d: DataFrame, threshold: float = 0.8) -> DataFrame:
-    """(doc_a, doc_b) near-dup pairs at Jaccard ≥ ``threshold`` from a
-    (doc_id, lang, source, toks) frame — the SHARED pair derivation of
-    dedup_clusters and dedup_canonical_keep.
-
-    Token-count band in the join key (round-12 optimization; guide
-    §2.5 — prune the quadratic block): Jaccard ≥ 0.8 bounds the
-    distinct-token counts within one geometric band (see _count_band),
-    so the probe side explodes band±2 and the equi-join prunes
-    non-qualifying pairs BEFORE the jaccard kernel runs — identical
-    pair multiset to the plain (lang, source) block join (each
-    qualifying pair matches exactly once; pinned by
-    tests/test_scale_operators.py::test_cluster_pairs_banded_match_plain_join),
-    with the within-block comparison count cut by the band histogram
-    instead of |block|².  A/B at sf0.1 on dedup_clusters: every paired
-    run faster (11.09→7.98 first-touch, 4.54→4.49 min-of-3).  The full
-    overflow-capped tiering of banded_jaccard_pairs was ALSO measured
-    here: its eager checkpoint + cap-aggregate + two-tier union costs
-    +1.4 s at sf0.1 on pair sets this size — the in-join band keeps
-    the pruning without the structural overhead; a corpus whose
-    (lang, source) categories approach the block cap should derive
-    pairs via banded_jaccard_pairs instead (same result, bounded worst
-    case)."""
-    # The ±2 probe radius is lossless only while Jaccard ≥ threshold
-    # bounds the size ratio within one 1.25-band (+rounding): at
-    # threshold < 0.8 a qualifying pair's counts may differ by MORE
-    # than one band and the equi-join would silently drop it (round-12
-    # ADVICE).  Guard rather than widen: every caller uses 0.8, and a
-    # lower threshold should derive its radius, not inherit this one.
-    if threshold < 0.8:
-        raise ValueError(
-            "cluster_pairs_banded: the band±2 probe is lossless only for "
-            f"threshold >= 0.8 (got {threshold}); use banded_jaccard_pairs "
-            "with a threshold-derived radius instead"
-        )
-    banded = d.withColumn("band", _count_band("toks"))
-    a = banded.select(
-        F.col("doc_id").alias("doc_a"),
-        "lang",
-        "source",
-        F.col("toks").alias("toks_a"),
-        F.explode(
-            F.array(*[F.col("band") + F.lit(i) for i in range(-2, 3)])
-        ).alias("band_probe"),
-    )
-    b = banded.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("lang").alias("lang_b"),
-        F.col("source").alias("source_b"),
-        F.col("toks").alias("toks_b"),
-        "band",
-    )
-    return (
-        a.join(
-            b,
-            (F.col("lang") == F.col("lang_b"))
-            & (F.col("source") == F.col("source_b"))
-            & (F.col("band_probe") == F.col("band")),
-        )
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .where(jaccard(F.col("toks_a"), F.col("toks_b")) >= threshold)
-        .select("doc_a", "doc_b")
+        banded_jaccard_pairs(d, threshold=0.8, block_cap=None), "doc_a", "doc_b"
     )
 
 
@@ -1147,13 +1030,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents").select(
         "doc_id",
         "source",
-        F.when(
-            F.substring(F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 1)
-            < "4",
-            "new",
-        )
-        .otherwise("corpus")
-        .alias("split"),
+        F.when(id_hexdigit("doc_id") < "4", "new").otherwise("corpus").alias("split"),
         F.md5(F.lower(F.trim(F.col("text"))).cast("binary")).alias("fp"),
     )
     corpus = (
@@ -1300,32 +1177,22 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents").select(
         "doc_id",
         F.split("text", " ").alias("toks"),
-        (
-            F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1) < F.lit("2")
-        ).alias("is_new"),
+        (id_hexdigit("doc_id") < "2").alias("is_new"),
     )
     sh = d.where(F.size("toks") >= 3).select(
         "doc_id", "is_new", word_ngrams(F.col("toks"), 3).alias("sh")
     )
     new = sh.where(F.col("is_new"))
     corpus = sh.where(~F.col("is_new"))
+    sh_by_id = sh.select("doc_id", "sh")
 
-    sh_by_id = sh.select(F.col("doc_id").alias("_sid"), F.col("sh").alias("_sh"))
-
-    def verified(pairs: DataFrame, left: str, right: str) -> DataFrame:
-        return (
-            pairs.join(sh_by_id.withColumnRenamed("_sid", left).withColumnRenamed("_sh", "_sha"), left)
-            .join(sh_by_id.withColumnRenamed("_sid", right).withColumnRenamed("_sh", "_shb"), right)
-            .where(jaccard(F.col("_sha"), F.col("_shb")) >= 0.7)
-            .select(left, right)
-        )
-
-    corpus_hits = verified(
-        probe_candidates(new, corpus, "doc_id", "sh"), "new_id", "corpus_id"
-    ).select(F.col("new_id").alias("doc_id")).distinct()
+    corpus_hits = verified_pairs(
+        probe_candidates(new, corpus, "doc_id", "sh").toDF("id_a", "id_b"),
+        sh_by_id, "doc_id", "sh", 0.7,
+    ).select(F.col("id_a").alias("doc_id")).distinct()
 
     batch_pairs = candidate_pairs(new, "doc_id", "sh")  # id_a < id_b
-    batch_hits = verified(batch_pairs, "id_a", "id_b").select(
+    batch_hits = verified_pairs(batch_pairs, sh_by_id, "doc_id", "sh", 0.7).select(
         F.col("id_b").alias("doc_id")
     ).distinct()
 
@@ -1407,11 +1274,10 @@ def dedup_canonical_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         F.array_distinct(F.split("text", " ")).alias("toks"),
     )
-    # Same banded pair derivation as dedup_clusters (round-12
-    # optimization, guide §2.5): identical pair multiset, quadratic
-    # block pruned in-join — see cluster_pairs_banded.
     comp = connected_components(
-        cluster_pairs_banded(d.select("doc_id", "lang", "source", "toks")),
+        banded_jaccard_pairs(
+            d.select("doc_id", "lang", "source", "toks"), threshold=0.8, block_cap=None
+        ),
         "doc_a",
         "doc_b",
     )
@@ -1490,67 +1356,45 @@ def dedup_chunk_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 _GATE_LIVE: dict[str, DataFrame] = {}
 
 
-def _parse_size_bytes(s: str) -> int:
-    """Spark size-conf string → bytes ('10485760', '10MB', '1g', '-1')."""
-    s = str(s).strip().lower()
-    for suf, m in (
-        ("tb", 1 << 40), ("gb", 1 << 30), ("mb", 1 << 20), ("kb", 1 << 10),
-        ("t", 1 << 40), ("g", 1 << 30), ("m", 1 << 20), ("k", 1 << 10),
-        ("b", 1),
-    ):
-        if s.endswith(suf):
-            return int(float(s[: -len(suf)])) * m
-    return int(float(s))
-
-
 def _gate_dup_broadcast(
-    name: str,
-    upper_bound_rows: int,
-    build: DataFrame,
-    forced: bool | None,
-    est_row_bytes: int = 72,
-    budget_scale: int = 32,
+    name: str, build: DataFrame, d: DataFrame, tokens_per_row: int
 ) -> DataFrame:
-    """Auto-gate the span/chunk dedup join-back build side (round-11
-    verdict task #2 / ADVICE #4): the duplicated-digest set is
-    broadcast ONLY while it provably fits a budget, so a corpus
-    outside the curated-ladder posture degrades to the
-    AQE-skew-splittable shuffle join instead of OOMing the driver.
-    ``forced`` preserves the manual escape hatches (True/False); the
-    registry paths pass None = decide automatically.
+    """Auto-gate the span/chunk dedup join-back build side: the
+    duplicated-digest set is broadcast ONLY while it provably fits a
+    budget, so a corpus outside the curated-ladder posture degrades to
+    the AQE-skew-splittable shuffle join instead of OOMing the driver.
 
-    Budget: ``budget_scale`` × ``spark.sql.autoBroadcastJoinThreshold``
-    (non-positive threshold = broadcast disabled → shuffle join).  The
-    threshold itself (10 MB default) is Catalyst's bound for ESTIMATED
-    sizes, which can be off by orders of magnitude; this gate compares
-    an EXACT row count of a known row shape (16-byte digest rendered
-    as a 32-char string + one bigint ≈ ``est_row_bytes`` with row
-    overhead), so a 32× budget (320 MB at defaults) is still far under
-    driver/executor headroom while keeping realistic curated-corpus
-    dup sets (millions of digests) on the measured-10×-faster
-    broadcast path.
+    Budget: 32 × ``spark.sql.autoBroadcastJoinThreshold`` (non-positive
+    threshold = broadcast disabled → shuffle join).  The threshold
+    itself (Spark's default is 10 MB) is Catalyst's bound for ESTIMATED sizes,
+    which can be off by orders of magnitude; this gate compares an
+    EXACT row count of a known row shape (16-byte digest rendered as a
+    32-char string + one bigint ≈ 72 bytes with row overhead), so a 32×
+    budget (320 MB at defaults) is still far under driver/executor
+    headroom while keeping realistic curated-corpus dup sets (millions
+    of digests) on the measured-10×-faster broadcast path.
 
     Two tiers, so the common case costs almost nothing:
 
-    1. **Cheap upper bound** — total gram/chunk count (one skinny
-       column scan of the corpus, no explode, no shuffle; the caller
-       computes it).  The dup-digest set can never exceed it, so when
-       the BOUND fits the budget the broadcast is safe unconditionally
-       and the returned plan is byte-identical to the forced-broadcast
-       plan (no persist, no extra pass — this is the tier every test
-       SF and any bounded batch lands in).
+    1. **Cheap upper bound** on the rows of ``build``, from the
+       (doc_id, text) frame ``d`` WITHOUT tokenizing: tokens are
+       single-space-separated non-empty strings, so a doc of B bytes
+       has ≤ (B+1)/2 tokens and emits ≤ B/(2·``tokens_per_row``) + 1
+       rows (a 16-token chunk per row, or a gram per token offset).
+       octet_length is O(1) per row, so this is one skinny column
+       read — no explode, no shuffle.  When the BOUND fits the budget
+       the broadcast is safe unconditionally and the plan is a pure
+       broadcast (no persist, no extra pass — the tier every test SF and
+       any bounded batch lands in).
     2. **Exact pre-flight** — only when the bound overflows: the
        dup-digest aggregate (which the join-back needs anyway) is
        persisted, counted, and the join builds ON the persisted frame,
-       so the aggregate still executes exactly once per invocation —
-       pass-count-neutral vs the forced broadcast, which also
-       materialized it once for the broadcast build.  The previous
-       invocation's cache is unpersisted at entry (one live instance
-       per gate site), which keeps repeated timing runs honest: every
-       rep pays the full build, never a cache hit from the last rep.
+       so the aggregate still executes exactly once per invocation.
+       The previous invocation's cache is unpersisted at entry (one
+       live instance per gate site), which keeps repeated timing runs
+       honest: every rep pays the full build, never a cache hit from
+       the last rep.
     """
-    if forced is not None:
-        return F.broadcast(build) if forced else build
     # Drop the previous invocation's pre-flight cache FIRST, whichever
     # tier this call lands in: Spark's cache manager substitutes any
     # logically-equal subplan with the live InMemoryRelation, so a
@@ -1563,31 +1407,27 @@ def _gate_dup_broadcast(
             prev.unpersist()
         except Exception:
             pass
-    spark = build.sparkSession
-    try:
-        thr = _parse_size_bytes(
-            spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-        )
-    except ValueError:
-        thr = 10 << 20
-    budget = thr * budget_scale
+    conf = build.sparkSession._jsparkSession.sessionState().conf()
+    thr = conf.autoBroadcastJoinThreshold()
     if thr <= 0:
         return build
-    if upper_bound_rows * est_row_bytes <= budget:
+    budget_rows = thr * 32 // 72
+    row = d.select(
+        F.sum(F.octet_length("text")).alias("b"), F.count(F.lit(1)).alias("n")
+    ).first()
+    if (row["b"] or 0) // (2 * tokens_per_row) + (row["n"] or 0) <= budget_rows:
         return F.broadcast(build)
     from pyspark import StorageLevel
 
     cached = build.persist(StorageLevel.MEMORY_AND_DISK)
     n_dup = cached.count()
     _GATE_LIVE[name] = cached
-    if n_dup * est_row_bytes <= budget:
+    if n_dup <= budget_rows:
         return F.broadcast(cached)
     return cached
 
 
-def chunk_dedup_frame(
-    d: DataFrame, span_tokens: int = 16, broadcast_owners: bool | None = None
-) -> DataFrame:
+def chunk_dedup_frame(d: DataFrame, span_tokens: int = 16) -> DataFrame:
     """Span-dedup core over a (doc_id, text) frame — the reusable heart
     of dedup_chunk_exact, shared with tools/scale_probe.py so the probe
     times the real operator."""
@@ -1629,35 +1469,18 @@ def chunk_dedup_frame(
     # hot-gram corpus — see span_dup_positions; SCALE.md carries the
     # table), but a corpus whose duplicated-chunk set is itself
     # corpus-scale would OOM a forced broadcast, so the choice is
-    # auto-gated by _gate_dup_broadcast (round-11 verdict task #2):
-    # cheap chunk-count upper bound, then exact pre-flight, then the
-    # AQE-skew-splittable shuffle join.  broadcast_owners=True/False
-    # still forces either path.  Identical answer every way.
-    owners = (
+    # auto-gated by _gate_dup_broadcast: cheap chunk-count upper bound,
+    # then exact pre-flight, then the AQE-skew-splittable shuffle join.
+    # Identical answer every way.
+    owners = _gate_dup_broadcast(
+        "chunk_dedup_owners",
         chunks.groupBy("chunk")
         .agg(F.min("doc_id").alias("owner"), F.count(F.lit(1)).alias("c"))
         .where(F.col("c") >= 2)
-        .select("chunk", "owner")
+        .select("chunk", "owner"),
+        d,
+        span_tokens,
     )
-    if broadcast_owners is None:
-        # Upper bound WITHOUT tokenizing: tokens are single-space-
-        # separated non-empty strings, so n_tok ≤ (bytes+1)/2 and
-        # n_chunks = ceil(n_tok/16) ≤ bytes/32 + 1 per doc.
-        # octet_length is O(1) per row (UTF8 byte count, no scan of the
-        # string), so the bound job is a bare column read — measured
-        # ~25% cheaper than the split()-based exact chunk count at
-        # sf0.1, and the looseness (~2-3×) is irrelevant against the
-        # 32×-threshold budget headroom.
-        row = d.select(
-            F.sum(F.octet_length("text")).alias("b"),
-            F.count(F.lit(1)).alias("n"),
-        ).first()
-        bound = (row["b"] or 0) // (2 * span_tokens) + (row["n"] or 0)
-        owners = _gate_dup_broadcast(
-            "chunk_dedup_owners", int(bound), owners, None
-        )
-    elif broadcast_owners:
-        owners = F.broadcast(owners)
     owned = chunks.join(owners, "chunk", "left").select("doc_id", "owner")
     kept = F.sum(
         F.when(
@@ -1763,9 +1586,7 @@ def span_grams(d: DataFrame, k: int = 16) -> DataFrame:
     )
 
 
-def span_dup_positions(
-    d: DataFrame, k: int = 16, broadcast_firsts: bool | None = None
-) -> DataFrame:
+def span_dup_positions(d: DataFrame, k: int = 16) -> DataFrame:
     """DISTINCT duplicated token positions (doc_id, p) under the
     offset-exact keep-first gram semantics — the shared core of the
     span-dedup report (dedup_span_exact) and the removal twin
@@ -1811,12 +1632,10 @@ def span_dup_positions(
     count, rare by construction in a curation ladder (span dedup runs
     AFTER the exact/chunk tiers have removed whole-doc and aligned
     duplication) — but a corpus outside that posture would OOM a
-    broadcast FORCED unconditionally, so the registry path auto-gates
-    the choice (``broadcast_firsts=None`` → :func:`_gate_dup_broadcast`:
-    cheap gram-count upper bound, exact pre-flight count only when the
-    bound overflows, AQE-skew-splittable shuffle join when the dup set
-    is genuinely corpus-scale; round-11 verdict task #2).
-    ``broadcast_firsts=True/False`` still forces either path."""
+    broadcast FORCED unconditionally, so :func:`_gate_dup_broadcast`
+    makes the choice: cheap gram-count upper bound, exact pre-flight
+    count only when the bound overflows, AQE-skew-splittable shuffle
+    join when the dup set is genuinely corpus-scale."""
     grams = span_grams(d, k)
     pos_bits = 25
     ord_ = F.when(
@@ -1828,24 +1647,15 @@ def span_dup_positions(
             F.lit("span_dup_positions: doc_id/pos exceed packed keep-first bounds")
         ).cast("bigint")
     )
-    first = (
+    first = _gate_dup_broadcast(
+        "span_dup_firsts",
         grams.groupBy("g")
         .agg(F.min(ord_).alias("first_ord"), F.count(F.lit(1)).alias("c"))
         .where(F.col("c") >= 2)
-        .select("g", "first_ord")
+        .select("g", "first_ord"),
+        d,
+        1,  # grams/doc = max(0, n_tok - k + 1) ≤ n_tok
     )
-    if broadcast_firsts is None:
-        # Upper bound WITHOUT tokenizing (see chunk_dedup_frame's gate):
-        # grams/doc = max(0, n_tok-k+1) ≤ n_tok ≤ (bytes+1)/2, and
-        # octet_length is O(1) per row.
-        row = d.select(
-            F.sum(F.octet_length("text")).alias("b"),
-            F.count(F.lit(1)).alias("n"),
-        ).first()
-        bound = ((row["b"] or 0) + (row["n"] or 0)) // 2
-        first = _gate_dup_broadcast("span_dup_firsts", int(bound), first, None)
-    elif broadcast_firsts:
-        first = F.broadcast(first)
     dup = grams.join(first, "g").where(ord_ != F.col("first_ord"))
     covered = dup.select(
         "doc_id", F.explode(F.sequence(F.col("pos"), F.col("pos") + (k - 1))).alias("p")
@@ -2037,13 +1847,7 @@ def dedup_span_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents").select(
         "doc_id",
         "text",
-        F.when(
-            F.substring(F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 1)
-            < "4",
-            "new",
-        )
-        .otherwise("corpus")
-        .alias("split"),
+        F.when(id_hexdigit("doc_id") < "4", "new").otherwise("corpus").alias("split"),
     )
     from pyspark.sql import Window
 
@@ -2096,8 +1900,8 @@ def containment_pairs(
     |A∩B| / |A| ≥ ``threshold`` with |A| ≤ |B|, from a (doc_id, lang,
     source, toks) frame of DISTINCT token arrays — EXACT at any scale.
 
-    Two tiers, routed per (lang, source) category exactly like
-    :func:`banded_jaccard_pairs` (round-4 pattern, round-5 ask #3):
+    Two tiers, routed per (lang, source) category by the same
+    :func:`_split_by_cap` as :func:`banded_jaccard_pairs`:
 
     - categories with ≤ ``block_cap`` docs run the plain blocked
       all-pairs join (bounded ~block_cap² work per category);
@@ -2125,51 +1929,32 @@ def containment_pairs(
     degenerate low-vocabulary corpus every doc contains every shorter
     doc and the OUTPUT is Θ(n²) — no exact algorithm beats the answer's
     own size there (same boundary as banded_jaccard_pairs)."""
-    # Materialize the tokenized input ONCE (round-12; guide §1.2): `d`
-    # is consumed by the category-size aggregate, both sides of the
-    # exact tier, and the overflow tier's index/verify sides (~5
-    # evaluations of the caller's scan + array_distinct tokenize,
-    # the dominant per-row cost, if left lazy).  Size-gated (round-13;
-    # see operators/materialize.py): lazy below the materialization
-    # break-even, bounded above the §5 local-disk risk.
+    # `d` is consumed ~5× (the category-size aggregate, both sides of
+    # the exact tier, the overflow tier's index and verify sides), each
+    # re-running the caller's scan + tokenize; the size gate in
+    # operators/materialize.py decides whether materializing it pays.
     d = sized_local_checkpoint(d)
-    cat_sizes = d.groupBy("lang", "source").agg(F.count(F.lit(1)).alias("k"))
-    big_cats = cat_sizes.where(F.col("k") > block_cap).select("lang", "source")
-
-    def verified(a: DataFrame, b: DataFrame) -> DataFrame:
-        containment = F.size(F.array_intersect("toks_a", "toks_b")).cast(
-            "double"
-        ) / F.size("toks_a")
-        return (
-            a.join(
-                b,
-                (F.col("lang") == F.col("lang_b"))
-                & (F.col("source") == F.col("source_b")),
-            )
-            .where(F.col("contained_doc") != F.col("container_doc"))
-            .where(F.size("toks_a") <= F.size("toks_b"))
-            .where(containment >= threshold)
-            .select(
-                "contained_doc",
-                "container_doc",
-                F.round(containment, 6).alias("containment"),
-            )
-        )
-
-    small = d.join(F.broadcast(big_cats), ["lang", "source"], "left_anti")
-    exact_tier = verified(
+    small, big = _split_by_cap(d, ["lang", "source"], block_cap)
+    c = containment(F.col("toks_a"), F.col("toks_b"))
+    exact_tier = (
         small.select(
             F.col("doc_id").alias("contained_doc"), "lang", "source",
             F.col("toks").alias("toks_a"),
-        ),
-        small.select(
-            F.col("doc_id").alias("container_doc"),
-            F.col("lang").alias("lang_b"), F.col("source").alias("source_b"),
-            F.col("toks").alias("toks_b"),
-        ),
+        )
+        .join(
+            small.select(
+                F.col("doc_id").alias("container_doc"),
+                F.col("lang").alias("lang_b"), F.col("source").alias("source_b"),
+                F.col("toks").alias("toks_b"),
+            ),
+            (F.col("lang") == F.col("lang_b")) & (F.col("source") == F.col("source_b")),
+        )
+        .where(F.col("contained_doc") != F.col("container_doc"))
+        .where(F.size("toks_a") <= F.size("toks_b"))
+        .where(c >= threshold)
+        .select("contained_doc", "container_doc", F.round(c, 6).alias("containment"))
     )
 
-    big = d.join(F.broadcast(big_cats), ["lang", "source"], "left_semi")
     toks = big.select(
         "doc_id", "lang", "source", F.size("toks").alias("sz"),
         F.explode("toks").alias("tok"),
@@ -2216,9 +2001,6 @@ def containment_pairs(
     # Exact per-candidate verify: category, identity, and size
     # constraints were already enforced at candidate generation, so the
     # joins here are pure id-equi lookups of the two token arrays.
-    ccontain = F.size(F.array_intersect("toks_a", "toks_b")).cast(
-        "double"
-    ) / F.size("toks_a")
     overflow_tier = (
         cands.join(
             big.select(
@@ -2234,12 +2016,8 @@ def containment_pairs(
             ),
             "container_doc",
         )
-        .where(ccontain >= threshold)
-        .select(
-            "contained_doc",
-            "container_doc",
-            F.round(ccontain, 6).alias("containment"),
-        )
+        .where(c >= threshold)
+        .select("contained_doc", "container_doc", F.round(c, 6).alias("containment"))
     )
     return exact_tier.unionByName(overflow_tier)
 

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from mapreduce_framework_spark.functions.idsplit import id_hexdigit
 from mapreduce_framework_spark.io import table
 from mapreduce_framework_spark.registry import register
 
@@ -37,10 +38,9 @@ def split_train_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment depends on its id alone).  Engine-portable because the
     hex string compare avoids any engine-specific hash function."""
     d = table(spark, sf_dir, "documents")
-    hexdigit = F.substring(F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 1)
     return (
         d.withColumn(
-            "split", F.when(hexdigit < "c", "train").otherwise("eval")
+            "split", F.when(id_hexdigit("doc_id") < "c", "train").otherwise("eval")
         )
         .groupBy("split", "lang")
         .agg(
@@ -179,9 +179,7 @@ def curation_funnel_frame(d: DataFrame) -> DataFrame:
         F.length("text").alias("n_chars"),
         F.sha2(F.lower(F.trim(F.col("text"))), 256).alias("h"),
         F.md5(F.concat_ws(" ", F.slice(toks, 1, 12))).alias("pfx"),
-        (
-            F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1) < F.lit("2")
-        ).alias("is_eval"),
+        (id_hexdigit("doc_id") < "2").alias("is_eval"),
     )
     flagged = base.withColumn(
         "qual",

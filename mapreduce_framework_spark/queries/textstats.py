@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from mapreduce_framework_spark.functions.idsplit import id_hexdigit
 from mapreduce_framework_spark.io import table
 from mapreduce_framework_spark.operators.materialize import sized_local_checkpoint
 from mapreduce_framework_spark.registry import register
@@ -528,13 +529,7 @@ def contamination_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-filter eval grams before the shuffle."""
     d = table(spark, sf_dir, "documents").select(
         "doc_id",
-        F.when(
-            F.substring(F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 1)
-            < "c",
-            "train",
-        )
-        .otherwise("eval")
-        .alias("split"),
+        F.when(id_hexdigit("doc_id") < "c", "train").otherwise("eval").alias("split"),
         F.split("text", " ").alias("t"),
     )
     return contamination_frame(d, 5)
@@ -624,13 +619,7 @@ def contamination_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents").select(
         "doc_id",
         "source",
-        F.when(
-            F.substring(F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 1)
-            < "c",
-            "train",
-        )
-        .otherwise("eval")
-        .alias("split"),
+        F.when(id_hexdigit("doc_id") < "c", "train").otherwise("eval").alias("split"),
         F.md5(F.lower(F.trim(F.col("text"))).cast("binary")).alias("fp"),
     )
     train = d.where(F.col("split") == "train").select("fp").distinct()

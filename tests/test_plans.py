@@ -496,13 +496,13 @@ def test_chunk_dedup_is_two_exchanges_no_digest_window(spark):
 
 
 def test_span_chunk_broadcast_gate_degrades_to_shuffle_join(spark):
-    """Round-11 verdict task #2: the span/chunk join-back build side
-    must broadcast only while it provably fits — a corpus-scale
-    dup-digest set (simulated by shrinking the broadcast budget) must
-    automatically degrade to the AQE-skew-splittable shuffle join
-    instead of OOMing a forced broadcast, with identical answers; and
-    the curated shape at default budget must keep today's pure forced-
-    broadcast plan (no pre-flight cache, no extra pass)."""
+    """The span/chunk join-back build side must broadcast only while it
+    provably fits — a corpus-scale dup-digest set (simulated by
+    shrinking the broadcast budget) must automatically degrade to the
+    AQE-skew-splittable shuffle join instead of OOMing a forced
+    broadcast, with identical answers; and the curated shape at
+    default budget must keep the pure broadcast plan (no pre-flight
+    cache, no extra pass)."""
     from mapreduce_framework_spark.plans import formatted_plan
     from mapreduce_framework_spark.queries.dedup import (
         chunk_dedup_frame,
@@ -538,18 +538,14 @@ def test_span_chunk_broadcast_gate_degrades_to_shuffle_join(spark):
     finally:
         spark.conf.set(key, orig)
 
-    # Answers unchanged vs the forced-broadcast escape hatch.
-    forced = sorted(
-        tuple(r) for r in span_dup_positions(d, broadcast_firsts=True).collect()
-    )
-    assert got == forced and len(got) > 0
-
     # Curated shape at default budget: tier-1 upper-bound shortcut —
-    # plan byte-identical to the forced broadcast (hint present, no
-    # InMemoryTableScan, no persist).
-    plan_default = formatted_plan(span_dup_positions(d))
+    # a pure broadcast plan (hint present, no InMemoryTableScan, no
+    # persist) with the same answers as the shuffle tier.
+    default = span_dup_positions(d)
+    plan_default = formatted_plan(default)
     assert "BroadcastHashJoin" in plan_default
     assert "InMemoryTableScan" not in plan_default
+    assert got == sorted(tuple(r) for r in default.collect()) and len(got) > 0
 
 
 def test_lsh_signatures_have_no_shuffle(spark):

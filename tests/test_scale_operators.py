@@ -251,23 +251,28 @@ def test_interval_join_survives_event_storm(spark):
 
 def test_jaccard_band_is_lossless_exhaustive():
     """The banded jaccard join is only correct if NO qualifying pair
-    can land more than 2 bands apart (probe side explodes band±2).
-    Jaccard ≥ 0.8 forces distinct-token counts x ≤ y ≤ 1.25·x, and
-    band(n) = ⌊ln n / ln 1.25⌋ is monotone — so checking the extreme
-    ratios for every x proves losslessness for all (x, y) pairs.
-    Exhaustive to 200k tokens with the exact IEEE double ops Spark's
-    expression uses (log/division/floor), which is where the
-    theoretical ±1 bound could rot to ±2 via rounding."""
+    can land more than the production probe radius apart (the probe
+    side explodes band ± _band_radius(t)).  Jaccard ≥ t forces
+    distinct-token counts x ≤ y ≤ x/t, and band(n) = ⌊ln n / ln 1.25⌋
+    is monotone — so checking the extreme ratios for every x proves
+    losslessness for all (x, y) pairs.  Exhaustive to 200k tokens at
+    each threshold, with the exact IEEE double ops Spark's expression
+    uses (log/division/floor), which is where the theoretical bound
+    could rot via rounding."""
     import math
+
+    from mapreduce_framework_spark.queries.dedup import _band_radius
 
     def band(n: int) -> int:
         return math.floor(math.log(max(n, 1)) / math.log(1.25))
 
-    for x in range(1, 200_001):
-        hi = math.floor(x * 1.25)
-        lo = math.ceil(x * 0.8)
-        assert abs(band(x) - band(hi)) <= 2, (x, hi)
-        assert abs(band(x) - band(lo)) <= 2, (x, lo)
+    for t10 in (6, 7, 8, 9):
+        radius = _band_radius(t10 / 10)
+        for x in range(1, 200_001):
+            hi = 10 * x // t10  # largest y with x / y ≥ t
+            lo = -(-x * t10 // 10)  # smallest y with y / x ≥ t
+            assert band(hi) - band(x) <= radius, (t10, x, hi)
+            assert band(x) - band(lo) <= radius, (t10, x, lo)
 
 
 def test_simhash_combo_fallback_matches_base_scheme(spark):
@@ -757,20 +762,21 @@ def test_knn_edges_set_form_matches_join_form(spark):
     assert got == ref
 
 
-def test_cluster_pairs_banded_match_plain_join(spark):
-    """Round-12 added the lossless token-count band to the
-    dedup_clusters/dedup_canonical_keep pair join.  On a corpus whose
-    near-dup pairs straddle band boundaries (token counts at the 0.8
-    size-ratio edge), the banded derivation must return exactly the
-    plain (lang, source)-block join's pairs."""
+def test_uncapped_band_join_matches_plain_join(spark):
+    """The uncapped band join (block_cap=None, the dedup_clusters and
+    dedup_canonical_keep path) must return exactly the plain
+    (lang, source)-block join's pairs on a corpus whose near-dup pairs
+    straddle band boundaries (token counts at the 0.8 size-ratio edge),
+    at t = 0.8 and at the lower t = 0.7, whose wider probe radius the
+    threshold derives."""
     from pyspark.sql import functions as F
 
     from mapreduce_framework_spark.operators.minhash import jaccard
-    from mapreduce_framework_spark.queries.dedup import cluster_pairs_banded
+    from mapreduce_framework_spark.queries.dedup import banded_jaccard_pairs
 
     # Docs of sizes n and ceil(0.8*n) sharing a prefix vocabulary:
-    # pairs sit right at the qualifying-ratio edge, where the band±2
-    # probe does the absorbing.  Sizes sweep across band boundaries.
+    # pairs sit right at the qualifying-ratio edge, where the probe
+    # radius does the absorbing.  Sizes sweep across band boundaries.
     rows = []
     for g in range(30):
         n = 5 + g * 3
@@ -790,16 +796,20 @@ def test_cluster_pairs_banded_match_plain_join(spark):
         F.col("doc_id").alias("doc_b"), "lang", "source",
         F.col("toks").alias("toks_b"),
     )
-    plain = (
-        plain_a.join(plain_b, ["lang", "source"])
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .where(jaccard(F.col("toks_a"), F.col("toks_b")) >= 0.8)
-        .select("doc_a", "doc_b")
-    )
-    got = sorted(map(tuple, cluster_pairs_banded(d).collect()))
-    ref = sorted(map(tuple, plain.collect()))
-    assert ref, "edge-ratio corpus should produce qualifying pairs"
-    assert got == ref
+    for t in (0.8, 0.7):
+        plain = (
+            plain_a.join(plain_b, ["lang", "source"])
+            .where(F.col("doc_a") < F.col("doc_b"))
+            .where(jaccard(F.col("toks_a"), F.col("toks_b")) >= t)
+            .select("doc_a", "doc_b")
+        )
+        got = sorted(
+            map(tuple, banded_jaccard_pairs(d, t, block_cap=None)
+                .select("doc_a", "doc_b").collect())
+        )
+        ref = sorted(map(tuple, plain.collect()))
+        assert ref, "edge-ratio corpus should produce qualifying pairs"
+        assert got == ref, t
 
 
 def test_bpe_train_exhausts_pairs_gracefully(spark):

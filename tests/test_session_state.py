@@ -77,6 +77,12 @@ ENGINE_RULES = (
         {"io.py", "streaming/runner.py"},
         set(),
     ),
+    (
+        "token-set overlap kernels outside operators/minhash.py",
+        r"array_intersect",
+        {"operators/minhash.py"},
+        set(),
+    ),
 )
 
 
@@ -161,8 +167,9 @@ def test_queries_restore_confs_and_session_state(spark):
 
 def test_engine_patterns_go_through_their_helper():
     """Engine code writes session confs only through scoped_confs
-    (session.py) and takes scratch directories only from
-    io.user_scratch_dir; see ENGINE_RULES."""
+    (session.py), takes scratch directories only from
+    io.user_scratch_dir, and intersects token sets only in the
+    operators/minhash.py kernels; see ENGINE_RULES."""
     hits = []
     for path in sorted(PKG.rglob("*.py")):
         rel = path.relative_to(PKG).as_posix()
