@@ -5,9 +5,8 @@ summation order, which is what makes cosine scores hash-comparable with
 DuckDB's `list_cosine_similarity` (same fold order, double precision).
 
 At scale prefer these built-ins over a Pandas UDF: no Arrow transfer,
-whole-stage codegen, and the scan stays columnar.  (A vectorized
-numpy-matmul path exists in operators/annsearch.py for the brute-force
-top-k where batch BLAS wins.)
+whole-stage codegen, and the scan stays columnar.  Every ANN tier in
+operators/annsearch.py scores with them; none leaves the JVM.
 """
 
 from __future__ import annotations

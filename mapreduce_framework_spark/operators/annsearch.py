@@ -1,67 +1,105 @@
 """Approximate nearest-neighbor search over an embedding column.
 
-Two tiers:
+Every frame here has ``vec_id`` and, for float vectors, ``v``
+(array<double>); a query is a broadcast 1-row frame with ``qv``, so
+each tier stays one declarative plan with no driver-side collect.
+Five tiers, each ranked with a deterministic tie-break so a SQL oracle
+replays it exactly:
 
-- ``brute_force_topk``: exact cosine against every vector — the
-  correctness baseline.  One scan, no shuffle (query broadcast), then
-  TakeOrderedAndProject for the top-k.  At 100 TB this is the fallback,
-  not the default.
+- exact: ``brute_force_topk`` (cosine against every vector, the
+  correctness baseline) and ``topk_per_query`` (the same for a query
+  set, one rank window per query);
+- IVF: ``assign_cells`` puts each vector in its max-cosine centroid
+  cell, ``probe_cells`` picks the ``n_probe`` cells nearest the query,
+  and the exact tail ranks only their members.  ``persist_cell_index``
+  partitions the assignment by cell_id, so a probe prunes whole
+  directories;
+- int8: ``quantize`` + ``quantized_topk``, an exact integer dot
+  product rescaled by two per-vector factors;
+- LSH: ``hyperplane_buckets`` signs integer projections into
+  (tbl, bucket) rows; ``lsh_topk`` re-ranks the Hamming-ball
+  candidates exactly;
+- PQ: ``pq_build`` trains and encodes product-quantization codes on
+  the integer lattice, ``pq_adc_topk`` ranks codes by ADC,
+  ``persist_pq_index``/``probe_pq_index`` serve the same from parquet.
+  IVF-PQ is ``probe_pq_index`` over the codes of the probed cells.
 
-- ``ivf_topk``: IVF-style cell probing.  Vectors are assigned once to
-  their nearest "centroid" cell (here: deterministic seed vectors;
-  sim_search_ivf_kmeans plugs REAL k-means means into the same shape,
-  and sim_search_pq quantizes what the cells store); a query
-  probes only the ``n_probe`` nearest cells, pruning the scan to
-  n_probe/n_cells of the corpus.  The assignment is a broadcast join +
-  argmax (no shuffle of the embedding table), and at scale the cell id
-  becomes a partition key so probing prunes entire files.
+Three nearest-centroid assignments are kept apart on purpose:
+``assign_cells`` (cosine on doubles, ``max_by``), ``kmeans.assign``
+(exact integer L2 over whole vectors) and ``pq_encode`` (integer L2 per
+subspace).  Each one is replayed by a different oracle — a
+``list_cosine_similarity`` ranking, a whole-vector integer distance and
+a per-(vector, subspace) distance, each with its own tie-break — so
+merging any two would change the metric or the tie-break an oracle
+replays, and with it the result hashes.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mapreduce_framework_spark.functions.vector import cosine
+from mapreduce_framework_spark.operators.kmeans import LATTICE_SCALE
 
 
-def brute_force_topk(
-    vectors: DataFrame,
-    query: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
-) -> DataFrame:
-    """Exact top-k by cosine.  ``query`` is a 1-row DataFrame with a
-    ``qv`` array<double> column; kept in-plan (broadcast) so the whole
-    thing stays declarative."""
-    cos = F.round(cosine(F.col(vec_col), F.col("qv")), 6)
+def brute_force_topk(vectors: DataFrame, query: DataFrame, k: int = 10) -> DataFrame:
+    """Exact top-k by rounded cosine with vec_id tie-break: one scan
+    against the broadcast query, then TakeOrderedAndProject."""
+    cos = F.round(cosine(F.col("v"), F.col("qv")), 6)
     return (
         vectors.crossJoin(F.broadcast(query))
-        .select(F.col(id_col), cos.alias("cos_sim"))
-        .orderBy(F.desc("cos_sim"), F.asc(id_col))
+        .select(F.col("vec_id"), cos.alias("cos_sim"))
+        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
         .limit(k)
     )
 
 
-def assign_cells(
-    vectors: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
-) -> DataFrame:
+def topk_per_query(pairs: DataFrame, k: int) -> DataFrame:
+    """Exact top-k for each query of a set: ``pairs`` carries
+    (query_id, qv) next to candidate (vec_id, v) rows.  A query never
+    returns itself; the per-query rank is a window over skinny
+    (query_id, vec_id, cos_sim) rows, so the only shuffle never carries
+    a vector."""
+    scored = pairs.where(F.col("vec_id") != F.col("query_id")).select(
+        "query_id",
+        "vec_id",
+        F.round(cosine(F.col("v"), F.col("qv")), 6).alias("cos_sim"),
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
+    return (
+        scored.withColumn("rk", F.row_number().over(w))
+        .where(F.col("rk") <= k)
+        .select("query_id", "vec_id", "cos_sim", "rk")
+    )
+
+
+def assign_cells(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
     """Assign each vector to its max-cosine centroid (broadcast join +
     max_by).  ``centroids``: (cell_id, cv array<double>)."""
     scored = vectors.crossJoin(F.broadcast(centroids)).select(
-        F.col(id_col),
-        F.col(vec_col),
+        F.col("vec_id"),
+        F.col("v"),
         F.col("cell_id"),
-        cosine(F.col(vec_col), F.col("cv")).alias("_cs"),
+        cosine(F.col("v"), F.col("cv")).alias("_cs"),
     )
     # max_by with (score, cell_id) pair → deterministic on score ties.
-    return scored.groupBy(id_col).agg(
-        F.max_by(F.struct("cell_id", vec_col), F.struct(F.col("_cs"), (-F.col("cell_id")).alias("tb"))).alias("best")
-    ).select(id_col, F.col("best.cell_id").alias("cell_id"), F.col(f"best.{vec_col}").alias(vec_col))
+    return scored.groupBy("vec_id").agg(
+        F.max_by(F.struct("cell_id", "v"), F.struct(F.col("_cs"), (-F.col("cell_id")).alias("tb"))).alias("best")
+    ).select("vec_id", F.col("best.cell_id").alias("cell_id"), F.col("best.v").alias("v"))
+
+
+def probe_cells(centroids: DataFrame, query: DataFrame, n_probe: int) -> DataFrame:
+    """The ``n_probe`` cell ids nearest the query by cosine, lowest
+    cell_id on ties — computed in-plan, so a join against a
+    cell-partitioned index prunes by dynamic partition pruning."""
+    return (
+        centroids.crossJoin(F.broadcast(query))
+        .select("cell_id", cosine(F.col("cv"), F.col("qv")).alias("_cs"))
+        .orderBy(F.desc("_cs"), F.asc("cell_id"))
+        .limit(n_probe)
+        .select("cell_id")
+    )
 
 
 def ivf_topk(
@@ -70,26 +108,11 @@ def ivf_topk(
     query: DataFrame,
     k: int = 10,
     n_probe: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
 ) -> DataFrame:
     """Probe the ``n_probe`` centroids nearest the query, exact-search
     only their cells."""
-    assigned = assign_cells(vectors, centroids, id_col, vec_col)
-    probe_cells = (
-        centroids.crossJoin(F.broadcast(query))
-        .select("cell_id", cosine(F.col("cv"), F.col("qv")).alias("_cs"))
-        .orderBy(F.desc("_cs"), F.asc("cell_id"))
-        .limit(n_probe)
-        .select("cell_id")
-    )
-    pruned = assigned.join(F.broadcast(probe_cells), "cell_id")
-    cos = F.round(cosine(F.col(vec_col), F.col("qv")), 6)
-    return (
-        pruned.crossJoin(F.broadcast(query))
-        .select(F.col(id_col), cos.alias("cos_sim"))
-        .orderBy(F.desc("cos_sim"), F.asc(id_col))
-        .limit(k)
+    return probe_cell_index(
+        assign_cells(vectors, centroids), query, centroids, k=k, n_probe=n_probe
     )
 
 
@@ -99,21 +122,14 @@ def ivf_topk_batch(
     queries: DataFrame,
     k: int = 10,
     n_probe: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
 ) -> DataFrame:
     """Per-query IVF top-k for a whole query SET in one plan.
-    ``queries``: (query_id, qv) rows.  The batch-serving shape: cell
-    assignment runs once for all queries, each query probes only its
-    ``n_probe`` nearest cells (probe rows carry the query vector, so
-    scoring needs no second query join), and the per-query top-k is a
-    window over skinny (query_id, vec_id, cos) rows.  At 100 TB the
-    assigned table is partitioned by cell_id and the broadcast probe
-    join prunes whole files per query — total scan cost is
-    Σ_q probed-cell volume, independent of batch size beyond that."""
-    from pyspark.sql import Window
-
-    assigned = assign_cells(vectors, centroids, id_col, vec_col)
+    ``queries``: (query_id, qv) rows.  Cell assignment runs once for all
+    queries, each query probes only its ``n_probe`` nearest cells (probe
+    rows carry the query vector, so scoring needs no second query
+    join).  With the assignment partitioned by cell_id the probe join
+    prunes whole files per query, so the scan cost is Σ_q probed-cell
+    volume."""
     qc = queries.crossJoin(F.broadcast(centroids)).select(
         "query_id", "qv", "cell_id", cosine(F.col("qv"), F.col("cv")).alias("_cs")
     )
@@ -123,42 +139,20 @@ def ivf_topk_batch(
         .where(F.col("_rn") <= n_probe)
         .select("query_id", "qv", "cell_id")
     )
-    scored = (
-        assigned.join(F.broadcast(probes), "cell_id")
-        .where(F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id",
-            id_col,
-            F.round(cosine(F.col(vec_col), F.col("qv")), 6).alias("cos_sim"),
-        )
-    )
-    wk = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc(id_col))
-    return (
-        scored.withColumn("rk", F.row_number().over(wk))
-        .where(F.col("rk") <= k)
-        .select("query_id", id_col, "cos_sim", "rk")
-    )
+    assigned = assign_cells(vectors, centroids)
+    return topk_per_query(assigned.join(F.broadcast(probes), "cell_id"), k)
 
 
-def persist_cell_index(
-    vectors: DataFrame,
-    centroids: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
-) -> DataFrame:
-    """Materialize the IVF assignment PARTITIONED by cell_id — the
-    layout `ivf_topk`'s module docstring promises for 100 TB serving,
-    made executable (round 6, same move as `persist_bucket_index`): a
-    probe of n_probe cells reads exactly those partition directories
-    (PartitionFilters + executed-scan numFiles pinned in
+def persist_cell_index(vectors: DataFrame, centroids: DataFrame, path: str) -> DataFrame:
+    """Materialize the IVF assignment partitioned by cell_id: a probe of
+    n_probe cells reads exactly those partition directories
+    (PartitionFilters and the executed scan's numFiles are pinned in
     tests/test_plans.py), so per-query scan cost is the probed cells'
     volume, independent of corpus size.  New vectors append into their
-    cell's directory; centroid refresh is a rewrite, done rarely and
-    offline (the standard IVF maintenance trade)."""
-    assign_cells(vectors, centroids, id_col, vec_col).write.mode(
-        "overwrite"
-    ).partitionBy("cell_id").parquet(path)
+    cell's directory; a centroid refresh is a rare offline rewrite."""
+    assign_cells(vectors, centroids).write.mode("overwrite").partitionBy(
+        "cell_id"
+    ).parquet(path)
     return vectors.sparkSession.read.parquet(path)
 
 
@@ -168,72 +162,44 @@ def probe_cell_index(
     centroids: DataFrame,
     k: int = 10,
     n_probe: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
 ) -> DataFrame:
-    """`ivf_topk` against a persisted cell index: identical ranking
-    semantics, but the assignment step is a partition-pruned read of
-    the index instead of an in-plan recomputation.  The probe-cell
-    choice stays in-plan (broadcast centroids × query); only matching
-    cell partitions are scanned."""
-    probe_cells = (
-        centroids.crossJoin(F.broadcast(query))
-        .select("cell_id", cosine(F.col("cv"), F.col("qv")).alias("_cs"))
-        .orderBy(F.desc("_cs"), F.asc("cell_id"))
-        .limit(n_probe)
-        .select("cell_id")
-    )
-    pruned = index.join(F.broadcast(probe_cells), "cell_id")
-    cos = F.round(cosine(F.col(vec_col), F.col("qv")), 6)
-    return (
-        pruned.crossJoin(F.broadcast(query))
-        .select(F.col(id_col), cos.alias("cos_sim"))
-        .orderBy(F.desc("cos_sim"), F.asc(id_col))
-        .limit(k)
-    )
+    """Exact top-k over the members of the ``n_probe`` cells nearest the
+    query.  ``index`` is any (vec_id, v, cell_id) assignment: in-plan
+    from ``assign_cells`` or a persisted cell index, where only the
+    matching cell partitions are scanned."""
+    pruned = index.join(F.broadcast(probe_cells(centroids, query, n_probe)), "cell_id")
+    return brute_force_topk(pruned, query, k=k)
 
 
-def quantize(
-    vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
-    bits: int = 8,
-) -> DataFrame:
-    """Symmetric per-vector int quantization: scale = (2^(bits-1)-1) /
-    max|v|, codes = round(v·scale) ∈ [-(2^(bits-1)-1), 2^(bits-1)-1].
+def quantize(vectors: DataFrame) -> DataFrame:
+    """Symmetric per-vector int8 quantization: scale = 127 / max|v|,
+    codes = round(v·scale) ∈ [-127, 127].
 
-    The 100 TB vector-store compression path: int8 cuts embedding
-    storage and scan bytes 4× vs float32 (8× vs double) and the
-    quantized dot product is INTEGER arithmetic — exact, order-
-    independent, and cross-engine reproducible (unlike a float dot,
-    whose value depends on summation order).  Codes are kept as
-    integer-valued doubles so the existing array fold reuses them
-    without casts.  Returns (id, qv, scale)."""
-    maxq = float((1 << (bits - 1)) - 1)
+    int8 cuts embedding storage and scan bytes 4× vs float32 (8× vs
+    double), and the quantized dot product is INTEGER arithmetic —
+    exact, order-independent and cross-engine reproducible (a float
+    dot's value depends on summation order).  Codes are kept as
+    integer-valued doubles so the array fold reuses them without casts.
+    Returns (vec_id, qv, scale)."""
     staged = vectors.select(
-        F.col(id_col),
-        F.col(vec_col),
+        F.col("vec_id"),
+        F.col("v"),
         (
-            F.lit(maxq)
+            F.lit(127.0)
             / F.greatest(
-                F.array_max(F.transform(F.col(vec_col), lambda x: F.abs(x))),
+                F.array_max(F.transform(F.col("v"), lambda x: F.abs(x))),
                 F.lit(1e-12),
             )
         ).alias("scale"),
     )
     return staged.select(
-        F.col(id_col),
-        F.transform(F.col(vec_col), lambda x: F.round(x * F.col("scale"))).alias("qv"),
+        F.col("vec_id"),
+        F.transform(F.col("v"), lambda x: F.round(x * F.col("scale"))).alias("qv"),
         "scale",
     )
 
 
-def quantized_topk(
-    vectors: DataFrame,
-    query: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-) -> DataFrame:
+def quantized_topk(vectors: DataFrame, query: DataFrame, k: int = 10) -> DataFrame:
     """Top-k by rescaled quantized dot product.  ``vectors``/(1-row)
     ``query`` are quantize() outputs (query columns: query_qv,
     query_scale).  The integer dot is exact; the only float ops are the
@@ -247,8 +213,8 @@ def quantized_topk(
     )
     return (
         vectors.crossJoin(F.broadcast(query))
-        .select(F.col(id_col), approx.alias("approx_dot"))
-        .orderBy(F.desc("approx_dot"), F.asc(id_col))
+        .select(F.col("vec_id"), approx.alias("approx_dot"))
+        .orderBy(F.desc("approx_dot"), F.asc("vec_id"))
         .limit(k)
     )
 
@@ -257,41 +223,32 @@ def occupancy_planes(n_vectors: int, target_occupancy: int = 64) -> int:
     """Plane count for ~``target_occupancy`` vectors per bucket:
     smallest np ≥ 8 with 2^np ≥ n / target — i.e. the per-table bucket
     count GROWS with the corpus so candidate-set size (≈ ball_volume ·
-    occupancy) stays bounded instead of growing linearly (the round-4
-    5.8×-at-10× probe finding).  Pure integer arithmetic
-    ((n−1).bit_length(), no libm log2) so the DuckDB oracle's
-    ``length(bin(n−1))`` reproduces it bit-exactly at any n."""
+    occupancy) stays bounded instead of growing linearly (a fixed 8
+    planes grew the candidate set 5.8× for a 10× corpus).  Pure integer
+    arithmetic ((n−1).bit_length(), no libm log2) so the DuckDB
+    oracle's ``length(bin(n−1))`` reproduces it bit-exactly at any n."""
     return max(8, (n_vectors - 1).bit_length() - (target_occupancy.bit_length() - 1))
 
 
 def hyperplane_buckets(
-    vectors: DataFrame,
-    n_tables: int = 4,
-    n_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
+    vectors: DataFrame, n_tables: int = 4, n_planes: int = 8
 ) -> DataFrame:
     """Random-hyperplane (SimHash-for-cosine) LSH signatures:
     ``n_tables`` independent hash tables of ``n_planes`` sign bits each
-    → one (id, tbl, bucket) row per table per vector.
+    → one (vec_id, tbl, bucket) row per table per vector.
 
     Determinism is the design center: hyperplane component signs come
     from an LCG parity on the (plane, dim) index and vector components
     are quantized to integers (round(x·1000)) before the signed sum, so
     the projection is INTEGER arithmetic — exact, order-independent,
     and bit-identical across engines (a float projection's sign near 0
-    depends on summation order).  All n_tables·n_planes projections are
-    array folds in ONE codegen'd projection pass — no shuffle, no UDF;
-    the only exchange downstream of this helper is the explode to the
-    skinny (id, tbl, bucket) index.
+    depends on summation order).
 
-    At 100 TB the bucket index is written partitioned by (tbl, bucket)
-    so a probe prunes entire files; signatures are recomputed never —
-    new vectors append to the index (same admission shape as
-    dedup_minhash_incremental).
+    At scale the bucket index is written partitioned by (tbl, bucket)
+    (``persist_bucket_index``) so a probe prunes entire files; new
+    vectors append to the index.
 
-    EXPLODE + codegen'd conditional SUMs, not array HOFs (round-5; the
-    same lesson operators/minhash.py:54-65 already documents): one
+    EXPLODE + codegen'd conditional SUMs, not array HOFs: one
     `aggregate(zip_with(...))` fold per plane is interpreted per
     element with boxing, and with occupancy-derived plane counts the
     projection pass became the whole operator's cost (measured 181 s of
@@ -304,18 +261,18 @@ def hyperplane_buckets(
 
     ex = (
         vectors.select(
-            F.col(id_col),
+            F.col("vec_id"),
             # stride = max(64, dim): data-derived, so plane sign
             # patterns stay disjoint for ANY input dimension (identical
             # to the historical literal 64 whenever dim ≤ 64; the
             # sim_search_lsh oracle mirrors this same greatest(64, len)
             # stride, so the engines agree at every dimension).
-            F.greatest(F.lit(64), F.size(vec_col)).alias("_stride"),
-            F.posexplode_outer(F.col(vec_col)).alias("_d", "_x"),
+            F.greatest(F.lit(64), F.size("v")).alias("_stride"),
+            F.posexplode_outer(F.col("v")).alias("_d", "_x"),
         )
         .where(F.col("_d").isNotNull())
         .select(
-            id_col,
+            "vec_id",
             "_stride",
             "_d",
             F.round(F.col("_x") * 1000).cast("bigint").alias("_xi"),
@@ -332,7 +289,7 @@ def hyperplane_buckets(
         even = F.shiftright(lcg, 16).bitwiseAND(F.lit(1)) == 0
         return F.sum(F.when(even, F.col("_xi")).otherwise(-F.col("_xi")))
 
-    sig = ex.groupBy(id_col).agg(
+    sig = ex.groupBy("vec_id").agg(
         *[(_signed(p) > 0).cast("int").alias(f"_b{p}") for p in range(planes)]
     )
     buckets = [
@@ -342,7 +299,7 @@ def hyperplane_buckets(
         ).alias(f"_t{t}")
         for t in range(n_tables)
     ]
-    wide = sig.select(F.col(id_col), *buckets)
+    wide = sig.select(F.col("vec_id"), *buckets)
     tbl_structs = F.array(
         *[
             F.struct(F.lit(t).alias("tbl"), F.col(f"_t{t}").alias("bucket"))
@@ -350,11 +307,11 @@ def hyperplane_buckets(
         ]
     )
     return wide.select(
-        F.col(id_col), F.explode(tbl_structs).alias("tb")
-    ).select(id_col, F.col("tb.tbl").alias("tbl"), F.col("tb.bucket").alias("bucket"))
+        F.col("vec_id"), F.explode(tbl_structs).alias("tb")
+    ).select("vec_id", F.col("tb.tbl").alias("tbl"), F.col("tb.bucket").alias("bucket"))
 
 
-def hamming_ball(bucket: int, n_planes: int, radius: int = 2) -> list[int]:
+def hamming_ball(bucket: int, n_planes: int, radius: int) -> list[int]:
     """All bucket codes within ``radius`` bit flips of ``bucket`` over
     an ``n_planes``-bit code — the multi-probe ball, enumerated
     driver-side (ball volume is 1 + np + C(np,2) + … — tiny; np ≤ ~20
@@ -372,23 +329,16 @@ def hamming_ball(bucket: int, n_planes: int, radius: int = 2) -> list[int]:
 
 
 def persist_bucket_index(
-    vectors: DataFrame,
-    path: str,
-    n_tables: int = 4,
-    n_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
+    vectors: DataFrame, path: str, n_tables: int, n_planes: int
 ) -> DataFrame:
-    """Materialize the LSH bucket index PARTITIONED by (tbl, bucket) —
-    the layout `hyperplane_buckets`' docstring promises for 100 TB
-    serving, made executable (the same round-6 move as
-    `minhash.persist_band_index`).  A multi-probe lookup against the
-    returned frame prunes to ~n_tables · ball_volume partition
-    directories via partition pruning (PartitionFilters in the scan —
-    pinned in tests/test_plans.py with an inputFiles() count), so probe
-    I/O is independent of corpus size.  Maintenance is append-only:
-    new vectors' (tbl, bucket) rows land in existing directories."""
-    hyperplane_buckets(vectors, n_tables, n_planes, id_col, vec_col).write.mode(
+    """Materialize the LSH bucket index partitioned by (tbl, bucket).
+    A multi-probe lookup against the returned frame prunes to
+    ~n_tables · ball_volume partition directories (PartitionFilters in
+    the scan, pinned in tests/test_plans.py with an inputFiles()
+    count), so probe I/O is independent of corpus size.  Maintenance is
+    append-only: new vectors' (tbl, bucket) rows land in existing
+    directories."""
+    hyperplane_buckets(vectors, n_tables, n_planes).write.mode(
         "overwrite"
     ).partitionBy("tbl", "bucket").parquet(path)
     return vectors.sparkSession.read.parquet(path)
@@ -399,7 +349,6 @@ def probe_bucket_index(
     query_buckets: list[tuple[int, int]],
     n_planes: int = 8,
     hamming_radius: int = 2,
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Candidate ids from a persisted bucket index: ``query_buckets``
     is the serving layer's [(tbl, bucket)] signature of ONE query
@@ -419,7 +368,7 @@ def probe_bucket_index(
             hamming_ball(qb, n_planes, hamming_radius)
         )
         cond = c if cond is None else (cond | c)
-    return index.where(cond).select(id_col).distinct()
+    return index.where(cond).select("vec_id").distinct()
 
 
 def lsh_topk(
@@ -429,8 +378,6 @@ def lsh_topk(
     n_tables: int = 4,
     n_planes: int | None = None,
     hamming_radius: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
     n_vectors: int | None = None,
 ) -> DataFrame:
     """Multi-probe hyperplane-LSH top-k: candidates are vectors whose
@@ -442,12 +389,12 @@ def lsh_topk(
     size via :func:`occupancy_planes` — per-bucket occupancy is pinned
     at ~64 vectors, so the radius-2 candidate set is bounded by
     ~n_tables · (1 + np + C(np,2)) · 64 rows and grows only
-    POLY-LOGARITHMICALLY with the corpus instead of linearly (the
-    round-4 probe's 5.8×-at-10× growth, measured back to ~1×).  The
+    POLY-LOGARITHMICALLY with the corpus instead of linearly (5.8×
+    candidates for a 10× corpus at fixed planes, ~1× derived).  The
     corpus count is one metadata-cheap action (parquet footers at
     scale); at all verification SFs (≤ 2 000 vectors) the derived count
-    equals the historical 8, so results are unchanged there.  Recall
-    accounting for the growing plane count is in SCALE.md §LSH.
+    is 8.  Recall accounting for the growing plane count is in SCALE.md
+    §LSH.
 
     Callers that already know the corpus size (scale probes, serving
     layers with catalog statistics) should pass ``n_vectors`` so the
@@ -477,12 +424,12 @@ def lsh_topk(
         n_planes = occupancy_planes(
             n_vectors if n_vectors is not None else vectors.count()
         )
-    buckets = hyperplane_buckets(vectors, n_tables, n_planes, id_col, vec_col)
-    qb = buckets.where(F.col(id_col) == query_id).select(
+    buckets = hyperplane_buckets(vectors, n_tables, n_planes)
+    qb = buckets.where(F.col("vec_id") == query_id).select(
         "tbl", F.col("bucket").alias("qbucket")
     )
     cand = (
-        buckets.where(F.col(id_col) != query_id)
+        buckets.where(F.col("vec_id") != query_id)
         .join(F.broadcast(qb), "tbl")
         .where(
             F.bit_count(
@@ -490,18 +437,16 @@ def lsh_topk(
             )
             <= hamming_radius
         )
-        .select(id_col)
+        .select("vec_id")
         .distinct()
     )
-    query = vectors.where(F.col(id_col) == query_id).select(
-        F.col(vec_col).alias("qv")
-    )
+    query = vectors.where(F.col("vec_id") == query_id).select(F.col("v").alias("qv"))
     # Candidate ids are the PRUNED set (a bounded fraction of the
     # corpus) — broadcast the semi join so the vector table is never
     # re-shuffled just to be filtered.  Past the broadcast threshold
     # Spark falls back to a shuffle join on the skinny id column.
-    pruned = vectors.join(F.broadcast(cand), id_col, "left_semi")
-    return brute_force_topk(pruned, query, k=k, id_col=id_col, vec_col=vec_col)
+    pruned = vectors.join(F.broadcast(cand), "vec_id", "left_semi")
+    return brute_force_topk(pruned, query, k=k)
 
 
 # --- Product quantization (PQ) -------------------------------------------
@@ -515,67 +460,67 @@ def lsh_topk(
 # (subspace, code) → partial-dot lookup table against the codebook, and
 # a corpus vector's approximate dot is the sum of M table lookups — no
 # float vector is ever touched at scan time.  Everything below runs on
-# the exact integer lattice (operators/kmeans.py's quantize trick), so
+# the exact integer lattice (operators/kmeans.py's quantize), so
 # training, encoding, the LUT, and the ADC scores are bit-reproducible
 # and hash-checkable against a SQL oracle.
 
+PQ_SUB = 4  # subspaces M per vector
+PQ_SUB_DIM = 16  # dimensions per subspace
+PQ_SEEDS = 8  # codewords K per subspace
+# The lattice dot of two kmeans.quantize vectors carries the scale twice.
+_SCALE_SQ = float(LATTICE_SCALE * LATTICE_SCALE)
+# Version of the layout persist_pq_index writes.  Cache keys for a
+# persisted index carry it: bump it whenever the index-writing code
+# changes, so an index built by older code is never served.
+PQ_INDEX_VERSION = 2
 
-def pq_subvectors(
-    qvecs: DataFrame,
-    n_sub: int,
-    sub_dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
-) -> DataFrame:
-    """(id, v[bigint dim]) → exploded (id, m, sp, val) rows: subspace m
-    covers positions [m*sub_dim, (m+1)*sub_dim).
 
-    Validates dim == n_sub*sub_dim IN-PLAN (round-7 ADVICE: n_sub was
-    accepted but never used, so a ragged vector silently produced
-    more/fewer subspaces instead of failing): a vector of any other
-    length raises at execution via raise_error, keeping the check
-    JVM-side and codegen-friendly instead of a driver collect."""
+def pq_subvectors(qvecs: DataFrame) -> DataFrame:
+    """(vec_id, v[bigint dim]) → exploded (vec_id, m, sp, val) rows:
+    subspace m covers positions [m*PQ_SUB_DIM, (m+1)*PQ_SUB_DIM).
+
+    Validates dim == PQ_SUB*PQ_SUB_DIM in-plan: a vector of any other
+    length raises at execution via raise_error (instead of silently
+    producing a ragged subspace), keeping the check JVM-side and
+    codegen-friendly instead of a driver collect."""
+    dim = PQ_SUB * PQ_SUB_DIM
     checked = qvecs.select(
-        F.col(id_col),
-        F.when(F.size(vec_col) == n_sub * sub_dim, F.col(vec_col)).otherwise(
+        F.col("vec_id"),
+        F.when(F.size("v") == dim, F.col("v")).otherwise(
             F.raise_error(
                 F.concat(
                     F.lit(
-                        f"pq_subvectors: expected dim {n_sub * sub_dim} "
-                        f"({n_sub}x{sub_dim}), got "
+                        f"pq_subvectors: expected dim {dim} "
+                        f"({PQ_SUB}x{PQ_SUB_DIM}), got "
                     ),
-                    F.size(vec_col).cast("string"),
+                    F.size("v").cast("string"),
                 )
             )
-        ).alias(vec_col),
+        ).alias("v"),
     )
     return checked.select(
-        F.col(id_col), F.posexplode(vec_col).alias("pos", "val")
+        F.col("vec_id"), F.posexplode("v").alias("pos", "val")
     ).select(
-        id_col,
-        (F.col("pos") / sub_dim).cast("int").alias("m"),
-        (F.col("pos") % sub_dim).alias("sp"),
+        "vec_id",
+        (F.col("pos") / PQ_SUB_DIM).cast("int").alias("m"),
+        (F.col("pos") % PQ_SUB_DIM).alias("sp"),
         "val",
     )
 
 
-def pq_train(sub: DataFrame, n_seeds: int) -> DataFrame:
+def pq_train(sub: DataFrame) -> DataFrame:
     """One exact integer Lloyd round per subspace: seeds = the
-    ``n_seeds`` SMALLEST OBSERVED vector ids' subvectors (code = rank
-    of the id among the seeds, 0-based — round-7 ADVICE: the old
-    literal ``vec_id < n_seeds`` assumed ids dense from 0 and silently
-    trained a short codebook on corpora missing those ids), assign
-    every subvector to its nearest seed (ties to the lower code),
-    codebook = truncating integer mean per (m, code, sp).  Returns the
-    exploded codebook (m, code, sp, cval) — M×K×sub_dim skinny rows,
-    always broadcastable.  On dense-from-0 ids rank-1 == vec_id, so
-    recorded hashes are unchanged.  The seed pick is a distributed
-    sort-limit on distinct ids; the rank window runs over the ≤n_seeds
-    surviving rows only (bounded, same policy as operators/ranking)."""
-    from pyspark.sql import Window
-
+    ``PQ_SEEDS`` SMALLEST OBSERVED vector ids' subvectors (code = rank
+    of the id among the seeds, 0-based, so ids need not be dense from
+    0), ``pq_encode`` against the seeds assigns every subvector to its
+    nearest seed (ties to the lower code), and the codebook is the
+    truncating integer mean per (m, code, sp).  Returns the exploded
+    codebook (m, code, sp, cval) — M×K×sub_dim skinny rows, always
+    broadcastable.  The seed pick is a distributed sort-limit on
+    distinct ids; the rank window runs over the ≤PQ_SEEDS surviving
+    rows only."""
     seed_ids = (
-        sub.select("vec_id").distinct().orderBy("vec_id").limit(n_seeds)
+        sub.select("vec_id").distinct().orderBy("vec_id").limit(PQ_SEEDS)
     ).withColumn(
         "code", (F.row_number().over(Window.orderBy("vec_id")) - 1).cast("int")
     )
@@ -583,44 +528,26 @@ def pq_train(sub: DataFrame, n_seeds: int) -> DataFrame:
         F.col("m"),
         F.col("sp"),
         F.col("code"),
-        F.col("val").alias("sval"),
-    )
-    d1 = (
-        sub.join(F.broadcast(seeds), ["m", "sp"])
-        .groupBy("vec_id", "m", "code")
-        .agg(
-            F.sum(
-                (F.col("val") - F.col("sval")) * (F.col("val") - F.col("sval"))
-            ).alias("dist")
-        )
-    )
-    a1 = (
-        d1.groupBy("vec_id", "m")
-        .agg(F.min(F.struct("dist", "code")).alias("b"))
-        .select("vec_id", "m", F.col("b.code").alias("code"))
+        F.col("val").alias("cval"),
     )
     codebook = (
-        a1.join(sub, ["vec_id", "m"])
+        pq_encode(sub, seeds)
+        .join(sub, ["vec_id", "m"])
         .groupBy("m", "code", "sp")
         .agg(F.expr("sum(val) div count(*)").alias("cval"))
     )
-    # Materialize the codebook (round-12 optimization; guide §1.2 —
-    # don't recompute what you already have): it is M×K×sub_dim rows
-    # (hundreds), but its LAZY plan embeds three passes over the
-    # corpus-sized ``sub`` frame, and every caller consumes it at least
-    # twice (pq_encode's broadcast + the ADC LUT, or the persisted
-    # index's codes write + codebook sidecar write) — so training was
-    # re-executed per consumer.  One eager localCheckpoint runs training
-    # exactly once; at 100 TB this is the difference between ~5 and ~3
-    # corpus scans per build (and on a cluster the train input would be
-    # a sample anyway — same plan, sampled ``sub``).
+    # The codebook is hundreds of rows, but its lazy plan embeds three
+    # passes over the corpus-sized ``sub``, and every caller consumes it
+    # at least twice (pq_encode's broadcast + the ADC LUT, or the index
+    # write + the codebook sidecar write).  One eager localCheckpoint
+    # runs training once: ~3 corpus scans per build instead of ~5.
     return codebook.localCheckpoint(eager=True)
 
 
 def pq_encode(sub: DataFrame, codebook: DataFrame) -> DataFrame:
     """Nearest-codeword id per (vector, subspace) — the stored PQ code.
-    Broadcast codebook; distances and the argmin tie-break (dist, code)
-    are exact integers."""
+    Broadcast codebook (m, code, sp, cval); distances and the argmin
+    tie-break (dist, code) are exact integers."""
     d = (
         sub.join(F.broadcast(codebook), ["m", "sp"])
         .groupBy("vec_id", "m", "code")
@@ -637,17 +564,28 @@ def pq_encode(sub: DataFrame, codebook: DataFrame) -> DataFrame:
     )
 
 
+def pq_build(qvecs: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Train and encode a PQ index over the lattice ``qvecs``
+    (vec_id, v array<bigint>).  Returns (sub, codebook, codes): the
+    exploded subvectors (also the source of a query's subvectors), the
+    codebook and the tall (vec_id, m, code) codes.
+
+    ``sub`` is checkpointed eagerly: training walks it four times (seed
+    pick, seed join, assignment, codebook mean) and encoding once more;
+    lazily each walk re-ran the embedding scan and the explode."""
+    sub = pq_subvectors(qvecs).localCheckpoint(eager=True)
+    codebook = pq_train(sub)
+    return sub, codebook, pq_encode(sub, codebook)
+
+
 def pq_adc_topk(
-    codes: DataFrame,
-    codebook: DataFrame,
-    query_sub: DataFrame,
-    k: int,
-    scale_sq: float,
+    codes: DataFrame, codebook: DataFrame, query_sub: DataFrame, k: int
 ) -> DataFrame:
-    """ADC top-k: LUT[(m, code)] = Σ_sp qval·cval (M×K rows), a corpus
-    vector's approximate dot = Σ_m LUT[code(v, m)], ranked by the exact
-    integer score with vec_id tie-break.  ``scale_sq`` rescales the
-    integer-lattice dot back to float for display only."""
+    """ADC top-k over tall (vec_id, m, code) codes: LUT[(m, code)] =
+    Σ_sp qval·cval (M×K rows), a vector's approximate dot =
+    Σ_m LUT[code(v, m)], ranked by the exact integer score with vec_id
+    tie-break.  ``query_sub`` is (m, sp, qval); the score is divided by
+    the lattice scale squared for display only."""
     lut = (
         codebook.join(F.broadcast(query_sub), ["m", "sp"])
         .groupBy("m", "code")
@@ -663,58 +601,52 @@ def pq_adc_topk(
         .limit(k)
         .select(
             "vec_id",
-            F.round(F.col("adc") / F.lit(scale_sq), 6).alias("approx_dot"),
+            F.round(F.col("adc") / F.lit(_SCALE_SQ), 6).alias("approx_dot"),
         )
     )
 
 
 def persist_pq_index(
-    qvecs: DataFrame,
-    path: str,
-    n_sub: int = 4,
-    sub_dim: int = 16,
-    n_seeds: int = 8,
+    qvecs: DataFrame, path: str, cells: DataFrame | None = None
 ) -> tuple[DataFrame, DataFrame]:
-    """Write-once/probe-many PQ serving layout (round-8 verdict task
-    #4 — completes the set next to persist_cell_index / IVF,
-    persist_bucket_index / LSH, and the MinHash band table): train the
-    codebooks, encode the corpus, and materialize
+    """Write-once/probe-many PQ serving layout: build the index and
+    materialize
 
-    - ``path/codes`` — one row per vector, codes WIDE
-      (vec_id, c1..c{M-1}, c0), parquet PARTITIONED by the leading
-      code c0, so the corpus-sized table stores M small ints per
-      vector (the 64× scan-byte cut made durable) and the directory
-      fans out across K leading-code partitions for balanced appends;
+    - ``path/codes`` — one row per vector, codes WIDE (vec_id,
+      c0..c{M-1}), so the corpus-sized table stores M small ints per
+      vector (the 64× scan-byte cut made durable).  Without ``cells``
+      it is partitioned by the leading code c0, spreading appends over
+      K directories.  With ``cells`` (vec_id, cell_id), the IVF
+      assignment, only the assigned vectors are kept and the table is
+      partitioned by cell_id: a probe then opens n_probe/n_cells of the
+      files and reads M small ints per surviving row — the FAISS-IVFPQ
+      shape as a parquet layout;
     - ``path/codebook`` — the exploded (m, code, sp, cval) codebook
       sidecar, M×K×sub_dim rows, always broadcastable.
 
-    Returns (codes, codebook) read BACK from disk — probes run against
-    the persisted layout, never the in-plan training path.  New vectors
-    encode against the frozen sidecar and append into their c0
-    directory; codebook refresh is the rare offline rewrite (the
-    standard PQ maintenance trade, same policy as IVF centroids)."""
-    # Eager checkpoint (round-12; guide §1.2): pq_train walks ``sub``
-    # 4x and pq_encode once more -- materialize the exploded subvector
-    # frame once per build instead of re-running the scan + explode
-    # per walk.
-    sub = pq_subvectors(qvecs, n_sub=n_sub, sub_dim=sub_dim).localCheckpoint(
-        eager=True
-    )
-    codebook = pq_train(sub, n_seeds=n_seeds)
-    codes = pq_encode(sub, codebook)
+    Returns (codes, codebook) read back from disk, so probes run
+    against the persisted layout.  New vectors encode against the
+    frozen sidecar and append into their directory; codebook and
+    centroid refresh is the rare offline rewrite."""
+    _, codebook, codes = pq_build(qvecs)
     wide = (
         codes.groupBy("vec_id")
-        .pivot("m", list(range(n_sub)))
+        .pivot("m", list(range(PQ_SUB)))
         .agg(F.first("code"))
+        .select("vec_id", *[F.col(str(m)).alias(f"c{m}") for m in range(PQ_SUB)])
     )
-    wide = wide.select(
-        "vec_id",
-        *[F.col(str(m)).alias(f"c{m}") for m in range(1, n_sub)],
-        F.col("0").alias("c0"),
-    )
-    wide.write.mode("overwrite").partitionBy("c0").parquet(f"{path}/codes")
+    if cells is not None:
+        wide = wide.join(cells, "vec_id")
+    wide.write.mode("overwrite").partitionBy(
+        "c0" if cells is None else "cell_id"
+    ).parquet(f"{path}/codes")
     codebook.write.mode("overwrite").parquet(f"{path}/codebook")
-    spark = qvecs.sparkSession
+    return read_pq_index(qvecs.sparkSession, path)
+
+
+def read_pq_index(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
+    """(codes, codebook) of the index ``persist_pq_index`` wrote at
+    ``path``.  Each read costs one footer-reading job."""
     return (
         spark.read.parquet(f"{path}/codes"),
         spark.read.parquet(f"{path}/codebook"),
@@ -722,159 +654,19 @@ def persist_pq_index(
 
 
 def probe_pq_index(
-    codes: DataFrame,
-    codebook: DataFrame,
-    query_sub: DataFrame,
-    k: int,
-    scale_sq: float,
-    n_sub: int = 4,
+    codes: DataFrame, codebook: DataFrame, query_sub: DataFrame, k: int
 ) -> DataFrame:
-    """ADC top-k against a persisted PQ index: identical ranking
-    semantics to pq_adc_topk, but the scan side is the code table read
-    from disk — the probe plan touches ONLY code columns (no float
-    vector anywhere; pinned by tests/test_plans.py).  The query builds
-    the (m, code)→partial-dot LUT from the broadcast codebook sidecar,
-    the wide codes unpivot in-plan (posexplode of the M code columns —
-    pure codegen, no shuffle before the final per-vector sum), and the
-    per-vector ADC score is the usual grouped sum of M lookups."""
+    """ADC top-k against persisted wide codes: the M code columns
+    unpivot in-plan (posexplode — pure codegen, no shuffle before the
+    per-vector sum) into ``pq_adc_topk``.  The probe plan reads code
+    columns only, never a float vector (pinned by tests/test_plans.py).
+    For IVF-PQ, pass the codes joined with the broadcast
+    ``probe_cells``: the cell pruning then reaches the code scan as
+    dynamic partition pruning."""
     tall = codes.select(
         "vec_id",
-        F.posexplode(F.array(*[F.col(f"c{m}") for m in range(n_sub)])).alias(
+        F.posexplode(F.array(*[F.col(f"c{m}") for m in range(PQ_SUB)])).alias(
             "m", "code"
         ),
     )
-    lut = (
-        codebook.join(F.broadcast(query_sub), ["m", "sp"])
-        .groupBy("m", "code")
-        .agg(F.sum(F.col("qval") * F.col("cval")).alias("dot"))
-    )
-    adc = (
-        tall.join(F.broadcast(lut), ["m", "code"])
-        .groupBy("vec_id")
-        .agg(F.sum("dot").alias("adc"))
-    )
-    return (
-        adc.orderBy(F.desc("adc"), F.asc("vec_id"))
-        .limit(k)
-        .select(
-            "vec_id",
-            F.round(F.col("adc") / F.lit(scale_sq), 6).alias("approx_dot"),
-        )
-    )
-
-
-def persist_ivf_pq_index(
-    vectors: DataFrame,
-    qvecs: DataFrame,
-    centroids: DataFrame,
-    path: str,
-    n_sub: int = 4,
-    sub_dim: int = 16,
-    n_seeds: int = 8,
-) -> tuple[DataFrame, DataFrame]:
-    """Write-once/probe-many layout for the IVF-PQ composite — the
-    serving form of `queries/similarity.ivf_pq_frame`, uniting the two
-    persisted tiers it composes: codes are stored WIDE
-    (vec_id, c0..c{M-1}) like persist_pq_index, but parquet-PARTITIONED
-    BY the vector's IVF ``cell_id`` like persist_cell_index, so a probe
-    both prunes whole cell directories (n_probe/n_cells of the files)
-    AND reads only M small ints per surviving row (the 64× byte cut) —
-    the two prunings multiply in the LAYOUT, not just the plan.
-
-    - ``path/codes``  — (vec_id, c0..c{M-1}) partitioned by cell_id
-    - ``path/codebook`` — exploded (m, code, sp, cval) sidecar,
-      M×K×sub_dim rows, always broadcastable
-
-    ``centroids`` stays caller-owned (it is already a sidecar-sized
-    frame); appends encode against the frozen codebook and land in
-    their cell directory; codebook/centroid refresh is the rare offline
-    rewrite.  Returns (codes, codebook) read BACK from disk."""
-    assigned = assign_cells(vectors, centroids).select("vec_id", "cell_id")
-    # Eager checkpoint (round-12; guide §1.2): pq_train walks ``sub``
-    # 4x and pq_encode once more -- materialize the exploded subvector
-    # frame once per build instead of re-running the scan + explode
-    # per walk.
-    sub = pq_subvectors(qvecs, n_sub=n_sub, sub_dim=sub_dim).localCheckpoint(
-        eager=True
-    )
-    codebook = pq_train(sub, n_seeds=n_seeds)
-    codes = pq_encode(sub, codebook)
-    wide = (
-        codes.groupBy("vec_id")
-        .pivot("m", list(range(n_sub)))
-        .agg(F.first("code"))
-        .select(
-            "vec_id", *[F.col(str(m)).alias(f"c{m}") for m in range(n_sub)]
-        )
-    )
-    wide.join(assigned, "vec_id").write.mode("overwrite").partitionBy(
-        "cell_id"
-    ).parquet(f"{path}/codes")
-    codebook.write.mode("overwrite").parquet(f"{path}/codebook")
-    spark = vectors.sparkSession
-    return (
-        spark.read.parquet(f"{path}/codes"),
-        spark.read.parquet(f"{path}/codebook"),
-    )
-
-
-def probe_ivf_pq_index(
-    codes: DataFrame,
-    codebook: DataFrame,
-    centroids: DataFrame,
-    query: DataFrame,
-    query_sub: DataFrame,
-    k: int = 10,
-    n_probe: int = 4,
-    scale_sq: float = 1e8,
-    n_sub: int = 4,
-    exclude_id: int | None = None,
-) -> DataFrame:
-    """ADC top-k against a persisted IVF-PQ index: the probe-cell pick
-    stays in-plan (broadcast centroids × query — no collect), so cell
-    pruning reaches the code scan as a DYNAMIC partition-pruning filter
-    (pinned by tests/test_plans.py), and the scan itself reads code
-    columns only — no float vector anywhere in the probe plan.  Ranking
-    is identical to the in-plan composite (same lattice, same codebook,
-    same ADC with vec_id tie-break).
-
-    ``exclude_id`` optionally drops one vec_id from the candidate set
-    (e.g. when the query vector itself is present in the index).  The
-    default is None — every indexed id is eligible — matching
-    probe_pq_index's caller-filters contract; persist_ivf_pq_index
-    already excludes the query row, so the registered queries pass
-    nothing here."""
-    probe_cells = (
-        centroids.crossJoin(F.broadcast(query))
-        .select("cell_id", cosine(F.col("cv"), F.col("qv")).alias("_cs"))
-        .orderBy(F.desc("_cs"), F.asc("cell_id"))
-        .limit(n_probe)
-        .select("cell_id")
-    )
-    pruned = codes.join(F.broadcast(probe_cells), "cell_id")
-    if exclude_id is not None:
-        pruned = pruned.where(F.col("vec_id") != exclude_id)
-    tall = pruned.select(
-        "vec_id",
-        F.posexplode(F.array(*[F.col(f"c{m}") for m in range(n_sub)])).alias(
-            "m", "code"
-        ),
-    )
-    lut = (
-        codebook.join(F.broadcast(query_sub), ["m", "sp"])
-        .groupBy("m", "code")
-        .agg(F.sum(F.col("qval") * F.col("cval")).alias("dot"))
-    )
-    adc = (
-        tall.join(F.broadcast(lut), ["m", "code"])
-        .groupBy("vec_id")
-        .agg(F.sum("dot").alias("adc"))
-    )
-    return (
-        adc.orderBy(F.desc("adc"), F.asc("vec_id"))
-        .limit(k)
-        .select(
-            "vec_id",
-            F.round(F.col("adc") / F.lit(scale_sq), 6).alias("approx_dot"),
-        )
-    )
+    return pq_adc_topk(tall, codebook, query_sub, k)

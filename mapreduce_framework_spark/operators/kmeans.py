@@ -35,12 +35,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def quantize(vec: F.Column, scale: int = 10_000) -> F.Column:
+# Lattice resolution of ``quantize``: 1e-4 per unit.
+LATTICE_SCALE = 10_000
+
+
+def quantize(vec: F.Column) -> F.Column:
     """float embedding → exact int64 lattice point (round half-up;
     identical in DuckDB, where round() on DOUBLE is also half-away)."""
     return F.transform(
         vec.cast("array<double>"),
-        lambda x: F.round(x * scale).cast("bigint"),
+        lambda x: F.round(x * LATTICE_SCALE).cast("bigint"),
     )
 
 

@@ -6,8 +6,34 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduce_framework_spark.io import table, user_scratch_dir
-from mapreduce_framework_spark.operators.annsearch import brute_force_topk, ivf_topk
+from mapreduce_framework_spark.operators.annsearch import (
+    PQ_INDEX_VERSION,
+    PQ_SEEDS,
+    PQ_SUB,
+    PQ_SUB_DIM,
+    assign_cells,
+    brute_force_topk,
+    ivf_topk,
+    ivf_topk_batch,
+    lsh_topk,
+    persist_pq_index,
+    pq_adc_topk,
+    pq_build,
+    pq_subvectors,
+    probe_cells,
+    probe_pq_index,
+    quantize,
+    quantized_topk,
+    read_pq_index,
+    topk_per_query,
+)
+from mapreduce_framework_spark.operators.kmeans import quantize as kquantize
 from mapreduce_framework_spark.registry import register
+
+# IVF coarse quantizer of the seed-cell keys: the 16 lowest vec_ids as
+# cells, 4 of them probed per query.
+_N_CELLS = 16
+_N_PROBE = 4
 
 
 def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -16,10 +42,34 @@ def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _lattice(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The embeddings on kmeans.quantize's exact integer lattice:
+    (vec_id, v array<bigint>)."""
+    return table(spark, sf_dir, "embeddings").select(
+        "vec_id", kquantize(F.col("embedding")).alias("v")
+    )
+
+
 def _query_vec(vectors: DataFrame) -> DataFrame:
     """The query = embedding of vec_id 0, kept in-plan (broadcast) —
     no driver-side collect."""
     return vectors.where(F.col("vec_id") == 0).select(F.col("v").alias("qv"))
+
+
+def _query_sub(sub: DataFrame) -> DataFrame:
+    """The query's (vec_id 0) PQ subvectors as (m, sp, qval)."""
+    return sub.where(F.col("vec_id") == 0).select("m", "sp", F.col("val").alias("qval"))
+
+
+def _seed_cells(vectors: DataFrame) -> DataFrame:
+    """Deterministic IVF centroids: the ``_N_CELLS`` lowest vec_ids'
+    vectors as (cell_id, cv).  Production swaps in k-means means
+    (sim_search_ivf_kmeans); the plan shape is identical."""
+    return (
+        vectors.orderBy("vec_id")
+        .limit(_N_CELLS)
+        .select(F.col("vec_id").cast("int").alias("cell_id"), F.col("v").alias("cv"))
+    )
 
 
 @register(
@@ -80,29 +130,11 @@ def sim_search_topk_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     query scores only its probed cells, sim_search_ivf's pruning per
     batch row); brute-force-per-batch here is the recall baseline those
     variants are measured against."""
-    from pyspark.sql import Window
-
-    from mapreduce_framework_spark.functions.vector import cosine
-
     vectors = _vectors(spark, sf_dir).select("vec_id", "v")
     queries = vectors.where(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
-    scored = (
-        vectors.crossJoin(F.broadcast(queries))
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(cosine(F.col("v"), F.col("qv")), 6).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= 10)
-        .select("query_id", "vec_id", "cos_sim", "rk")
-    )
+    return topk_per_query(vectors.crossJoin(F.broadcast(queries)), 10)
 
 
 @register(
@@ -151,19 +183,12 @@ def sim_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     nearest to the query — the scan-pruning scale path (cell id becomes
     a partition key at 100 TB)."""
     vectors = _vectors(spark, sf_dir)
-    # Deterministic seed centroids: the 16 lowest vec_ids.  Production
-    # swaps in k-means means; the plan shape is identical.
-    centroids = (
-        vectors.orderBy("vec_id")
-        .limit(16)
-        .select(F.col("vec_id").cast("int").alias("cell_id"), F.col("v").alias("cv"))
-    )
     return ivf_topk(
         vectors.where(F.col("vec_id") != 0),
-        centroids,
+        _seed_cells(vectors),
         _query_vec(vectors),
         k=10,
-        n_probe=4,
+        n_probe=_N_PROBE,
     )
 
 
@@ -222,18 +247,13 @@ def sim_search_ivf_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned table is partitioned by cell_id so each query's probe
     prunes whole files — this is the plan an online batch ANN endpoint
     actually runs."""
-    from mapreduce_framework_spark.operators.annsearch import ivf_topk_batch
-
     vectors = _vectors(spark, sf_dir).select("vec_id", "v")
-    centroids = (
-        vectors.orderBy("vec_id")
-        .limit(16)
-        .select(F.col("vec_id").cast("int").alias("cell_id"), F.col("v").alias("cv"))
-    )
     queries = vectors.where(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
-    return ivf_topk_batch(vectors, centroids, queries, k=10, n_probe=4)
+    return ivf_topk_batch(
+        vectors, _seed_cells(vectors), queries, k=10, n_probe=_N_PROBE
+    )
 
 
 # IVF over REAL k-means centroids: stage 1 replicates the
@@ -315,11 +335,8 @@ def sim_search_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     a partition key, and probing prunes entire files — identical plan
     shape, real centroids."""
     from mapreduce_framework_spark.operators.kmeans import assign, update
-    from mapreduce_framework_spark.operators.kmeans import quantize as kquantize
 
-    qvecs = table(spark, sf_dir, "embeddings").select(
-        "vec_id", kquantize(F.col("embedding")).alias("v")
-    )
+    qvecs = _lattice(spark, sf_dir)
     seeds = qvecs.where(F.col("vec_id") < 8).select(
         F.col("vec_id").cast("int").alias("cid"), F.col("v").alias("c")
     )
@@ -375,11 +392,6 @@ def sim_search_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     retrieval; exact re-ranking on the float vectors touches only the
     candidate set (tests pin the recall of this pass vs the exact
     baseline)."""
-    from mapreduce_framework_spark.operators.annsearch import (
-        quantize,
-        quantized_topk,
-    )
-
     vectors = _vectors(spark, sf_dir).select("vec_id", "v")
     q = quantize(vectors)
     query = q.where(F.col("vec_id") == 0).select(
@@ -445,10 +457,9 @@ def sim_search_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     next to IVF (sim_search_ivf) and quantization (sim_search_quantized):
     4 hash tables × occupancy-derived sign-bit planes (8 at every
     verification SF; grows with log(corpus) past 16 384 vectors so the
-    candidate set stays bounded — round-5 occupancy control, see
-    operators/annsearch.py occupancy_planes), candidates within Hamming
-    radius 2 of the query bucket in any table, exact cosine re-rank on
-    the candidate set only.
+    candidate set stays bounded, see operators/annsearch.py
+    occupancy_planes), candidates within Hamming radius 2 of the query
+    bucket in any table, exact cosine re-rank on the candidate set only.
 
     Why it scales: signatures are ONE codegen projection pass over the
     corpus (no shuffle, integer arithmetic, no UDF); the bucket index
@@ -465,13 +476,10 @@ def sim_search_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~40% of the corpus; on clustered real-world embeddings the same
     plan prunes far harder.  tests/test_operators.py pins recall ≥ 3/10
     and a bounded candidate fraction at both verification SFs."""
-    from mapreduce_framework_spark.operators.annsearch import lsh_topk
-
-    # Eager checkpoint (round-12; guide §1.2): lsh_topk consumes its
-    # input ~5× (the occupancy count, both bucket sides, the query row,
-    # and the re-rank scan) — lazily each consumer re-ran the embedding
-    # scan + int-quantize projection.  One materialization of the
-    # skinny (vec_id, v) frame serves them all.
+    # Eager checkpoint: lsh_topk consumes its input ~5× (the occupancy
+    # count, both bucket sides, the query row, and the re-rank scan) —
+    # lazily each consumer re-ran the embedding scan + projection.  One
+    # materialization of the skinny (vec_id, v) frame serves them all.
     vectors = (
         _vectors(spark, sf_dir).select("vec_id", "v").localCheckpoint(eager=True)
     )
@@ -575,30 +583,14 @@ def sim_search_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     same top-k-per-partition cut as the brute-force key.  The re-rank path
     (exact cosine on the PQ candidates) is sim_search_topk on a
     1000×-smaller input."""
-    from mapreduce_framework_spark.operators.annsearch import (
-        pq_adc_topk,
-        pq_encode,
-        pq_subvectors,
-        pq_train,
-    )
-    from mapreduce_framework_spark.operators.kmeans import quantize as kquantize
+    return _pq_topk(spark, sf_dir, 10)
 
-    qvecs = table(spark, sf_dir, "embeddings").select(
-        "vec_id", kquantize(F.col("embedding")).alias("v")
-    )
-    # Eager checkpoint of the exploded subvector frame (round-12;
-    # guide §1.2): pq_train alone walks it 4x (seed pick, seed join,
-    # assignment, codebook mean) and the encode + query consumers add
-    # two more -- lazily each walk re-ran the embedding scan + explode.
-    # One materialization of the skinny (vec_id, m, sp, val) rows
-    # serves the whole build.
-    sub = pq_subvectors(qvecs, n_sub=4, sub_dim=16).localCheckpoint(eager=True)
-    codebook = pq_train(sub, n_seeds=8)
-    codes = pq_encode(sub, codebook).where(F.col("vec_id") != 0)
-    query_sub = sub.where(F.col("vec_id") == 0).select(
-        "m", "sp", F.col("val").alias("qval")
-    )
-    return pq_adc_topk(codes, codebook, query_sub, k=10, scale_sq=1e8)
+
+def _pq_topk(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
+    """In-plan PQ build, then the ADC top-k of vec_id 0 over every
+    other vector."""
+    sub, codebook, codes = pq_build(_lattice(spark, sf_dir))
+    return pq_adc_topk(codes.where(F.col("vec_id") != 0), codebook, _query_sub(sub), k)
 
 
 @register(
@@ -612,15 +604,13 @@ def sim_search_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,
 )
 def sim_search_pq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """sim_search_pq served from a PERSISTED index (round-8 verdict
-    task #4 — PQ joins IVF cells, LSH buckets, and MinHash bands in
-    the write-once/probe-many set): persist_pq_index trains + encodes
-    once and writes the wide code table (vec_id, c1..c3, c0) parquet-
-    partitioned by the leading code c0 with the codebook as a skinny
-    sidecar; probe_pq_index answers the query from the code scan plus
-    the broadcast LUT — the probe plan never reads a float vector
-    (ReadSchema is codes-only, pinned by tests/test_plans.py::
-    test_pq_index_probe_reads_codes_only).
+    """sim_search_pq served from a PERSISTED index: persist_pq_index
+    trains + encodes once and writes the wide code table (vec_id,
+    c1..c3, c0) parquet-partitioned by the leading code c0 with the
+    codebook as a skinny sidecar; probe_pq_index answers the query from
+    the code scan plus the broadcast LUT — the probe plan never reads a
+    float vector (ReadSchema is codes-only, pinned by
+    tests/test_plans.py::test_pq_index_probe_reads_codes_only).
 
     Scale (100 TB): this is the serving shape the in-plan key's
     docstring promises — training amortizes to zero across queries,
@@ -629,25 +619,26 @@ def sim_search_pq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     without touching the rest of the layout.  Results are bit-identical
     to sim_search_pq by construction (same lattice, same codebook,
     same ADC ranking)."""
-    from mapreduce_framework_spark.operators.annsearch import (
-        persist_pq_index,
-        pq_subvectors,
-        probe_pq_index,
+    return _pq_served(
+        spark,
+        sf_dir,
+        lambda persist: persist(user_scratch_dir("sim_search_pq_persisted")),
     )
-    from mapreduce_framework_spark.operators.kmeans import quantize as kquantize
 
-    qvecs = table(spark, sf_dir, "embeddings").select(
-        "vec_id", kquantize(F.col("embedding")).alias("v")
-    )
-    idx_dir = user_scratch_dir("sim_search_pq_persisted")
-    codes, codebook = persist_pq_index(
-        qvecs, idx_dir, n_sub=4, sub_dim=16, n_seeds=8
-    )
-    query_sub = pq_subvectors(
-        qvecs.where(F.col("vec_id") == 0), n_sub=4, sub_dim=16
-    ).select("m", "sp", F.col("val").alias("qval"))
+
+def _pq_served(spark: SparkSession, sf_dir: str, open_index) -> DataFrame:
+    """sim_search_pq answered from a persisted index.
+    ``open_index(persist)`` returns the index's (codes, codebook), where
+    ``persist(path)`` builds one at ``path`` and returns it read back.
+    The lattice is read once, for the build and the query alike: each
+    extra read is one more footer-reading job."""
+    qvecs = _lattice(spark, sf_dir)
+    codes, codebook = open_index(lambda path: persist_pq_index(qvecs, path))
     return probe_pq_index(
-        codes.where(F.col("vec_id") != 0), codebook, query_sub, k=10, scale_sq=1e8
+        codes.where(F.col("vec_id") != 0),
+        codebook,
+        _query_sub(pq_subvectors(qvecs)),
+        k=10,
     )
 
 
@@ -693,44 +684,9 @@ def sim_search_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     that makes two-stage retrieval the universal vector-serving
     architecture.  Candidate count trades recall for stage-2 cost
     without changing either plan."""
-    from mapreduce_framework_spark.operators.annsearch import (
-        pq_adc_topk,
-        pq_encode,
-        pq_subvectors,
-        pq_train,
-    )
-    from mapreduce_framework_spark.functions.vector import cosine
-    from mapreduce_framework_spark.operators.kmeans import quantize as kquantize
-
-    qvecs = table(spark, sf_dir, "embeddings").select(
-        "vec_id", kquantize(F.col("embedding")).alias("v")
-    )
-    # Eager checkpoint of the exploded subvector frame (round-12;
-    # guide §1.2): pq_train alone walks it 4x (seed pick, seed join,
-    # assignment, codebook mean) and the encode + query consumers add
-    # two more -- lazily each walk re-ran the embedding scan + explode.
-    # One materialization of the skinny (vec_id, m, sp, val) rows
-    # serves the whole build.
-    sub = pq_subvectors(qvecs, n_sub=4, sub_dim=16).localCheckpoint(eager=True)
-    codebook = pq_train(sub, n_seeds=8)
-    codes = pq_encode(sub, codebook).where(F.col("vec_id") != 0)
-    query_sub = sub.where(F.col("vec_id") == 0).select(
-        "m", "sp", F.col("val").alias("qval")
-    )
-    cand = pq_adc_topk(codes, codebook, query_sub, k=50, scale_sq=1e8).select(
-        "vec_id"
-    )
+    cand = _pq_topk(spark, sf_dir, 50).select("vec_id")
     vectors = _vectors(spark, sf_dir).select("vec_id", "v")
-    query = _query_vec(vectors)
-    return (
-        cand.join(vectors, "vec_id")
-        .crossJoin(F.broadcast(query))
-        .select(
-            "vec_id", F.round(cosine(F.col("v"), F.col("qv")), 6).alias("cos_sim")
-        )
-        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-        .limit(10)
-    )
+    return brute_force_topk(cand.join(vectors, "vec_id"), _query_vec(vectors), k=10)
 
 
 # IVF-PQ composite: the PQ oracle's replay, with the ADC scan restricted
@@ -803,67 +759,25 @@ def sim_search_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiers' losses — production recovers it with n_probe and the
     exact re-rank stage (sim_search_pq_rerank), both orthogonal knobs
     on this same plan."""
-    from mapreduce_framework_spark.operators.kmeans import quantize as kquantize
-
-    qvecs = table(spark, sf_dir, "embeddings").select(
-        "vec_id", kquantize(F.col("embedding")).alias("v")
-    )
-    return ivf_pq_frame(_vectors(spark, sf_dir), qvecs)
+    return ivf_pq_frame(_vectors(spark, sf_dir), _lattice(spark, sf_dir))
 
 
-def ivf_pq_frame(
-    vectors: DataFrame,
-    qvecs: DataFrame,
-    n_cells: int = 16,
-    n_probe: int = 4,
-    k: int = 10,
-) -> DataFrame:
+def ivf_pq_frame(vectors: DataFrame, qvecs: DataFrame) -> DataFrame:
     """The IVF-PQ composite on explicit inputs — ``vectors`` is the
     float view (vec_id, v array<double>) used by the coarse quantizer,
     ``qvecs`` the integer lattice (vec_id, v array<bigint>) the PQ half
     trains/encodes on.  Shared with tools/scale_probe.py so the probe
     times the real operator."""
-    from mapreduce_framework_spark.operators.annsearch import (
-        assign_cells,
-        pq_adc_topk,
-        pq_encode,
-        pq_subvectors,
-        pq_train,
+    centroids = _seed_cells(vectors)
+    probed = probe_cells(centroids, _query_vec(vectors), _N_PROBE)
+    members = (
+        assign_cells(vectors.where(F.col("vec_id") != 0), centroids)
+        .join(F.broadcast(probed), "cell_id")
+        .select("vec_id")
     )
-    from mapreduce_framework_spark.functions.vector import cosine
-
-    centroids = (
-        vectors.orderBy("vec_id")
-        .limit(n_cells)
-        .select(F.col("vec_id").cast("int").alias("cell_id"), F.col("v").alias("cv"))
-    )
-    assigned = assign_cells(vectors.where(F.col("vec_id") != 0), centroids)
-    probe_cells = (
-        centroids.crossJoin(F.broadcast(_query_vec(vectors)))
-        .select("cell_id", cosine(F.col("cv"), F.col("qv")).alias("_cs"))
-        .orderBy(F.desc("_cs"), F.asc("cell_id"))
-        .limit(n_probe)
-        .select("cell_id")
-    )
-    members = assigned.join(F.broadcast(probe_cells), "cell_id").select("vec_id")
-
-    # Eager checkpoint of the exploded subvector frame (round-12;
-    # guide §1.2): pq_train alone walks it 4x (seed pick, seed join,
-    # assignment, codebook mean) and the encode + query consumers add
-    # two more -- lazily each walk re-ran the embedding scan + explode.
-    # One materialization of the skinny (vec_id, m, sp, val) rows
-    # serves the whole build.
-    sub = pq_subvectors(qvecs, n_sub=4, sub_dim=16).localCheckpoint(eager=True)
-    codebook = pq_train(sub, n_seeds=8)
-    codes = (
-        pq_encode(sub, codebook)
-        .where(F.col("vec_id") != 0)
-        .join(members, "vec_id")
-    )
-    query_sub = sub.where(F.col("vec_id") == 0).select(
-        "m", "sp", F.col("val").alias("qval")
-    )
-    return pq_adc_topk(codes, codebook, query_sub, k=k, scale_sq=1e8)
+    sub, codebook, codes = pq_build(qvecs)
+    codes = codes.where(F.col("vec_id") != 0).join(members, "vec_id")
+    return pq_adc_topk(codes, codebook, _query_sub(sub), 10)
 
 
 @register(
@@ -887,34 +801,29 @@ def sim_search_ivf_pq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     a parquet layout; bit-identical results to sim_search_ivf_pq by
     construction (pinned by tests/test_plans.py::
     test_ivf_pq_index_probe_prunes_and_reads_codes_only)."""
-    from mapreduce_framework_spark.operators.annsearch import (
-        persist_ivf_pq_index,
-        pq_subvectors,
-        probe_ivf_pq_index,
+    return _ivf_pq_served(
+        spark,
+        sf_dir,
+        lambda persist: persist(user_scratch_dir("sim_search_ivf_pq_persisted")),
     )
-    from mapreduce_framework_spark.operators.kmeans import quantize as kquantize
 
+
+def _ivf_pq_served(spark: SparkSession, sf_dir: str, open_index) -> DataFrame:
+    """sim_search_ivf_pq answered from a cell-partitioned persisted
+    index; ``open_index`` as in ``_pq_served``."""
     vectors = _vectors(spark, sf_dir)
-    centroids = (
-        vectors.orderBy("vec_id")
-        .limit(16)
-        .select(F.col("vec_id").cast("int").alias("cell_id"), F.col("v").alias("cv"))
+    centroids = _seed_cells(vectors)
+    cells = assign_cells(vectors.where(F.col("vec_id") != 0), centroids).select(
+        "vec_id", "cell_id"
     )
-    qvecs = table(spark, sf_dir, "embeddings").select(
-        "vec_id", kquantize(F.col("embedding")).alias("v")
-    )
-    idx_dir = user_scratch_dir("sim_search_ivf_pq_persisted")
-    codes, codebook = persist_ivf_pq_index(
-        vectors.where(F.col("vec_id") != 0),
-        qvecs,
-        centroids,
-        idx_dir,
-    )
-    query_sub = pq_subvectors(
-        qvecs.where(F.col("vec_id") == 0), n_sub=4, sub_dim=16
-    ).select("m", "sp", F.col("val").alias("qval"))
-    return probe_ivf_pq_index(
-        codes, codebook, centroids, _query_vec(vectors), query_sub
+    qvecs = _lattice(spark, sf_dir)
+    codes, codebook = open_index(lambda path: persist_pq_index(qvecs, path, cells))
+    probed = probe_cells(centroids, _query_vec(vectors), _N_PROBE)
+    return probe_pq_index(
+        codes.join(F.broadcast(probed), "cell_id"),
+        codebook,
+        _query_sub(pq_subvectors(qvecs)),
+        k=10,
     )
 
 
@@ -966,40 +875,36 @@ def sim_search_doc_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _per_sf_cached_index(
-    spark: SparkSession, sf_dir: str, kind: str, params: str, build
-):
-    """Per-SF build-once cache for a persisted ANN index (round-8
-    verdict task #4 — the probe-only steady-state lane): keyed by
-    (sf, embeddings file identity, index kind) — a pure function of
-    immutable inputs, exactly _spill_corpus's contract
+def _per_sf_cached_index(sf_dir: str, kind: str, build) -> str:
+    """Per-SF build-once cache for a persisted ANN index: keyed by
+    (sf, embeddings file identity, index kind, PQ geometry, layout
+    version) — a pure function of immutable inputs and of the code that
+    writes the index, exactly _spill_corpus's contract
     (queries/mapreduce_job.py) — staged privately and atomically
     renamed into place, so concurrent sessions race safely and readers
     only ever see a complete index.  The *_persisted keys keep pricing
-    build+probe per invocation; the *_probe keys below read this cache,
-    so bench's min-of-3 records pure serving latency on a prebuilt
-    index — the number that matters at 100 TB, where the build
-    amortizes across every query."""
+    build+probe per invocation; the *_probe keys read this cache, so
+    bench's min-of-3 records pure serving latency on a prebuilt index —
+    the number that matters at 100 TB, where the build amortizes across
+    every query."""
     import os
 
     from mapreduce_framework_spark.io import cache_sf_token, publish_cached
 
     st = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
-    # ``params`` folds every index-build parameter into the key (the
-    # adjacency cache's k/n_buckets convention): without it, changing
-    # n_sub/n_seeds/centroids would silently serve a stale index built
-    # with the OLD parameters — round-9 review finding.
-    sf_base = cache_sf_token(sf_dir)
-    ident = f"{sf_base}_{params}_{st.st_size}_{st.st_mtime_ns}"
-    # family = kind + SF + params (the coexistence axes — round-10
-    # ADVICE: two concurrently-used parameterizations of one SF must
-    # not reap each other); only superseded FILE-IDENTITY generations
-    # are reaped by the publish sweep after the cross-session age
-    # guard (io.reap_superseded).
+    # The family holds the axes that may coexist (kind, SF, geometry):
+    # two parameterizations of one SF must not reap each other.  Only
+    # superseded file-identity or layout-version generations are reaped
+    # by the publish sweep, after the cross-session age guard
+    # (io.reap_superseded).
+    family = (
+        f"mfs_idx_cache_{kind}_{cache_sf_token(sf_dir)}"
+        f"_ns{PQ_SUB}sd{PQ_SUB_DIM}se{PQ_SEEDS}"
+    )
     return publish_cached(
-        f"mfs_idx_cache_{kind}_{ident}",
+        f"{family}_v{PQ_INDEX_VERSION}_{st.st_size}_{st.st_mtime_ns}",
         build,
-        family=f"mfs_idx_cache_{kind}_{sf_base}_{params}",
+        family=family,
     )
 
 
@@ -1020,30 +925,12 @@ def sim_search_pq_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     a 100 TB deployment gates on, while sim_search_pq_persisted keeps
     pricing the full build+probe path.  Results are bit-identical to
     sim_search_pq / sim_search_pq_persisted by construction."""
-    from mapreduce_framework_spark.operators.annsearch import (
-        persist_pq_index,
-        pq_subvectors,
-        probe_pq_index,
-    )
-    from mapreduce_framework_spark.operators.kmeans import quantize as kquantize
-
-    qvecs = table(spark, sf_dir, "embeddings").select(
-        "vec_id", kquantize(F.col("embedding")).alias("v")
-    )
-    dest = _per_sf_cached_index(
+    return _pq_served(
         spark,
         sf_dir,
-        "pq",
-        "ns4sd16se8",
-        lambda path: persist_pq_index(qvecs, path, n_sub=4, sub_dim=16, n_seeds=8),
-    )
-    codes = spark.read.parquet(f"{dest}/codes")
-    codebook = spark.read.parquet(f"{dest}/codebook")
-    query_sub = pq_subvectors(
-        qvecs.where(F.col("vec_id") == 0), n_sub=4, sub_dim=16
-    ).select("m", "sp", F.col("val").alias("qval"))
-    return probe_pq_index(
-        codes.where(F.col("vec_id") != 0), codebook, query_sub, k=10, scale_sq=1e8
+        lambda persist: read_pq_index(
+            spark, _per_sf_cached_index(sf_dir, "pq", persist)
+        ),
     )
 
 
@@ -1060,36 +947,10 @@ def sim_search_ivf_pq_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     directories × a codes-only ReadSchema — on a prebuilt FAISS-IVFPQ-
     shaped layout.  Bit-identical results to sim_search_ivf_pq by
     construction."""
-    from mapreduce_framework_spark.operators.annsearch import (
-        persist_ivf_pq_index,
-        pq_subvectors,
-        probe_ivf_pq_index,
-    )
-    from mapreduce_framework_spark.operators.kmeans import quantize as kquantize
-
-    vectors = _vectors(spark, sf_dir)
-    centroids = (
-        vectors.orderBy("vec_id")
-        .limit(16)
-        .select(F.col("vec_id").cast("int").alias("cell_id"), F.col("v").alias("cv"))
-    )
-    qvecs = table(spark, sf_dir, "embeddings").select(
-        "vec_id", kquantize(F.col("embedding")).alias("v")
-    )
-    dest = _per_sf_cached_index(
+    return _ivf_pq_served(
         spark,
         sf_dir,
-        "ivfpq",
-        "c16ns4sd16",
-        lambda path: persist_ivf_pq_index(
-            vectors.where(F.col("vec_id") != 0), qvecs, centroids, path
+        lambda persist: read_pq_index(
+            spark, _per_sf_cached_index(sf_dir, f"ivfpq_c{_N_CELLS}", persist)
         ),
-    )
-    codes = spark.read.parquet(f"{dest}/codes")
-    codebook = spark.read.parquet(f"{dest}/codebook")
-    query_sub = pq_subvectors(
-        qvecs.where(F.col("vec_id") == 0), n_sub=4, sub_dim=16
-    ).select("m", "sp", F.col("val").alias("qval"))
-    return probe_ivf_pq_index(
-        codes, codebook, centroids, _query_vec(vectors), query_sub
     )

@@ -828,7 +828,7 @@ def test_pq_recall_and_code_compression(spark):
         "vec_id", kquantize(F.col("embedding")).alias("v")
     )
     n = qvecs.count()
-    codes = pq_encode(pq_subvectors(qvecs, 4, 16), pq_train(pq_subvectors(qvecs, 4, 16), 8))
+    codes = pq_encode(pq_subvectors(qvecs), pq_train(pq_subvectors(qvecs)))
     stats = codes.agg(
         F.count(F.lit(1)).alias("rows"),
         F.countDistinct("vec_id").alias("vecs"),
@@ -840,8 +840,8 @@ def test_pq_recall_and_code_compression(spark):
 
 
 def test_pq_subvectors_rejects_ragged_vector(spark):
-    """A vector whose dim != n_sub*sub_dim must FAIL at execution, not
-    silently produce a ragged trailing subspace (round-7 ADVICE)."""
+    """A vector whose dim != PQ_SUB*PQ_SUB_DIM must FAIL at execution,
+    not silently produce a ragged trailing subspace."""
     import pytest
     from pyspark.errors.exceptions.captured import SparkRuntimeException
 
@@ -851,12 +851,12 @@ def test_pq_subvectors_rejects_ragged_vector(spark):
         [(1, list(range(60)))], "vec_id long, v array<bigint>"
     )
     with pytest.raises(SparkRuntimeException, match="expected dim 64"):
-        pq_subvectors(bad, n_sub=4, sub_dim=16).collect()
+        pq_subvectors(bad).collect()
 
 
 def test_pq_train_seeds_from_observed_ids(spark):
-    """Seeding must use the n_seeds SMALLEST OBSERVED ids, not literal
-    ids 0..n-1 (round-7 ADVICE): on a corpus whose ids start at 1000
+    """Seeding must use the PQ_SEEDS SMALLEST OBSERVED ids, not literal
+    ids 0..n-1: on a corpus whose ids start at 1000
     the codebook still trains 8 full codewords per subspace, and the
     codebook is identical to the dense-id corpus's (same vectors, ids
     shifted)."""
@@ -868,8 +868,8 @@ def test_pq_train_seeds_from_observed_ids(spark):
         "vec_id", kquantize(F.col("embedding")).alias("v")
     )
     shifted = qvecs.select((F.col("vec_id") + 1000).alias("vec_id"), "v")
-    cb_dense = pq_train(pq_subvectors(qvecs, 4, 16), 8)
-    cb_shift = pq_train(pq_subvectors(shifted, 4, 16), 8)
+    cb_dense = pq_train(pq_subvectors(qvecs))
+    cb_shift = pq_train(pq_subvectors(shifted))
     per_m = (
         cb_shift.groupBy("m").agg(F.countDistinct("code").alias("k")).collect()
     )

@@ -847,11 +847,11 @@ def test_pq_index_probe_reads_codes_only(spark, tmp_path):
         "vec_id", kquantize(F.col("embedding")).alias("v")
     )
     codes, codebook = persist_pq_index(qvecs, str(tmp_path / "pq_idx"))
-    query_sub = pq_subvectors(qvecs.where(F.col("vec_id") == 0), 4, 16).select(
+    query_sub = pq_subvectors(qvecs.where(F.col("vec_id") == 0)).select(
         "m", "sp", F.col("val").alias("qval")
     )
     probe = probe_pq_index(
-        codes.where(F.col("vec_id") != 0), codebook, query_sub, k=10, scale_sq=1e8
+        codes.where(F.col("vec_id") != 0), codebook, query_sub, k=10
     )
 
     # Every scan on the PROBE side reads either code columns or the
@@ -874,14 +874,13 @@ def test_pq_index_probe_reads_codes_only(spark, tmp_path):
     assert (tmp_path / "pq_idx" / "codes" / "c0=0").exists()
 
     # Bit-identical ranking vs the in-plan path.
-    sub = pq_subvectors(qvecs, 4, 16)
-    cb = pq_train(sub, 8)
+    sub = pq_subvectors(qvecs)
+    cb = pq_train(sub)
     inplan = pq_adc_topk(
         pq_encode(sub, cb).where(F.col("vec_id") != 0),
         cb,
         query_sub,
         k=10,
-        scale_sq=1e8,
     )
     assert sorted(map(tuple, probe.collect())) == sorted(
         map(tuple, inplan.collect())
@@ -1020,9 +1019,11 @@ def test_ivf_pq_index_probe_prunes_and_reads_codes_only(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from mapreduce_framework_spark.operators.annsearch import (
-        persist_ivf_pq_index,
+        assign_cells,
+        persist_pq_index,
         pq_subvectors,
-        probe_ivf_pq_index,
+        probe_cells,
+        probe_pq_index,
     )
     from mapreduce_framework_spark.operators.kmeans import quantize as kquantize
     from mapreduce_framework_spark.plans import formatted_plan, read_schema_columns
@@ -1041,17 +1042,16 @@ def test_ivf_pq_index_probe_prunes_and_reads_codes_only(spark, tmp_path):
     qvecs = spark.read.parquet(os.path.join(SF_DIR, "embeddings.parquet")).select(
         "vec_id", kquantize(F.col("embedding")).alias("v")
     )
-    codes, codebook = persist_ivf_pq_index(
-        vectors.where(F.col("vec_id") != 0),
-        qvecs,
-        centroids,
-        str(tmp_path / "ivfpq_idx"),
+    cells = assign_cells(vectors.where(F.col("vec_id") != 0), centroids).select(
+        "vec_id", "cell_id"
     )
-    query_sub = pq_subvectors(
-        qvecs.where(F.col("vec_id") == 0), n_sub=4, sub_dim=16
-    ).select("m", "sp", F.col("val").alias("qval"))
-    res = probe_ivf_pq_index(
-        codes, codebook, centroids, _query_vec(vectors), query_sub
+    codes, codebook = persist_pq_index(qvecs, str(tmp_path / "ivfpq_idx"), cells=cells)
+    query_sub = pq_subvectors(qvecs.where(F.col("vec_id") == 0)).select(
+        "m", "sp", F.col("val").alias("qval")
+    )
+    probed = probe_cells(centroids, _query_vec(vectors), 4)
+    res = probe_pq_index(
+        codes.join(F.broadcast(probed), "cell_id"), codebook, query_sub, k=10
     )
 
     plan = formatted_plan(res)

@@ -83,6 +83,12 @@ ENGINE_RULES = (
         {"operators/minhash.py"},
         set(),
     ),
+    (
+        "PQ training or encoding outside operators/annsearch.py",
+        r"\bpq_(train|encode)\(",
+        {"operators/annsearch.py"},
+        set(),
+    ),
 )
 
 
@@ -168,8 +174,9 @@ def test_queries_restore_confs_and_session_state(spark):
 def test_engine_patterns_go_through_their_helper():
     """Engine code writes session confs only through scoped_confs
     (session.py), takes scratch directories only from
-    io.user_scratch_dir, and intersects token sets only in the
-    operators/minhash.py kernels; see ENGINE_RULES."""
+    io.user_scratch_dir, intersects token sets only in the
+    operators/minhash.py kernels, and trains or encodes PQ codes only
+    in operators/annsearch.py; see ENGINE_RULES."""
     hits = []
     for path in sorted(PKG.rglob("*.py")):
         rel = path.relative_to(PKG).as_posix()

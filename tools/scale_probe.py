@@ -494,20 +494,14 @@ def build_tiers(spark, small: int, big: int) -> dict[str, dict[int, callable]]:
         return forced_count(hist, [r"ObjectHashAggregate", r"HashAggregate"])
 
     def t_pq(n):
-        from mapreduce_framework_spark.operators.annsearch import (
-            pq_adc_topk,
-            pq_encode,
-            pq_subvectors,
-            pq_train,
-        )
+        from mapreduce_framework_spark.operators.annsearch import pq_adc_topk, pq_build
         from mapreduce_framework_spark.operators.kmeans import quantize
+        from mapreduce_framework_spark.queries.similarity import _query_sub
 
         qv = corpus("vectors", n).select("vec_id", quantize(F.col("v")).alias("v"))
-        sub = pq_subvectors(qv, 4, 16)
-        cb = pq_train(sub, 8)
-        codes = pq_encode(sub, cb).where(F.col("vec_id") != 0)
-        q = sub.where(F.col("vec_id") == 0).select("m", "sp", F.col("val").alias("qval"))
-        return forced_count(pq_adc_topk(codes, cb, q, k=10, scale_sq=1e8), [r"HashAggregate"])
+        sub, cb, codes = pq_build(qv)
+        codes = codes.where(F.col("vec_id") != 0)
+        return forced_count(pq_adc_topk(codes, cb, _query_sub(sub), k=10), [r"HashAggregate"])
 
     def t_ivf_pq(n):
         from mapreduce_framework_spark.operators.kmeans import quantize
