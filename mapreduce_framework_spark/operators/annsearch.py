@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 
 from mapreduce_framework_spark.functions.vector import cosine
 from mapreduce_framework_spark.operators.kmeans import LATTICE_SCALE
+from mapreduce_framework_spark.operators.materialize import checkpoint
 
 
 def brute_force_topk(vectors: DataFrame, query: DataFrame, k: int = 10) -> DataFrame:
@@ -539,9 +540,9 @@ def pq_train(sub: DataFrame) -> DataFrame:
     # The codebook is hundreds of rows, but its lazy plan embeds three
     # passes over the corpus-sized ``sub``, and every caller consumes it
     # at least twice (pq_encode's broadcast + the ADC LUT, or the index
-    # write + the codebook sidecar write).  One eager localCheckpoint
+    # write + the codebook sidecar write).  One eager checkpoint
     # runs training once: ~3 corpus scans per build instead of ~5.
-    return codebook.localCheckpoint(eager=True)
+    return checkpoint(codebook)
 
 
 def pq_encode(sub: DataFrame, codebook: DataFrame) -> DataFrame:
@@ -573,7 +574,7 @@ def pq_build(qvecs: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
     ``sub`` is checkpointed eagerly: training walks it four times (seed
     pick, seed join, assignment, codebook mean) and encoding once more;
     lazily each walk re-ran the embedding scan and the explode."""
-    sub = pq_subvectors(qvecs).localCheckpoint(eager=True)
+    sub = checkpoint(pq_subvectors(qvecs))
     codebook = pq_train(sub)
     return sub, codebook, pq_encode(sub, codebook)
 

@@ -23,21 +23,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# iter_checkpoint is re-exported: it lived here before iterate did.
-from mapreduce_framework_spark.operators.materialize import (  # noqa: F401
-    iter_checkpoint,
-    iterate,
-)
+from mapreduce_framework_spark.operators.materialize import iterate
+
+# A runaway bound on propagation rounds, not a tuning knob: rounds =
+# component diameter, a handful for near-dup clusters.
+_MAX_ROUNDS = 20
 
 
-def connected_components(
-    edges: DataFrame,
-    src: str,
-    dst: str,
-    max_iter: int = 20,
-    reliable: bool = False,
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
+def connected_components(edges: DataFrame, src: str, dst: str) -> DataFrame:
     """DataFrame[node, component] — component = min node id reachable.
 
     ``edges`` is an undirected pair list (each pair once is fine).
@@ -63,13 +56,11 @@ def connected_components(
     labels = iterate(
         sym.select("u").distinct().select("u", F.col("u").alias("component")),
         _propagate,
-        max_iter,
+        _MAX_ROUNDS,
         pinned=sym,
         partition_by="v",
         final_checkpoint=True,
         changed="_changed",
-        reliable=reliable,
-        checkpoint_dir=checkpoint_dir,
     )
     return labels.select(F.col("u").alias("node"), "component")
 

@@ -1,27 +1,37 @@
-"""Materialization: the size-gated checkpoint and the iterative loop.
+"""Materialization: the one module that decides whether and where a
+frame is materialized, and the iterative loop.
+
+:func:`checkpoint` is the engine's only eager materialization
+(tests/test_session_state.py lints for it).  Where the bytes go is one
+deployment switch, read at call time:
+
+- ``$SPARK_GRAFT_CKPT_RELIABLE_DIR`` set → ``checkpoint(eager=True)``
+  under that dir on the reliable FS: the blocks survive executor loss;
+- unset → ``localCheckpoint(eager=True)``: executor storage, fastest,
+  but unreplicated — an executor loss kills every frame descended from
+  its blocks.
+
+Results are identical either way, pinned by
+tests/test_scale_operators.py::test_reliable_checkpoint_identical.
 
 :func:`sized_local_checkpoint` guards frames several consumers
 re-derive.  At bench scale (inputs of a few MB) a materialization job
 plus disk round-trip costs MORE than the re-scans it saves
 (quality_lm_perplexity 0.68×, dedup_ladder_funnel 0.78×, dedup_minhash
 0.80× when every site checkpointed unconditionally), while at real scale
-the same sites save corpus passes; and at 100 TB an UNBOUNDED
-``localCheckpoint`` puts a corpus-sized, unreplicated frame on
-executor-local disk.  One gate on Catalyst's driver-side size estimate
-(no job) resolves both ends:
+the same sites save corpus passes.  One gate on Catalyst's driver-side
+size estimate (no job) has two outcomes:
 
 - estimate < ``$SPARK_GRAFT_CKPT_MIN_BYTES`` (default 64 MiB: below it a
-  re-scan of page-cached parquet is single-digit ms) → LAZY,
-- estimate > ``$SPARK_GRAFT_CKPT_MAX_BYTES`` (default 64 GiB: size to the
-  smallest per-executor scratch volume) → LAZY, or ``checkpoint()`` to
-  ``$SPARK_GRAFT_CKPT_RELIABLE_DIR`` if set,
-- otherwise → ``localCheckpoint(eager=True)``.
+  re-scan of page-cached parquet is single-digit ms) → LAZY;
+- otherwise → :func:`checkpoint`.
 
-Results are identical on every path, pinned by
-tests/test_operators.py::test_sized_checkpoint_paths_identical.
+An overshooting estimate therefore fails toward materializing; a
+deployment keeps large frames off executor disk with the reliable dir.
+Pinned by tests/test_operators.py::test_sized_checkpoint_paths_identical.
 
 :func:`iterate` is the driver loop of the iterative operators, with
-:func:`iter_checkpoint` as its lineage truncation.
+:func:`checkpoint` as its lineage truncation.
 """
 
 from __future__ import annotations
@@ -35,7 +45,6 @@ from pyspark.sql import functions as F
 from mapreduce_framework_spark.session import scoped_confs
 
 _MIN_DEFAULT = 64 << 20  # 64 MiB
-_MAX_DEFAULT = 64 << 30  # 64 GiB
 # A pinned loop targets ~4 MiB of shuffle per partition, at ~8
 # serialized bytes per (long) column of the pinned frame.
 _LOOP_PART_BYTES = 4 << 20
@@ -47,9 +56,9 @@ def plan_size_estimate(df: DataFrame) -> int:
     plan — driver-side arithmetic over file sizes and operator
     heuristics, no Spark job.  An ESTIMATE: joins/explodes propagate
     multiplicatively and can overshoot by orders of magnitude (a 19 MiB
-    join output has estimated at 3.5 TB).  That does NOT fail safe for
-    this gate: an overshoot past ``max_bytes`` turns materialization
-    OFF, returning the frame lazy (or sending it to the reliable dir)."""
+    join output has estimated at 3.5 TB).  The gate only compares it
+    against a lower bound, so an overshoot materializes a frame that
+    could have stayed lazy, never the reverse."""
     stats = df._jdf.queryExecution().optimizedPlan().stats()
     size = stats.sizeInBytes()
     # py4j maps scala.math.BigInt to a Python int already; older
@@ -57,60 +66,37 @@ def plan_size_estimate(df: DataFrame) -> int:
     return size if isinstance(size, int) else int(size.toString())
 
 
-def sized_local_checkpoint(
-    df: DataFrame,
-    *,
-    min_bytes: int | None = None,
-    max_bytes: int | None = None,
-) -> DataFrame:
-    """Eagerly materialize ``df`` iff its estimated size lands in
-    [min_bytes, max_bytes] — see module docstring for the rationale and
-    the env overrides (``SPARK_GRAFT_CKPT_MIN_BYTES`` /
-    ``SPARK_GRAFT_CKPT_MAX_BYTES`` / ``SPARK_GRAFT_CKPT_RELIABLE_DIR``)."""
+def sized_local_checkpoint(df: DataFrame, *, min_bytes: int | None = None) -> DataFrame:
+    """``df`` unchanged if its estimated size is below ``min_bytes``
+    (default ``$SPARK_GRAFT_CKPT_MIN_BYTES``), else :func:`checkpoint`
+    of it — see the module docstring."""
     if min_bytes is None:
         min_bytes = int(os.environ.get("SPARK_GRAFT_CKPT_MIN_BYTES", _MIN_DEFAULT))
-    if max_bytes is None:
-        max_bytes = int(os.environ.get("SPARK_GRAFT_CKPT_MAX_BYTES", _MAX_DEFAULT))
-    est = plan_size_estimate(df)
-    if est < min_bytes:
+    if plan_size_estimate(df) < min_bytes:
         return df
-    if est > max_bytes:
-        reliable_dir = os.environ.get("SPARK_GRAFT_CKPT_RELIABLE_DIR")
-        if reliable_dir:
-            return iter_checkpoint(df, reliable=True, checkpoint_dir=reliable_dir)
-        return df
-    return df.localCheckpoint(eager=True)
+    return checkpoint(df)
 
 
-def iter_checkpoint(
-    df: DataFrame, reliable: bool = False, checkpoint_dir: str | None = None
-) -> DataFrame:
-    """Lineage-truncating materialization for iterative operators:
-    ``localCheckpoint`` (executor storage — fastest, but an executor loss
-    kills every round descended from its blocks) or, with
-    ``reliable=True``, ``checkpoint()`` to the SparkContext's checkpoint
-    dir (set from ``checkpoint_dir`` if given) on the reliable FS.
-    Bit-identical either way (tests/test_scale_operators.py::
-    test_reliable_checkpoint_identical)."""
-    if not reliable:
+def checkpoint(df: DataFrame) -> DataFrame:
+    """Eagerly materialize ``df`` and truncate its lineage: under
+    ``$SPARK_GRAFT_CKPT_RELIABLE_DIR`` if it is set, else in executor
+    storage (module docstring)."""
+    reliable_dir = os.environ.get("SPARK_GRAFT_CKPT_RELIABLE_DIR")
+    if not reliable_dir:
         return df.localCheckpoint(eager=True)
     sc = df.sparkSession.sparkContext
-    if checkpoint_dir is not None:
-        current = sc.getCheckpointDir()
-        # The dir is SparkContext-global; honor an explicit request to
-        # point somewhere else rather than silently writing to whatever
-        # an earlier caller set.  Spark resolves the dir to a run-scoped
-        # subdirectory, so comparing the prefix is the right idempotence
-        # test.
-        if current is None or not current.startswith(checkpoint_dir):
-            sc.setCheckpointDir(checkpoint_dir)
-    if sc.getCheckpointDir() is None:
-        raise ValueError(
-            "reliable=True needs a checkpoint dir: pass checkpoint_dir= or "
-            "call sparkContext.setCheckpointDir() first"
-        )
+    path = sc._jvm.org.apache.hadoop.fs.Path(reliable_dir)
+    prefix = path.getFileSystem(sc._jsc.hadoopConfiguration()).makeQualified(path)
+    current = sc.getCheckpointDir()
+    # The dir is SparkContext-global; honor the switch rather than
+    # silently writing to whatever an earlier caller set.  Spark
+    # resolves the dir to a qualified (scheme-prefixed), run-scoped
+    # subdirectory, so comparing the qualified prefix is the right
+    # idempotence test: each re-point creates another subdirectory.
+    if current is None or not current.startswith(f"{prefix.toString()}/"):
+        sc.setCheckpointDir(reliable_dir)
     # NOTE: non-streaming checkpoint() data is NOT cleaned up by Spark;
-    # long-running reliable jobs should point checkpoint_dir at a
+    # long-running deployments should point the reliable dir at a
     # TTL'd/lifecycle-managed location (SCALE.md §Recovery).
     return df.checkpoint(eager=True)
 
@@ -125,14 +111,12 @@ def iterate(
     checkpoint_every: int | None = 1,
     final_checkpoint: bool = False,
     changed: str | None = None,
-    reliable: bool = False,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """``state = step(state, pinned)`` for up to ``rounds`` rounds — the
     chain-the-same-MapReduce-N-times loop of pagerank, kcore, BFS and
     connected components.  It iterates ROUNDS, never rows.
 
-    - Cadence: ``iter_checkpoint`` after every ``checkpoint_every``-th
+    - Cadence: :func:`checkpoint` after every ``checkpoint_every``-th
       round (``None``: never — one lazy unrolled plan), never after the
       last round unless ``final_checkpoint``.
     - Convergence: ``changed`` names a boolean state column; each
@@ -194,7 +178,7 @@ def iterate(
                     obs = Observation()
                     n_changed = F.count(F.when(F.col(changed), 1)).alias("n")
                     state = state.observe(obs, n_changed)
-                state = iter_checkpoint(state, reliable, checkpoint_dir)
+                state = checkpoint(state)
                 if raw is not loop_frame:
                     # The checkpoint loaded the partitioned copy.
                     raw.unpersist()

@@ -4,7 +4,7 @@ Algorithm (standard MinHash/LSH, cf. Broder '97; ClusterJoin VLDB'14 for
 the partitioned-candidate-join framing in PAPERS.md):
 
 1. token hashes: explode the shingle arrays and ``xxhash64`` each
-   shingle string ONCE; the n_hashes family is n seeded re-hashes of
+   shingle string ONCE; the N_HASHES family is n seeded re-hashes of
    that 8-byte value, not n string scans.
 2. signature: ``groupBy(doc).agg(min(rehash_i) …)`` — 64 min columns
    inside ONE whole-stage-codegen HashAggregate.  Map-side partial
@@ -22,12 +22,12 @@ the partitioned-candidate-join framing in PAPERS.md):
    scan of the corpus, no candidate self-join.
 
 Scale posture: the all-pairs O(n²) never materializes — the shuffle is
-O(n · n_bands) rows, candidate buckets are bounded by collision rate,
+O(n · N_BANDS) rows, candidate buckets are bounded by collision rate,
 and the verify join touches only candidates.  Skewed buckets
-(e.g. boilerplate shingles) are AQE-splittable; the `max_bucket` cap
+(e.g. boilerplate shingles) are AQE-splittable; the `MAX_BUCKET` cap
 guards pathological collisions.
 
-Probability: with n_hashes=64, bands=16×4, P(candidate) ≈
+Probability: with N_HASHES=64, bands=16×4, P(candidate) ≈
 1-(1-j⁴)¹⁶ — ~50% at j≈0.55, >99% at j≥0.8 — the classic S-curve for a
 0.7-0.8 threshold.
 """
@@ -37,15 +37,26 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-def band_buckets(
-    df: DataFrame,
-    id_col: str,
-    tokens_col: str,
-    n_hashes: int = 64,
-    n_bands: int = 16,
-) -> DataFrame:
+# The LSH geometry.  A persisted band index and every probe of it must
+# agree on it, so it is one set of constants, not per-call options.
+N_HASHES = 64
+N_BANDS = 16
+# Buckets of the persisted index table, sized by index volume
+# (corpus_docs · N_BANDS rows of 3 longs): at 100 TB use thousands.  The
+# count must stay fixed across daily appends — the bucketing contract
+# `join_bucketed` demonstrates.
+INDEX_BUCKETS = 8
+# Drops degenerate candidate buckets (a bucket of k docs yields k²
+# pairs).  It must stay well above the largest LEGITIMATE duplicate
+# cluster — a cluster of k near-identical docs shares most band
+# buckets, and pruning them silently loses true pairs: this bounds
+# bucket blowup at ~1e10 comparisons while tolerating 1e5-doc clusters.
+MAX_BUCKET = 100_000
+
+
+def band_buckets(df: DataFrame, id_col: str, tokens_col: str) -> DataFrame:
     """DataFrame(_id, band_id, band_hash): the LSH banding index rows
-    for each document — n_bands rows per doc, each hashing r adjacent
+    for each document — N_BANDS rows per doc, each hashing r adjacent
     minhashes.  This IS the persistable incremental-dedup index: at
     100 TB the corpus's band rows live in a bucketed table partitioned
     by (band_id, band_hash) and new batches probe it with an equi-join,
@@ -63,7 +74,7 @@ def band_buckets(
     whole array expression inlined — the shingle pipeline then runs
     twice per row, once in re-inlined (split-per-element_at) form.
     Measured 6.2s → 0.2s on this stage at sf0.1."""
-    rows_per_band = n_hashes // n_bands
+    rows_per_band = N_HASHES // N_BANDS
     ex = (
         df.select(F.col(id_col).alias("_id"), F.explode_outer(F.col(tokens_col)).alias("_t"))
         .where(F.col("_t").isNotNull())
@@ -72,7 +83,7 @@ def band_buckets(
     mins = ex.groupBy("_id").agg(
         *[
             F.min(F.xxhash64(F.col("_h"), F.lit(i))).alias(f"_m{i}")
-            for i in range(n_hashes)
+            for i in range(N_HASHES)
         ]
     )
     band_arr = F.array(
@@ -83,7 +94,7 @@ def band_buckets(
                     *[F.col(f"_m{b * rows_per_band + r}") for r in range(rows_per_band)]
                 ).alias("band_hash"),
             )
-            for b in range(n_bands)
+            for b in range(N_BANDS)
         ]
     )
     return mins.select("_id", F.explode(band_arr).alias("b")).select(
@@ -97,9 +108,6 @@ def persist_band_index(
     tokens_col: str,
     table_name: str,
     path: str,
-    n_hashes: int = 64,
-    n_bands: int = 16,
-    n_buckets: int = 8,
 ) -> DataFrame:
     """Materialize the corpus's LSH band rows as a BUCKETED (and
     bucket-sorted) table on (band_id, band_hash) — the persisted
@@ -109,16 +117,13 @@ def persist_band_index(
     exchange (pinned in tests/test_plans.py), so a daily admission job
     shuffles only the new batch's O(new·bands) rows no matter how
     large the accumulated corpus index is.  Maintenance is append-only:
-    admitted docs' band rows insert into the same bucket layout.
-    ``n_buckets`` is sized by index volume (corpus_docs · n_bands rows
-    of 3 longs) — at 100 TB use thousands of buckets; the bucket count
-    must then stay fixed across daily appends, which is exactly the
-    bucketing contract `join_bucketed` demonstrates."""
+    admitted docs' band rows insert into the same ``INDEX_BUCKETS``
+    layout."""
     (
-        band_buckets(df, id_col, tokens_col, n_hashes, n_bands)
+        band_buckets(df, id_col, tokens_col)
         .write.mode("overwrite")
         .option("path", path)
-        .bucketBy(n_buckets, "band_id", "band_hash")
+        .bucketBy(INDEX_BUCKETS, "band_id", "band_hash")
         .sortBy("band_id", "band_hash")
         .saveAsTable(table_name)
     )
@@ -130,8 +135,6 @@ def probe_candidates(
     corpus_df: DataFrame | None,
     id_col: str,
     tokens_col: str,
-    n_hashes: int = 64,
-    n_bands: int = 16,
     corpus_index: DataFrame | None = None,
 ) -> DataFrame:
     """Distinct (new_id, corpus_id) candidate pairs: new docs probing
@@ -142,42 +145,29 @@ def probe_candidates(
     band_hash)`` frame) to probe without re-scanning corpus text; when
     the index table is bucketed on (band_id, band_hash) the join reads
     its buckets in place and only the new side shuffles."""
-    nb = band_buckets(new_df, id_col, tokens_col, n_hashes, n_bands).select(
+    nb = band_buckets(new_df, id_col, tokens_col).select(
         F.col("_id").alias("new_id"), "band_id", "band_hash"
     )
     if corpus_index is None:
-        corpus_index = band_buckets(corpus_df, id_col, tokens_col, n_hashes, n_bands)
+        corpus_index = band_buckets(corpus_df, id_col, tokens_col)
     cb = corpus_index.select(
         F.col("_id").alias("corpus_id"), "band_id", "band_hash"
     )
     return nb.join(cb, ["band_id", "band_hash"]).select("new_id", "corpus_id").distinct()
 
 
-def candidate_pairs(
-    df: DataFrame,
-    id_col: str,
-    tokens_col: str,
-    n_hashes: int = 64,
-    n_bands: int = 16,
-    max_bucket: int = 100_000,
-) -> DataFrame:
+def candidate_pairs(df: DataFrame, id_col: str, tokens_col: str) -> DataFrame:
     """Distinct candidate id pairs (id_a < id_b) from LSH banding.
 
     One corpus scan → one shuffle of (doc, band) rows → pairs generated
-    array-side within each bucket.  ``max_bucket`` drops degenerate
-    buckets (a bucket of k docs yields k² pairs; a pathological
-    collision would otherwise dominate the stage).  NOTE it must stay
-    well above the largest *legitimate* duplicate-cluster size — a
-    cluster of k near-identical docs shares most band buckets, and
-    pruning those buckets silently loses true pairs (recall, not just
-    cost).  Default bounds bucket blowup at ~1e10 comparisons while
-    tolerating 1e5-doc dup clusters; tune per corpus with the
-    bucket-size histogram."""
-    banded = band_buckets(df, id_col, tokens_col, n_hashes, n_bands)
+    array-side within each bucket; buckets past ``MAX_BUCKET`` members
+    are dropped (a pathological collision would otherwise dominate the
+    stage)."""
+    banded = band_buckets(df, id_col, tokens_col)
     buckets = (
         banded.groupBy("band_id", "band_hash")
         .agg(F.collect_list("_id").alias("ids"))
-        .where((F.size("ids") >= 2) & (F.size("ids") <= max_bucket))
+        .where((F.size("ids") >= 2) & (F.size("ids") <= MAX_BUCKET))
     )
 
     def pairs_of(ids: Column) -> Column:

@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from mapreduce_framework_spark.operators.materialize import checkpoint
+
 
 def _ranked_and_counts(
     df: DataFrame, order_cols: list[Column], rank_col: str
@@ -43,21 +45,19 @@ def _ranked_and_counts(
     ranged = df.repartitionByRange(*order_cols).withColumn(
         "_pid", F.spark_partition_id()
     )
-    # Materialize the range-partitioned frame ONCE (round-12
-    # optimization; guide §1.2 / §5): ``ranged`` is lazy and has 2-3
-    # consumers (the per-partition counts feeding the broadcast
-    # offsets, the ranked join, and — in exact_ntile — the total),
-    # each of which re-executed the FULL input lineage plus the range
-    # partitioner's sampling pass per consumption; chained callers
+    # Materialize the range-partitioned frame ONCE: ``ranged`` is lazy
+    # and has 2-3 consumers (the per-partition counts feeding the
+    # broadcast offsets, the ranked join, and — in exact_ntile — the
+    # total), each of which re-executed the FULL input lineage plus the
+    # range partitioner's sampling pass per consumption; chained callers
     # (events_rfm_segmentation stacks three ntiles) compounded that
     # multiplicatively (measured 47 Spark jobs for the RFM key at
-    # sf0.001 — ~3^3 subtree re-executions).  One eager localCheckpoint
-    # makes each ranking consume the input exactly once, and freezes
-    # ``_pid`` against any cross-execution nondeterminism in the
-    # sampled range bounds.  The checkpointed frame is the caller's
-    # frame itself (user-level aggregates in every current use), held
-    # in executor storage only for the duration of the query.
-    ranged = ranged.localCheckpoint(eager=True)
+    # sf0.001 — ~3^3 subtree re-executions).  One eager checkpoint makes
+    # each ranking consume the input exactly once, and freezes ``_pid``
+    # against any cross-execution nondeterminism in the sampled range
+    # bounds.  The checkpointed frame is the caller's frame itself
+    # (user-level aggregates in every current use).
+    ranged = checkpoint(ranged)
     counts = ranged.groupBy("_pid").agg(F.count(F.lit(1)).alias("_n"))
     off_w = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
     offsets = counts.select(

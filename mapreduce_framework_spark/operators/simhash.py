@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from mapreduce_framework_spark.operators.materialize import checkpoint
+
 
 def md5_prefix60(token: Column) -> Column:
     """60-bit token hash from the first 15 hex chars of md5 — the
@@ -236,16 +238,14 @@ def near_pairs(
     ``max(pair_budget_floor, pair_budget_per_doc · n_docs)`` it
     switches to the pair-combination keying (``_keyed_combo``): same
     exact Hamming semantics, lossless recall, ~2^width-fold smaller
-    buckets.  The fingerprint frame is localCheckpoint'ed so the
+    buckets.  The fingerprint frame is checkpointed eagerly so the
     histogram probe and the pair job compute fingerprints once.
 
     The budget floor must stay above the pair count of the largest
     LEGITIMATE duplicate cluster (k docs ⇒ k²/2 pairs in one bucket);
     the default tolerates a ~3k-doc cluster before switching — and the
     switch only changes bucket WIDTH, never which pairs qualify."""
-    fps = df.select(
-        F.col(id_col).alias("_id"), F.col(fp_col).alias("_fp")
-    ).localCheckpoint(eager=True)
+    fps = checkpoint(df.select(F.col(id_col).alias("_id"), F.col(fp_col).alias("_fp")))
 
     keyed_base = _keyed_single(fps, n_chunks, width)
     hist = keyed_base.groupBy("key_id", "key_val").agg(F.count(F.lit(1)).alias("k"))

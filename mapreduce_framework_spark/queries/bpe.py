@@ -29,9 +29,9 @@ which is what the oracle gate needs.
 Spark shape: the iteration state (the WORDS frame) is vocab-sized, not
 corpus-sized — one corpus-wide shuffle builds words0, then every merge
 round is a vocab-sized pair aggregate + a TakeOrdered(1) + a broadcast
-one-row join, the kmeans/power-iteration unrolled pattern with
-``iter_checkpoint`` per round (the frame is referenced twice per round
-— by the pair count and by the apply — so eager localCheckpoint both
+one-row join, the kmeans/power-iteration unrolled pattern with an eager
+``materialize.checkpoint`` per round (the frame is referenced twice per
+round — by the pair count and by the apply — so the checkpoint both
 truncates the would-be-exponential lineage and avoids recomputation).
 At 100 TB the vocab frame is millions of rows against a corpus of
 trillions of tokens: training cost is N vocab-sized aggregates, and
@@ -56,7 +56,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduce_framework_spark.io import table
-from mapreduce_framework_spark.operators.materialize import iter_checkpoint
+from mapreduce_framework_spark.operators.materialize import checkpoint
 from mapreduce_framework_spark.registry import register
 
 N_MERGES = 8
@@ -171,27 +171,23 @@ def _pair_counts(words: DataFrame) -> DataFrame:
     )
 
 
-def bpe_train(
-    d: DataFrame, n_merges: int = N_MERGES, reliable: bool = False
-) -> tuple[DataFrame, DataFrame]:
+def bpe_train(d: DataFrame, n_merges: int = N_MERGES) -> tuple[DataFrame, DataFrame]:
     """Learn ``n_merges`` BPE merges from a (doc_id, text) frame.
     Returns ``(vocab, merges)``: the final per-word symbol strings and
     the ranked merge table.  Unrolled-iteration pattern with an eager
     checkpoint per round (see module docstring)."""
     spark = d.sparkSession
-    words = iter_checkpoint(_words0(d), reliable=reliable)
-    # Per-round argmax COLLECTS its single winning row to the driver
-    # (round-12 optimization; guide §1.2).  The old loop materialized
-    # the 1-row argmax with iter_checkpoint (a job) and re-attached it
-    # with a broadcast cross join (a broadcast build + an extra plan
-    # node per round) because it was referenced 3×.  Collecting ONE
-    # bounded row per round is the legitimate driver-loop kind (the
+    words = checkpoint(_words0(d))
+    # Per-round argmax COLLECTS its single winning row to the driver.
+    # The argmax is referenced 3×; checkpointing it (a job) and
+    # re-attaching it with a broadcast cross join (a broadcast build +
+    # an extra plan node per round) costs more.  Collecting ONE bounded
+    # row per round is the legitimate driver-loop kind (the
     # convergence-count pattern, components.py): the TakeOrdered job
     # runs either way, but the checkpoint job and the per-round
     # broadcast disappear — the merge pattern becomes a string LITERAL
     # in the apply expression, and the ranked merge table is built once
-    # from the collected rows.  Merge choice, tie-break, and replace
-    # semantics are byte-identical (same argmax row, same pattern).
+    # from the collected rows.
     merge_vals: list[tuple] = []
     for r in range(1, n_merges + 1):
         row = (
@@ -217,7 +213,7 @@ def bpe_train(
                 )
             ).alias("s"),
         )
-        words = iter_checkpoint(applied, reliable=reliable)
+        words = checkpoint(applied)
     merges = spark.createDataFrame(
         merge_vals,
         "merge_rank int, left_sym string, right_sym string, "

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from mapreduce_framework_spark.io import table
 from mapreduce_framework_spark.operators.kmeans import kmeans_rounds, quantize
+from mapreduce_framework_spark.operators.materialize import checkpoint
 from mapreduce_framework_spark.registry import register
 
 _KMEANS_ORACLE = """
@@ -152,17 +153,17 @@ def embedding_seed_farthest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", quantize(F.col("embedding")).alias("qv")
     )
     seed0 = vectors.where(F.col("vec_id") == 0).select(F.col("qv").alias("sv"))
-    # Each round's min-distance frame is materialized eagerly
-    # (round-12; guide §1.2): the fully-lazy unroll duplicated the
-    # scored_{r-1} subtree into every later round's plan AND into each
-    # round's argmax/seed-vector broadcast builds (~k² corpus scans at
-    # k=4); with a per-round localCheckpoint the greedy expansion costs
-    # exactly k passes — the "one cached scan" posture the scale note
-    # promises, with the argmax still in-plan (no driver collect).
-    scored = (
-        vectors.crossJoin(F.broadcast(seed0))
-        .select("vec_id", "qv", _sq_l2(F.col("qv"), F.col("sv")).alias("dist"))
-        .localCheckpoint(eager=True)
+    # Each round's min-distance frame is materialized eagerly: the
+    # fully-lazy unroll duplicated the scored_{r-1} subtree into every
+    # later round's plan AND into each round's argmax/seed-vector
+    # broadcast builds (~k² corpus scans at k=4); with a per-round
+    # checkpoint the greedy expansion costs exactly k passes — the "one
+    # cached scan" posture the scale note promises, with the argmax
+    # still in-plan (no driver collect).
+    scored = checkpoint(
+        vectors.crossJoin(F.broadcast(seed0)).select(
+            "vec_id", "qv", _sq_l2(F.col("qv"), F.col("sv")).alias("dist")
+        )
     )
     out = [
         spark.range(1).select(
@@ -184,16 +185,14 @@ def embedding_seed_farthest(spark: SparkSession, sf_dir: str) -> DataFrame:
             vectors.join(best.select("vec_id"), "vec_id")
             .select(F.col("qv").alias("sv"))
         )
-        scored = (
-            scored.crossJoin(F.broadcast(seed_vec))
-            .select(
+        scored = checkpoint(
+            scored.crossJoin(F.broadcast(seed_vec)).select(
                 "vec_id",
                 "qv",
                 F.least(
                     F.col("dist"), _sq_l2(F.col("qv"), F.col("sv"))
                 ).alias("dist"),
             )
-            .localCheckpoint(eager=True)
         )
     res = out[0]
     for frame in out[1:]:
@@ -359,7 +358,7 @@ def power_rounds_frame(gram: DataFrame, adaptive_cap: bool = True) -> DataFrame:
         # round subtrees — without this the corpus-sized Gram pass ran
         # twice (measured 2.0 s vs 1.35 s legacy at sf0.1; with the
         # checkpoint the plan pays one pass plus a dim²-row write).
-        gram = gram.localCheckpoint(eager=True)
+        gram = checkpoint(gram)
         # The d·max|G| product is computed in decimal(38,0): at G's own
         # int64 limit (≈9e18) the bigint product d·gmax would itself
         # overflow before the div could shrink the cap.

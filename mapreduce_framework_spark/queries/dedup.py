@@ -24,7 +24,10 @@ from pyspark.sql import functions as F
 from mapreduce_framework_spark.functions.idsplit import id_hexdigit
 from mapreduce_framework_spark.functions.vector import cosine
 from mapreduce_framework_spark.io import table
-from mapreduce_framework_spark.operators.materialize import sized_local_checkpoint
+from mapreduce_framework_spark.operators.materialize import (
+    checkpoint,
+    sized_local_checkpoint,
+)
 from mapreduce_framework_spark.operators.minhash import (
     candidate_pairs,
     containment,
@@ -254,8 +257,8 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # near-dups sit well above the S-curve knee (j >= ~0.8 -> miss
     # < 0.03%), and the equality has been validated at sf0.001/0.01/0.1;
     # on a NEW corpus with borderline-j pairs the correct response to a
-    # hash mismatch is to raise n_hashes/bands, not to distrust the
-    # banding math.
+    # hash mismatch is to raise operators/minhash.py's N_HASHES/N_BANDS,
+    # not to distrust the banding math.
     oracle="""
 WITH d AS (
   SELECT doc_id, string_split(text, ' ') AS toks
@@ -481,10 +484,10 @@ def _semantic_assignment(
     # join, the final keep join); ReuseExchange dedups only identical
     # exchanges, so it is materialized once.  The checkpointed frame is
     # (vec_id, cid) ints — n×~8 bytes, safe at any corpus size.
-    assigned = (
-        assign(base.select("vec_id", F.col("qv").alias("v")), seeds)
-        .select("vec_id", "cid")
-        .localCheckpoint(eager=True)
+    assigned = checkpoint(
+        assign(base.select("vec_id", F.col("qv").alias("v")), seeds).select(
+            "vec_id", "cid"
+        )
     )
     # k-row cluster-size frame; AQE broadcasts it while it fits and
     # falls back to a shuffle join at extreme k — no forced hint.

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduce_framework_spark.io import table
-from mapreduce_framework_spark.operators.materialize import iter_checkpoint, iterate
+from mapreduce_framework_spark.operators.materialize import checkpoint, iterate
 from mapreduce_framework_spark.registry import register
 
 _N_ITER = 3
@@ -70,8 +70,6 @@ def pagerank(
     edges: DataFrame,
     rounds: int = 3,
     checkpoint_every: int | None = None,
-    reliable: bool = False,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Integer-unit PageRank over an (src, dst) edge frame: rank₀ =
     1e6 per node, each round ``new = 150000 + floor(0.85 · Σ
@@ -132,8 +130,6 @@ def pagerank(
         pinned=edges_deg if checkpoint_every else None,
         checkpoint_every=checkpoint_every,
         final_checkpoint=bool(checkpoint_every),
-        reliable=reliable,
-        checkpoint_dir=checkpoint_dir,
     )
 
 
@@ -186,7 +182,7 @@ def _customer_supplier_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 def graph_pagerank_deep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank at depth (10 rounds, damping 0.85) over the same graph
     as graph_pagerank — the key whose EXECUTION path is the lineage-
-    truncated one: ``checkpoint_every=2`` localCheckpoints the rank
+    truncated one: ``checkpoint_every=2`` checkpoints the rank
     frame every 2 rounds, so the plan the optimizer sees stays 2 rounds
     deep no matter how far the iteration runs.  Cadence 2 was chosen
     by measurement (5.45 s vs 6.54/8.41 s for k=3/5 at sf0.1; the
@@ -259,10 +255,15 @@ def graph_triangle_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     return triangle_knn_frame(l)
 
 
-def knn_edges_frame(l: DataFrame, k: int = 5) -> DataFrame:
+# The kNN cut of the co-supply graph: every graph key and the
+# persisted adjacency use the same k.
+_KNN_K = 5
+
+
+def knn_edges_frame(l: DataFrame) -> DataFrame:
     """Canonical undirected kNN co-occurrence edges (u < v) from an
     (l_orderkey, l_suppkey) membership frame: co-occurrence weight =
-    distinct shared orders, per-node top-k cut (ties to the lower
+    distinct shared orders, per-node top-``_KNN_K`` cut (ties to the lower
     partner key), then least/greatest canonicalization — the ONE edge
     derivation shared by graph_triangle_knn and
     graph_degree_distribution (and their matching oracle CTEs), so the
@@ -303,7 +304,7 @@ def knn_edges_frame(l: DataFrame, k: int = 5) -> DataFrame:
     w = Window.partitionBy("s1").orderBy(F.desc("w"), F.asc("s2"))
     knn = (
         co.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
+        .where(F.col("rn") <= _KNN_K)
         .select("s1", "s2")
     )
     return knn.select(
@@ -311,9 +312,7 @@ def knn_edges_frame(l: DataFrame, k: int = 5) -> DataFrame:
     ).distinct()
 
 
-def triangle_knn_frame(
-    l: DataFrame, k: int = 5, orientation: str = "fixed"
-) -> DataFrame:
+def triangle_knn_frame(l: DataFrame, orientation: str = "fixed") -> DataFrame:
     """kNN-graph + triangle core over an (l_orderkey, l_suppkey)
     membership frame — reusable heart of graph_triangle_knn, shared
     with tools/scale_probe.py.
@@ -331,7 +330,7 @@ def triangle_knn_frame(
     one source vertex); per-node counts are bit-identical — pinned by
     tests/test_scale_operators.py::test_triangle_orientation_identical,
     measured fan-out numbers in SCALE.md §Graphs."""
-    edges = knn_edges_frame(l, k)
+    edges = knn_edges_frame(l)
     if orientation == "degree":
         tri = _degree_oriented_triangles(edges)
     else:
@@ -429,7 +428,7 @@ def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     then two skinny aggregates; the corpus-sized work is the one
     co-occurrence shuffle shared with the triangle key."""
     l = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    edges = knn_edges_frame(l, k=5)
+    edges = knn_edges_frame(l)
     deg = (
         edges.select(F.col("u").alias("node"))
         .unionByName(edges.select(F.col("v").alias("node")))
@@ -511,7 +510,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared with graph_triangle_knn via knn_edges_frame.  Deeper peels
     pass ``checkpoint_every`` to :func:`kcore_frame`."""
     l = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    return kcore_frame(knn_edges_frame(l, k=5), k=3, rounds=3)
+    return kcore_frame(knn_edges_frame(l), k=3, rounds=3)
 
 
 # One bucket-count constant shared by the artifact builder and every
@@ -520,18 +519,16 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ADJ_BUCKETS = 16
 
 
-def persisted_cosupply_adjacency(
-    spark: SparkSession, sf_dir: str, k: int = 5, n_buckets: int = _ADJ_BUCKETS
-) -> DataFrame:
-    """WRITE-ONCE co-supply adjacency artifact (round-8 verdict task #1
-    — serving parity with the ANN family's persist_*/probe_* split):
-    the canonical kNN edge set of knn_edges_frame stored BOTH WAYS as a
-    directed (src, dst) adjacency list, parquet-partitioned by
-    ``src_bucket = src mod n_buckets``.  Every graph probe key reads
-    this instead of re-deriving the lineitem self-join co-occurrence
-    shuffle per invocation — the one corpus-sized stage all the graph
-    keys share becomes a build-once cost, exactly like an IVF cell
-    index (operators/annsearch.py persist_cell_index).
+def persisted_cosupply_adjacency(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """WRITE-ONCE co-supply adjacency artifact (serving parity with the
+    ANN family's persist_*/probe_* split): the canonical kNN edge set of
+    knn_edges_frame stored BOTH WAYS as a directed (src, dst) adjacency
+    list, parquet-partitioned by ``src_bucket = src mod _ADJ_BUCKETS``.
+    Every graph probe key reads this instead of re-deriving the
+    lineitem self-join co-occurrence shuffle per invocation — the one
+    corpus-sized stage all the graph keys share becomes a build-once
+    cost, exactly like an IVF cell index (operators/annsearch.py
+    persist_cell_index).
 
     Layout rationale: both-ways adjacency (each undirected edge twice)
     is the serving shape — a node's neighborhood is ONE partition-pruned
@@ -543,7 +540,7 @@ def persisted_cosupply_adjacency(
     graph query.
 
     Cache contract = _spill_corpus's (queries/mapreduce_job.py): keyed
-    by (sf, lineitem file identity, k, n_buckets) — a pure function of
+    by (sf, lineitem file identity, k, bucket count) — a pure function of
     immutable inputs — staged privately and atomically renamed into
     place, so concurrent sessions race safely and readers only ever see
     a complete artifact."""
@@ -553,17 +550,18 @@ def persisted_cosupply_adjacency(
 
     st = os.stat(os.path.join(sf_dir, "lineitem.parquet"))
     sf_base = cache_sf_token(sf_dir)
-    ident = f"{sf_base}_k{k}b{n_buckets}_{st.st_size}_{st.st_mtime_ns}"
+    params = f"k{_KNN_K}b{_ADJ_BUCKETS}"
+    ident = f"{sf_base}_{params}_{st.st_size}_{st.st_mtime_ns}"
 
     def build(staged: str) -> None:
         l = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-        edges = knn_edges_frame(l, k)
+        edges = knn_edges_frame(l)
         adj = edges.select(
             F.col("u").alias("src"), F.col("v").alias("dst")
         ).unionByName(edges.select(F.col("v").alias("src"), F.col("u").alias("dst")))
         (
             adj.withColumn(
-                "src_bucket", F.pmod(F.col("src"), F.lit(n_buckets)).cast("int")
+                "src_bucket", F.pmod(F.col("src"), F.lit(_ADJ_BUCKETS)).cast("int")
             )
             .repartition("src_bucket")
             .write.mode("overwrite")
@@ -571,16 +569,15 @@ def persisted_cosupply_adjacency(
             .parquet(staged)
         )
 
-    # family = kind + SF + fixed params (k/n_buckets): per-SF artifacts
+    # family = kind + SF + fixed params (k/buckets): per-SF artifacts
     # coexist (tests/bench/driver run different SFs concurrently), and
-    # two concurrently-used parameterizations of one SF must not reap
-    # each other (round-10 ADVICE) — only a changed FILE IDENTITY marks
-    # a generation superseded, and the publish sweep reaps it once it
-    # ages past the cross-session guard.
+    # two parameterizations of one SF must not reap each other — only a
+    # changed FILE IDENTITY marks a generation superseded, and the
+    # publish sweep reaps it once it ages past the cross-session guard.
     dest = publish_cached(
         f"mfs_graph_adj_{ident}",
         build,
-        family=f"mfs_graph_adj_{sf_base}_k{k}b{n_buckets}",
+        family=f"mfs_graph_adj_{sf_base}_{params}",
     )
     return spark.read.parquet(dest)
 
@@ -734,21 +731,19 @@ def graph_components_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     return connected_components(edges, "src", "dst")
 
 
-def bfs_hops(
-    adj: DataFrame,
-    source: int,
-    max_hops: int = 25,
-    reliable: bool = False,
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
+# BFS's runaway bound on rounds, not a tuning knob; shared with
+# graph_bfs_persisted's oracle walk.
+_BFS_MAX_HOPS = 25
+
+
+def bfs_hops(adj: DataFrame, source: int) -> DataFrame:
     """Single-source BFS hop distances over a directed (src, dst)
     adjacency frame — frontier expansion, the third iterative-dataflow
     class in the graph family after damped flow (pagerank) and peeling
     (kcore): each round joins ONLY the frontier (the nodes the previous
     round settled, flagged ``_new``) against the adjacency, anti-joins
-    out settled nodes, and stops when the frontier empties (``max_hops``
-    is a runaway bound, not a tuning knob).  Total work across rounds is
-    O(|E|) like any BFS.  Runs on
+    out settled nodes, and stops when the frontier empties.  Total work
+    across rounds is O(|E|) like any BFS.  Runs on
     :func:`~mapreduce_framework_spark.operators.materialize.iterate`,
     checkpointing every round."""
 
@@ -769,11 +764,9 @@ def bfs_hops(
             [(source, 0, True)], "node long, hops int, _new boolean"
         ),
         expand,
-        max_hops,
+        _BFS_MAX_HOPS,
         final_checkpoint=True,
         changed="_new",
-        reliable=reliable,
-        checkpoint_dir=checkpoint_dir,
     )
     return dist.drop("_new")
 
@@ -781,17 +774,17 @@ def bfs_hops(
 @register(
     "graph_bfs_persisted",
     # Exact recursive closure over (node, hops) pairs — UNION (not
-    # UNION ALL) dedupes states, so the walk explores ≤ n·max_hops
+    # UNION ALL) dedupes states, so the walk explores ≤ n·_BFS_MAX_HOPS
     # rows, then min(hops) per node is the BFS distance.  Same
     # no-round-coupling contract as the components oracle.
     oracle=_ADJ_CTE
-    + """,
+    + f""",
 walk AS (
   WITH RECURSIVE w(node, hops) AS (
     SELECT CAST(1 AS BIGINT), 0
     UNION
     SELECT a.dst, w.hops + 1 FROM w JOIN adj a ON a.src = w.node
-    WHERE w.hops < 25
+    WHERE w.hops < {_BFS_MAX_HOPS}
   ) SELECT * FROM w
 )
 SELECT node, CAST(min(hops) AS INT) AS hops FROM walk GROUP BY node
@@ -815,15 +808,13 @@ def kcore_frame(
     k: int,
     rounds: int,
     checkpoint_every: int | None = None,
-    reliable: bool = False,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """k-core peeling on a canonical undirected (u, v) edge frame:
     ``rounds`` unrolled (degree → survivors → restrict) steps, then the
     surviving (node, core_degree) table — shared by graph_kcore and the
     convergence test (rounds vs rounds+1 identical).
 
-    The input edge frame is eagerly localCheckpoint'ed first: every
+    The input edge frame is eagerly checkpointed first: every
     peel level references its predecessor 3× (degree agg + two semi-
     joins), so a lazy plan re-derives the base graph ~3^rounds times —
     the Spark-side twin of the DuckDB CTE-inlining blowup this key's
@@ -836,14 +827,11 @@ def kcore_frame(
     :func:`~mapreduce_framework_spark.operators.materialize.iterate`'s
     cadence (c=2 as for graph_pagerank_deep; SCALE.md §Iterative prices
     rounds∈{3,6,10}), bit-identically (tests/test_scale_operators.py)."""
-    edges = iter_checkpoint(edges, reliable, checkpoint_dir)
     edges = iterate(
-        edges,
+        checkpoint(edges),
         lambda e, _pinned: _peel(e, k),
         rounds,
         checkpoint_every=checkpoint_every,
-        reliable=reliable,
-        checkpoint_dir=checkpoint_dir,
     )
     return (
         edges.select(F.col("u").alias("node"))

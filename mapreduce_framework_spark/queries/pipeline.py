@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from mapreduce_framework_spark.functions.idsplit import id_hexdigit
 from mapreduce_framework_spark.io import table
+from mapreduce_framework_spark.operators.materialize import checkpoint
 from mapreduce_framework_spark.registry import register
 
 
@@ -468,18 +469,14 @@ def pipeline_mix_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
         [("en", 0.30), ("de", 0.175), ("es", 0.175), ("fr", 0.175), ("zh", 0.175)],
         "t_lang string, share double",
     )
-    # One statistics pass (round-12; guide §1.2): `act` is the only
-    # corpus-sized aggregate — materialize its |langs| rows eagerly and
-    # derive the total from IT (Σ n_docs ≡ count(*)), instead of a
-    # separate corpus scan for `total` plus re-runs of both inside
-    # every broadcast subtree below (lazily this query scanned the
-    # corpus ~6×: total, act, both embedded in `rates`, the keep scan,
-    # and `total_after` re-running the whole keep lineage).
-    act = (
-        d.groupBy("lang")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-        .localCheckpoint(eager=True)
-    )
+    # One statistics pass: `act` is the only corpus-sized aggregate —
+    # materialize its |langs| rows eagerly and derive the total from IT
+    # (Σ n_docs ≡ count(*)), instead of a separate corpus scan for
+    # `total` plus re-runs of both inside every broadcast subtree below
+    # (lazily this query scanned the corpus ~6×: total, act, both
+    # embedded in `rates`, the keep scan, and `total_after` re-running
+    # the whole keep lineage).
+    act = checkpoint(d.groupBy("lang").agg(F.count(F.lit(1)).alias("n_docs")))
     total = act.agg(F.sum("n_docs").cast("double").alias("n_total"))
     rates = (
         act.crossJoin(F.broadcast(total))
@@ -585,15 +582,17 @@ def corpus_token_budget_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     B = 100_000
     d = table(spark, sf_dir, "documents")
-    # Eager checkpoint of the ONLY corpus-sized aggregate (round-12;
-    # guide §1.2): lazily, the broadcast subtrees below (`tot`, then
-    # `spent` whose lineage embeds `tot` again) re-ran the documents
-    # scan + token count up to 4× per query.  Materializing the
-    # |sources|-row frame makes everything downstream metadata-sized —
-    # the single-pass shape the docstring promises.
-    tok = d.groupBy("source").agg(
-        F.sum(F.size(F.split(F.col("text"), " "))).cast("bigint").alias("tokens")
-    ).localCheckpoint(eager=True)
+    # Eager checkpoint of the ONLY corpus-sized aggregate: lazily, the
+    # broadcast subtrees below (`tot`, then `spent` whose lineage embeds
+    # `tot` again) re-ran the documents scan + token count up to 4× per
+    # query.  Materializing the |sources|-row frame makes everything
+    # downstream metadata-sized — the single-pass shape the docstring
+    # promises.
+    tok = checkpoint(
+        d.groupBy("source").agg(
+            F.sum(F.size(F.split(F.col("text"), " "))).cast("bigint").alias("tokens")
+        )
+    )
     tot = tok.agg(F.sum("tokens").alias("t"))
     base = tok.crossJoin(F.broadcast(tot)).select(
         "source",

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mapreduce_framework_spark.io import table, user_scratch_dir
+from mapreduce_framework_spark.operators.materialize import checkpoint
 from mapreduce_framework_spark.registry import register
 
 # (column, null-count expr source, representation for min/max)
@@ -684,11 +685,13 @@ def profile_drift_categorical(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("in_first"),
     )
     # |event_type| rows, consumed by the totals AND the report — eager
-    # checkpoint makes this ONE events pass (round-12; guide §1.2).
-    halves = e.groupBy("event_type").agg(
-        F.sum("in_first").alias("n1"),
-        F.sum(1 - F.col("in_first")).alias("n2"),
-    ).localCheckpoint(eager=True)
+    # checkpoint makes this ONE events pass.
+    halves = checkpoint(
+        e.groupBy("event_type").agg(
+            F.sum("in_first").alias("n1"),
+            F.sum(1 - F.col("in_first")).alias("n2"),
+        )
+    )
     tot = halves.agg(
         F.sum("n1").cast("double").alias("t1"),
         F.sum("n2").cast("double").alias("t2"),
@@ -929,10 +932,12 @@ def profile_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("cents") >= p, F.expr(f"cents div {p}")
         ).otherwise(digit)
     # ≤9 rows, consumed by the total AND the report — eager checkpoint
-    # makes this ONE corpus pass (round-12; guide §1.2).
-    g = o.select(digit.alias("digit")).groupBy("digit").agg(
-        F.count(F.lit(1)).alias("n")
-    ).localCheckpoint(eager=True)
+    # makes this ONE corpus pass.
+    g = checkpoint(
+        o.select(digit.alias("digit"))
+        .groupBy("digit")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
     t = g.agg(F.sum("n").alias("total"))
     exp_ppm = F.lit(None).cast("bigint")
     for d, p in _BENFORD_PPM.items():

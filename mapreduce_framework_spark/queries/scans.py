@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduce_framework_spark.io import table, user_scratch_dir
+from mapreduce_framework_spark.operators.materialize import checkpoint
 from mapreduce_framework_spark.registry import register
 
 
@@ -477,14 +478,16 @@ def zorder_cluster(spark: SparkSession, sf_dir: str) -> tuple:
     # rescan orders for the same min/max (5 raw scans at sf sizes; at
     # 100 TB these stats come from the catalog, and this is the in-plan
     # equivalent: computed once, 6 integers pinned).
-    b = o.agg(
-        F.min("x").alias("xmin"),
-        F.max("x").alias("xmax"),
-        F.min("y").alias("ymin"),
-        F.max("y").alias("ymax"),
-        (F.max("x") - F.min("x") + 1).alias("xspan"),
-        (F.max("y") - F.min("y") + 1).alias("yspan"),
-    ).localCheckpoint(eager=True)
+    b = checkpoint(
+        o.agg(
+            F.min("x").alias("xmin"),
+            F.max("x").alias("xmax"),
+            F.min("y").alias("ymin"),
+            F.max("y").alias("ymax"),
+            (F.max("x") - F.min("x") + 1).alias("xspan"),
+            (F.max("y") - F.min("y") + 1).alias("yspan"),
+        )
+    )
     z8 = _interleave_expr("xs8", "ys8", 8, "div")
     clustered = (
         o.crossJoin(F.broadcast(b))

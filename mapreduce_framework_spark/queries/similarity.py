@@ -28,6 +28,7 @@ from mapreduce_framework_spark.operators.annsearch import (
     topk_per_query,
 )
 from mapreduce_framework_spark.operators.kmeans import quantize as kquantize
+from mapreduce_framework_spark.operators.materialize import checkpoint
 from mapreduce_framework_spark.registry import register
 
 # IVF coarse quantizer of the seed-cell keys: the 16 lowest vec_ids as
@@ -36,18 +37,21 @@ _N_CELLS = 16
 _N_PROBE = 4
 
 
+def _views(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """(vectors, lattice) from ONE read of the embeddings — each read
+    runs one footer-reading job.  ``vectors`` is the float view
+    (vec_id, label, v array<double>), ``lattice`` the embeddings on
+    kmeans.quantize's exact integer lattice (vec_id, v array<bigint>)."""
+    emb = table(spark, sf_dir, "embeddings")
+    e = F.col("embedding")
+    return (
+        emb.select("vec_id", "label", e.cast("array<double>").alias("v")),
+        emb.select("vec_id", kquantize(e).alias("v")),
+    )
+
+
 def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", F.col("embedding").cast("array<double>").alias("v")
-    )
-
-
-def _lattice(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The embeddings on kmeans.quantize's exact integer lattice:
-    (vec_id, v array<bigint>)."""
-    return table(spark, sf_dir, "embeddings").select(
-        "vec_id", kquantize(F.col("embedding")).alias("v")
-    )
+    return _views(spark, sf_dir)[0]
 
 
 def _query_vec(vectors: DataFrame) -> DataFrame:
@@ -89,8 +93,10 @@ LIMIT 10
 def sim_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact top-10 cosine neighbors of vector 0 (brute-force baseline;
     TakeOrderedAndProject keeps only k rows per partition)."""
-    vectors = _vectors(spark, sf_dir).where(F.col("vec_id") != 0)
-    return brute_force_topk(vectors, _query_vec(_vectors(spark, sf_dir)), k=10)
+    vectors = _vectors(spark, sf_dir)
+    return brute_force_topk(
+        vectors.where(F.col("vec_id") != 0), _query_vec(vectors), k=10
+    )
 
 
 @register(
@@ -336,7 +342,7 @@ def sim_search_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape, real centroids."""
     from mapreduce_framework_spark.operators.kmeans import assign, update
 
-    qvecs = _lattice(spark, sf_dir)
+    vectors, qvecs = _views(spark, sf_dir)
     seeds = qvecs.where(F.col("vec_id") < 8).select(
         F.col("vec_id").cast("int").alias("cid"), F.col("v").alias("c")
     )
@@ -344,7 +350,6 @@ def sim_search_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("cid").cast("int").alias("cell_id"),
         F.col("c").cast("array<double>").alias("cv"),
     )
-    vectors = _vectors(spark, sf_dir)
     return ivf_topk(
         vectors.where(F.col("vec_id") != 0).select("vec_id", "v"),
         centroids,
@@ -480,9 +485,7 @@ def sim_search_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # count, both bucket sides, the query row, and the re-rank scan) —
     # lazily each consumer re-ran the embedding scan + projection.  One
     # materialization of the skinny (vec_id, v) frame serves them all.
-    vectors = (
-        _vectors(spark, sf_dir).select("vec_id", "v").localCheckpoint(eager=True)
-    )
+    vectors = checkpoint(_vectors(spark, sf_dir).select("vec_id", "v"))
     return lsh_topk(
         vectors, query_id=0, k=10, n_tables=4, n_planes=None, hamming_radius=2
     )
@@ -583,13 +586,13 @@ def sim_search_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     same top-k-per-partition cut as the brute-force key.  The re-rank path
     (exact cosine on the PQ candidates) is sim_search_topk on a
     1000×-smaller input."""
-    return _pq_topk(spark, sf_dir, 10)
+    return _pq_topk(_views(spark, sf_dir)[1], 10)
 
 
-def _pq_topk(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
-    """In-plan PQ build, then the ADC top-k of vec_id 0 over every
-    other vector."""
-    sub, codebook, codes = pq_build(_lattice(spark, sf_dir))
+def _pq_topk(qvecs: DataFrame, k: int) -> DataFrame:
+    """In-plan PQ build over the lattice ``qvecs``, then the ADC top-k
+    of vec_id 0 over every other vector."""
+    sub, codebook, codes = pq_build(qvecs)
     return pq_adc_topk(codes.where(F.col("vec_id") != 0), codebook, _query_sub(sub), k)
 
 
@@ -632,7 +635,7 @@ def _pq_served(spark: SparkSession, sf_dir: str, open_index) -> DataFrame:
     ``persist(path)`` builds one at ``path`` and returns it read back.
     The lattice is read once, for the build and the query alike: each
     extra read is one more footer-reading job."""
-    qvecs = _lattice(spark, sf_dir)
+    qvecs = _views(spark, sf_dir)[1]
     codes, codebook = open_index(lambda path: persist_pq_index(qvecs, path))
     return probe_pq_index(
         codes.where(F.col("vec_id") != 0),
@@ -684,8 +687,9 @@ def sim_search_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     that makes two-stage retrieval the universal vector-serving
     architecture.  Candidate count trades recall for stage-2 cost
     without changing either plan."""
-    cand = _pq_topk(spark, sf_dir, 50).select("vec_id")
-    vectors = _vectors(spark, sf_dir).select("vec_id", "v")
+    vectors, qvecs = _views(spark, sf_dir)
+    cand = _pq_topk(qvecs, 50).select("vec_id")
+    vectors = vectors.select("vec_id", "v")
     return brute_force_topk(cand.join(vectors, "vec_id"), _query_vec(vectors), k=10)
 
 
@@ -759,7 +763,7 @@ def sim_search_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiers' losses — production recovers it with n_probe and the
     exact re-rank stage (sim_search_pq_rerank), both orthogonal knobs
     on this same plan."""
-    return ivf_pq_frame(_vectors(spark, sf_dir), _lattice(spark, sf_dir))
+    return ivf_pq_frame(*_views(spark, sf_dir))
 
 
 def ivf_pq_frame(vectors: DataFrame, qvecs: DataFrame) -> DataFrame:
@@ -811,12 +815,11 @@ def sim_search_ivf_pq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _ivf_pq_served(spark: SparkSession, sf_dir: str, open_index) -> DataFrame:
     """sim_search_ivf_pq answered from a cell-partitioned persisted
     index; ``open_index`` as in ``_pq_served``."""
-    vectors = _vectors(spark, sf_dir)
+    vectors, qvecs = _views(spark, sf_dir)
     centroids = _seed_cells(vectors)
     cells = assign_cells(vectors.where(F.col("vec_id") != 0), centroids).select(
         "vec_id", "cell_id"
     )
-    qvecs = _lattice(spark, sf_dir)
     codes, codebook = open_index(lambda path: persist_pq_index(qvecs, path, cells))
     probed = probe_cells(centroids, _query_vec(vectors), _N_PROBE)
     return probe_pq_index(

@@ -13,7 +13,10 @@ from pyspark.sql import functions as F
 
 from mapreduce_framework_spark.functions.idsplit import id_hexdigit
 from mapreduce_framework_spark.io import table
-from mapreduce_framework_spark.operators.materialize import sized_local_checkpoint
+from mapreduce_framework_spark.operators.materialize import (
+    checkpoint,
+    sized_local_checkpoint,
+)
 from mapreduce_framework_spark.registry import register
 
 
@@ -377,20 +380,16 @@ def tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.explode_outer("t").alias("term"))
         .where(F.col("term").isNotNull())
     )
-    # Eager checkpoint (round-12; guide §1.2): `tf` is consumed twice —
-    # the df aggregate and the scored join — and each lazy evaluation
-    # re-ran the corpus tokenize + explode + aggregate.  One
-    # materialization (vocabulary×docs-bounded, executor-local) halves
-    # the corpus passes.  Deliberately NOT a window count over term:
-    # count(*) over (partition by 'the') buffers the hot term's entire
-    # partition in one task and AQE cannot split window skew (guide
-    # §2.5) — the groupBy(term) + join keeps the hot key map-side-
-    # combined on the build side and skew-splittable on the probe.
-    tf = (
-        tok.groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint(eager=True)
-    )
+    # Eager checkpoint: `tf` is consumed twice — the df aggregate and
+    # the scored join — and each lazy evaluation re-ran the corpus
+    # tokenize + explode + aggregate.  One materialization
+    # (vocabulary×docs-bounded) halves the corpus passes.  Deliberately
+    # NOT a window count over term: count(*) over (partition by 'the')
+    # buffers the hot term's entire partition in one task and AQE
+    # cannot split window skew — the groupBy(term) + join keeps the hot
+    # key map-side-combined on the build side and skew-splittable on
+    # the probe.
+    tf = checkpoint(tok.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf")))
     df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n = d.agg(F.count(F.lit(1)).alias("n_docs"))
     scored = (
@@ -821,20 +820,17 @@ def lm_perplexity_frame(d: DataFrame) -> DataFrame:
             )
         ).alias("bg"),
     ).select("doc_id", F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
-    # One corpus pass (round-12; guide §1.2): the exploded bigram frame
-    # is materialized once (executor-local, ~corpus-sized — the same
-    # bytes a persisted n-gram stage would write), the bigram count
-    # table aggregates from the cache, and the CONTEXT counts derive
-    # from the bigram counts (Σ_w2 c(w1,w2) ≡ count by w1 —
-    # vocab²-bounded input instead of a second corpus pass; guide §2.3
-    # "aggregate before you shuffle").  Lazily, cnt / ctx / the probe
-    # side each re-ran the corpus explode — 3 passes.  SIZE-GATED
-    # (round-13): the driver's r12 bench showed the eager checkpoint
-    # LOSING at sf0.1 (0.68× — a materialization job + disk round-trip
-    # of a few-MB explode costs more than two extra page-cached scans),
-    # and a corpus-sized unreplicated localCheckpoint is the guide-§5
-    # availability risk the round-12 verdict flagged —
-    # operators/materialize.py bounds both ends.
+    # One corpus pass: the exploded bigram frame is materialized once
+    # (~corpus-sized — the same bytes a persisted n-gram stage would
+    # write), the bigram count table aggregates from the cache, and the
+    # CONTEXT counts derive from the bigram counts (Σ_w2 c(w1,w2) ≡
+    # count by w1 — vocab²-bounded input instead of a second corpus
+    # pass).  Lazily, cnt / ctx / the probe side each re-ran the corpus
+    # explode — 3 passes.  SIZE-GATED: an unconditional eager checkpoint
+    # measured 0.68× at sf0.1 (a materialization job + disk round-trip
+    # of a few-MB explode costs more than two extra page-cached scans).
+    # Where a corpus-sized frame lands is operators/materialize.py's
+    # reliable-dir switch.
     big = sized_local_checkpoint(big)
     cnt = big.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c"))
     ctx = cnt.groupBy("w1").agg(F.sum("c").alias("cw"))

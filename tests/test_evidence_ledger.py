@@ -177,7 +177,6 @@ def test_env_gated_skip_ledger_is_exact():
     expected_files = {
         "test_multimodal.py",
         "test_scale_gate.py",
-        "test_scale_operators.py",
     }
     assert {g[0] for g in env_gates} == expected_files, (
         f"gate sites drifted: {sorted({g[0] for g in env_gates})} — update the "

@@ -1018,11 +1018,13 @@ def test_span_removal_is_consistent_with_span_report(spark):
         )
 
 
-def test_sized_checkpoint_paths_identical(spark):
+def test_sized_checkpoint_paths_identical(spark, monkeypatch):
     """The size gate picks WHERE bytes live, never WHAT the frame is:
-    lazy (below min / above max) and eagerly-checkpointed (inside the
-    window) paths must produce identical rows, and the out-of-window
-    paths must return the input frame unchanged (no job, no copy)."""
+    the lazy (below min_bytes) and eagerly-checkpointed paths must
+    produce identical rows, and the lazy path must return the input
+    frame unchanged (no job, no copy).  An overshooting estimate fails
+    toward materializing: a planted 1 PiB estimate still checkpoints."""
+    from mapreduce_framework_spark.operators import materialize
     from mapreduce_framework_spark.operators.materialize import (
         plan_size_estimate,
         sized_local_checkpoint,
@@ -1037,15 +1039,19 @@ def test_sized_checkpoint_paths_identical(spark):
 
     lazy_small = sized_local_checkpoint(df, min_bytes=est + 1)
     assert lazy_small is df, "below min_bytes the frame must pass through"
-    lazy_big = sized_local_checkpoint(df, min_bytes=0, max_bytes=max(est - 1, 0))
-    assert lazy_big is df, "above max_bytes (no reliable dir) must pass through"
 
     ckpt = sized_local_checkpoint(df, min_bytes=0)
-    assert ckpt is not df, "inside the window the frame must materialize"
+    assert ckpt is not df, "at or above min_bytes the frame must materialize"
+
+    monkeypatch.delenv("SPARK_GRAFT_CKPT_MIN_BYTES", raising=False)
+    monkeypatch.setattr(materialize, "plan_size_estimate", lambda _df: 1 << 50)
+    overshoot = sized_local_checkpoint(df)
+    assert overshoot is not df, "an overshooting estimate must still materialize"
 
     expect = sorted(map(tuple, df.collect()))
     assert sorted(map(tuple, ckpt.collect())) == expect
     assert sorted(map(tuple, lazy_small.collect())) == expect
+    assert sorted(map(tuple, overshoot.collect())) == expect
 
 
 def test_fingerprints_dictionary_hash_identical(spark):

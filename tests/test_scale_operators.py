@@ -529,7 +529,7 @@ def test_kcore_converged_and_degrees_bounded(spark):
     from mapreduce_framework_spark.queries.graphs import kcore_frame, knn_edges_frame
 
     l = table(spark, SF_DIR, "lineitem").select("l_orderkey", "l_suppkey")
-    edges = knn_edges_frame(l, k=5)
+    edges = knn_edges_frame(l)
     r3 = sorted(map(tuple, kcore_frame(edges, k=3, rounds=3).collect()))
     r4 = sorted(map(tuple, kcore_frame(edges, k=3, rounds=4).collect()))
     assert r3 == r4, "3 rounds are not a fixpoint on this graph"
@@ -546,7 +546,7 @@ def test_kcore_checkpoint_cadence_is_bit_identical(spark):
     from mapreduce_framework_spark.queries.graphs import kcore_frame, knn_edges_frame
 
     l = table(spark, SF_DIR, "lineitem").select("l_orderkey", "l_suppkey")
-    edges = knn_edges_frame(l, k=5)
+    edges = knn_edges_frame(l)
     lazy = sorted(map(tuple, kcore_frame(edges, k=3, rounds=3).collect()))
     cade = sorted(
         map(tuple, kcore_frame(edges, k=3, rounds=3, checkpoint_every=2).collect())
@@ -643,12 +643,15 @@ def test_power_iteration_adaptive_cap_survives_huge_gram(spark):
         assert legacy != rounds(1000), "expected int64 wraparound or error"
 
 
-def test_reliable_checkpoint_identical(spark, tmp_path):
-    """round-8 verdict task #6: the reliable-checkpoint option (blocks
-    on the reliable FS, surviving executor loss) must be result-
-    invisible — pagerank, kcore, and connected components produce
-    bit-identical frames on the localCheckpoint and checkpoint() paths."""
+def test_reliable_checkpoint_identical(spark, tmp_path, monkeypatch):
+    """Where materialize.checkpoint puts its blocks (executor storage,
+    or the reliable FS under $SPARK_GRAFT_CKPT_RELIABLE_DIR, surviving
+    executor loss) must be result-invisible: pagerank, kcore, connected
+    components and the PQ codebook produce identical frames on the
+    localCheckpoint and checkpoint() paths, and the reliable path
+    really writes under the dir."""
     from mapreduce_framework_spark.io import table
+    from mapreduce_framework_spark.operators.annsearch import pq_build
     from mapreduce_framework_spark.operators.components import connected_components
     from mapreduce_framework_spark.queries.graphs import (
         _customer_supplier_edges,
@@ -656,63 +659,40 @@ def test_reliable_checkpoint_identical(spark, tmp_path):
         knn_edges_frame,
         pagerank,
     )
+    from mapreduce_framework_spark.queries.similarity import _views
 
-    ckpt = str(tmp_path / "reliable_ckpt")
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
     l = table(spark, SF_DIR, "lineitem").select("l_orderkey", "l_suppkey")
-    edges = knn_edges_frame(l, k=5).localCheckpoint(eager=True)
-
-    local_kcore = sorted(map(tuple, kcore_frame(edges, k=3, rounds=3).collect()))
-    rel_kcore = sorted(
-        map(
-            tuple,
-            kcore_frame(
-                edges, k=3, rounds=3, reliable=True, checkpoint_dir=ckpt
-            ).collect(),
-        )
-    )
-    assert local_kcore == rel_kcore
-
+    edges = knn_edges_frame(l).localCheckpoint(eager=True)
     pr_edges = _customer_supplier_edges(spark, SF_DIR)
-    local_pr = sorted(
-        map(tuple, pagerank(pr_edges, rounds=4, checkpoint_every=2).collect())
-    )
-    rel_pr = sorted(
-        map(
-            tuple,
-            pagerank(
-                pr_edges, rounds=4, checkpoint_every=2,
-                reliable=True, checkpoint_dir=ckpt,
-            ).collect(),
+    qvecs = _views(spark, SF_DIR)[1]
+
+    def run_all():
+        return (
+            rows(kcore_frame(edges, k=3, rounds=3)),
+            rows(pagerank(pr_edges, rounds=4, checkpoint_every=2)),
+            rows(connected_components(edges, "u", "v")),
+            rows(pq_build(qvecs)[1]),
         )
-    )
+
+    monkeypatch.delenv("SPARK_GRAFT_CKPT_RELIABLE_DIR", raising=False)
+    local_kcore, local_pr, local_cc, local_cb = run_all()
+
+    ckpt = tmp_path / "reliable_ckpt"
+    monkeypatch.setenv("SPARK_GRAFT_CKPT_RELIABLE_DIR", str(ckpt))
+    rel_kcore, rel_pr, rel_cc, rel_cb = run_all()
+
+    assert local_kcore == rel_kcore
     assert local_pr == rel_pr
-
-    local_cc = sorted(
-        map(tuple, connected_components(edges, "u", "v").collect())
-    )
-    rel_cc = sorted(
-        map(
-            tuple,
-            connected_components(
-                edges, "u", "v", reliable=True, checkpoint_dir=ckpt
-            ).collect(),
-        )
-    )
     assert local_cc == rel_cc
-
-
-def test_reliable_checkpoint_requires_dir(spark):
-    """reliable=True without any checkpoint dir must fail loudly, not
-    fall back to the unreplicated local path."""
-    import pytest
-
-    from mapreduce_framework_spark.operators.components import iter_checkpoint
-
-    if spark.sparkContext.getCheckpointDir() is not None:
-        pytest.skip("a checkpoint dir is already set session-wide")
-    df = spark.range(3)
-    with pytest.raises(ValueError, match="checkpoint dir"):
-        iter_checkpoint(df, reliable=True)
+    assert local_cb == rel_cb
+    # One run-scoped subdirectory (the dir is pointed there once), and
+    # checkpointed RDD data inside it.
+    run_dirs = list(ckpt.iterdir())
+    assert len(run_dirs) == 1, run_dirs
+    assert any(run_dirs[0].glob("rdd-*")), "the reliable path never wrote"
 
 
 def test_knn_edges_set_form_matches_join_form(spark):
@@ -756,7 +736,7 @@ def test_knn_edges_set_form_matches_join_form(spark):
             F.least("s1", "s2").alias("u"), F.greatest("s1", "s2").alias("v")
         ).distinct()
 
-    got = sorted(map(tuple, knn_edges_frame(l, 5).collect()))
+    got = sorted(map(tuple, knn_edges_frame(l).collect()))
     ref = sorted(map(tuple, edges_join_form(l, 5).collect()))
     assert got, "probe graph should produce edges"
     assert got == ref

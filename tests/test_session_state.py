@@ -28,6 +28,17 @@ STATEFUL_KEYS = (
     "dedup_clusters",
     "join_bloom_filtered",
     "stream_watermark_late",
+    # one key per module with a materialize.checkpoint site
+    "sim_search_lsh",
+    "sim_search_pq",
+    "embedding_power_iteration",
+    "dedup_semantic",
+    "pipeline_mix_rebalance",
+    "profile_benford",
+    "tfidf_topk",
+    "events_rfm_segmentation",
+    "dedup_simhash",
+    "sink_zorder",
 )
 
 # Every key that writes per-call scratch through io.user_scratch_dir.
@@ -89,11 +100,24 @@ ENGINE_RULES = (
         {"operators/annsearch.py"},
         set(),
     ),
+    (
+        "eager materialization outside operators/materialize.py",
+        r"\.(localCheckpoint|checkpoint)\(",
+        {"operators/materialize.py"},
+        set(),
+    ),
 )
 
 
 def _persistent_rdds(spark) -> set[int]:
-    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    """Ids of the registered persistent RDDs, read through SparkContext's
+    weak-valued registry.  ``getPersistentRDDs()`` would hand back a
+    copy holding every RDD strongly, and py4j releases that copy
+    asynchronously: a poll that runs before the release re-pins the
+    RDDs it is waiting for, so a collectable RDD can stay registered
+    for as long as the poll goes on."""
+    ids = spark.sparkContext._jsc.sc().persistentRdds().keys().mkString(",")
+    return {int(i) for i in ids.split(",") if i}
 
 
 def _new_persistent_rdds(spark, before: set[int], timeout_s: float = 60.0) -> set[int]:
@@ -175,8 +199,9 @@ def test_engine_patterns_go_through_their_helper():
     """Engine code writes session confs only through scoped_confs
     (session.py), takes scratch directories only from
     io.user_scratch_dir, intersects token sets only in the
-    operators/minhash.py kernels, and trains or encodes PQ codes only
-    in operators/annsearch.py; see ENGINE_RULES."""
+    operators/minhash.py kernels, trains or encodes PQ codes only in
+    operators/annsearch.py, and materializes eagerly only in
+    operators/materialize.py; see ENGINE_RULES."""
     hits = []
     for path in sorted(PKG.rglob("*.py")):
         rel = path.relative_to(PKG).as_posix()

@@ -483,7 +483,7 @@ def build_tiers(spark, small: int, big: int) -> dict[str, dict[int, callable]]:
         # (round-11 task #7 posture).
         from mapreduce_framework_spark.queries.graphs import knn_edges_frame
 
-        edges = knn_edges_frame(corpus("membership", n), 5)
+        edges = knn_edges_frame(corpus("membership", n))
         deg = (
             edges.select(F.col("u").alias("node"))
             .unionByName(edges.select(F.col("v").alias("node")))
@@ -571,7 +571,7 @@ def build_tiers(spark, small: int, big: int) -> dict[str, dict[int, callable]]:
             from mapreduce_framework_spark.io import user_scratch_dir
             from mapreduce_framework_spark.queries.graphs import knn_edges_frame
 
-            edges = knn_edges_frame(corpus("membership", n), 5)
+            edges = knn_edges_frame(corpus("membership", n))
             adj = edges.select(
                 F.col("u").alias("src"), F.col("v").alias("dst")
             ).unionByName(
@@ -615,7 +615,7 @@ def build_tiers(spark, small: int, big: int) -> dict[str, dict[int, callable]]:
             knn_edges_frame,
         )
 
-        edges = knn_edges_frame(corpus("membership", n), 5)
+        edges = knn_edges_frame(corpus("membership", n))
         adj = edges.select(
             F.col("u").alias("src"), F.col("v").alias("dst")
         ).unionByName(edges.select(F.col("v").alias("src"), F.col("u").alias("dst")))
