@@ -159,12 +159,12 @@ def run_job(
     return result
 
 
-def write_kv_text(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+def write_kv_text(df: DataFrame, path: str) -> None:
     """Sink in the reference's output format: one text file per
     partition of ``key:value`` lines (workerimpl.cc:256-261,319-333)."""
     df.select(
         F.concat_ws(":", F.col("key"), F.col("value").cast("string")).alias("value")
-    ).write.mode(mode).text(path)
+    ).write.mode("overwrite").text(path)
 
 
 def read_kv_text(spark: SparkSession, path: str) -> DataFrame:
@@ -174,18 +174,17 @@ def read_kv_text(spark: SparkSession, path: str) -> DataFrame:
     ``(.*)`` backtracks to the last ':' with an all-digit suffix —
     exactly ``rpartition`` + digit-check, the Python lane's grammar).
 
-    ONE grammar across lanes (round-9 ADVICE): lines that don't match
+    ONE grammar across lanes: lines that don't match
     ``^(.*):(-?[0-9]+)$`` are FILTERED here, identically to the Python
-    DataSource's ``parse_kv_lines`` skip — previously this lane mapped
-    a malformed line to a ``('', NULL)`` row, so the two lanes
-    disagreed on dirty/foreign sinks and a malformed line was
-    indistinguishable from the legitimate empty-string key.  ``[0-9]``
-    not ``\\d``: both lanes mean ASCII digits only (Python's ``\\d``
-    accepts unicode digits that ``CAST AS long`` then rejects).
+    DataSource's ``parse_kv_lines`` skip — mapping a malformed line to
+    a ``('', NULL)`` row would make it indistinguishable from the
+    legitimate empty-string key.  ``[0-9]`` not ``\\d``: both lanes
+    mean ASCII digits only (Python's ``\\d`` accepts unicode digits
+    that ``CAST AS long`` then rejects).
 
-    ONE generation resolution across lanes (round-10 verdict task #3):
-    a sink that has seen an overwrite commit carries a ``_manifest``
-    naming the live epoch; this lane resolves shards through the same
+    ONE generation resolution across lanes: a sink that has seen an
+    overwrite commit carries a ``_manifest`` naming the live epoch;
+    this lane resolves shards through the same
     :func:`..sources.kvtext_datasource.live_shard_names` helper the
     DataSource readers use, so a scan racing an overwrite observes
     old-or-new, never a torn mixture.  Manifest-less dirs (append-only
@@ -193,9 +192,8 @@ def read_kv_text(spark: SparkSession, path: str) -> DataFrame:
     source already skips ``_``/``.``-prefixed files — UNLESS the dir
     contains epoch-tagged ``part-e*`` shards: those belong to an
     in-flight or crashed FIRST overwrite's unpublished generation and
-    a whole-dir glob would read them torn (round-11 ADVICE #1), so
-    such dirs route through the same generation resolution as the
-    DataSource lane."""
+    a whole-dir glob would read them torn, so such dirs route through
+    the same generation resolution as the DataSource lane."""
     import os as _os
 
     from mapreduce_framework_spark.sources.kvtext_datasource import (

@@ -28,10 +28,10 @@ def dsum_sql(expr: str, scale: int = 2) -> str:
     return f"CAST(SUM(CAST({expr} AS DECIMAL(18,{scale}))) AS DOUBLE)"
 
 
-def davg(col: Column, scale: int = 2) -> Column:
+def davg(col: Column) -> Column:
     """Deterministic AVG: exact decimal sum, one double division."""
-    return dsum(col, scale) / F.count(F.lit(1))
+    return dsum(col) / F.count(F.lit(1))
 
 
-def davg_sql(expr: str, scale: int = 2) -> str:
-    return f"{dsum_sql(expr, scale)} / COUNT(*)"
+def davg_sql(expr: str) -> str:
+    return f"{dsum_sql(expr)} / COUNT(*)"

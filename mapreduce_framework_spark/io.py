@@ -31,20 +31,14 @@ TABLES = (
 # tables: 5 regions / 25 nations, fixed by the schema not by SF).
 ALWAYS_BROADCAST = frozenset({"region", "nation"})
 
-DEFAULT_SF_DIR = "/root/testdata/sf0.001"
-
-
-def sf_dir_from_env(default: str = DEFAULT_SF_DIR) -> str:
-    return os.environ.get("SPARK_GRAFT_SF_DIR", default)
-
 
 def user_tmp_root(prefix: str) -> str:
     """Mode-0700 per-user directory under the temp dir — the ONE
     implementation of the pattern (a predictable name directly under
     world-writable /tmp would let another local user pre-create and
-    poison the path; the round-8 ADVICE class).  Shared by the cache
-    root below and the scratch roots, so a future hardening (e.g. an
-    ownership check against symlink races) lands once."""
+    poison the path).  Shared by the cache root and the scratch roots,
+    so a future hardening (e.g. an ownership check against symlink
+    races) lands once."""
     import tempfile
 
     root = os.path.join(tempfile.gettempdir(), f"{prefix}_u{os.getuid()}")
@@ -66,27 +60,31 @@ def cache_sf_token(sf_dir: str) -> str:
     families.  A bare ``basename(sf_dir)`` is ambiguous under
     :func:`reap_superseded`'s prefix matching: family ``kind_sf1``
     prefix-matches ``kind_sf1_alt_...``, which puts sf1_alt's LIVE
-    cache inside sf1's family where one idle hour gets it reaped
-    (round-10 ADVICE).  Suffixing a short hash of the full normalized
-    path keeps same-SF tokens identical across sessions while making
-    cross-SF prefix nesting impossible in practice (the basenames
-    would have to nest AND the 24-bit-truncated hashes align exactly
-    at the nesting boundary)."""
+    cache inside sf1's family where one idle hour gets it reaped.
+    Suffixing a short hash of the full normalized path keeps same-SF
+    tokens identical across sessions while making cross-SF prefix
+    nesting impossible in practice (the basenames would have to nest
+    AND the 24-bit-truncated hashes align exactly at the nesting
+    boundary)."""
     import hashlib
 
     p = os.path.normpath(os.path.abspath(sf_dir))
     return f"{os.path.basename(p)}.{hashlib.sha1(p.encode()).hexdigest()[:6]}"
 
 
-def reap_superseded(family: str, keep: str, age_s: float = 3600.0) -> list[str]:
-    """Generation GC for the build-once artifact caches (round-9
-    verdict task #6: ``user_cache_root()`` accreted one directory per
-    (sf, file-identity, params) forever).  Removes sibling cache dirs
+# Idle time after which a superseded cache generation may be reaped.
+_REAP_AGE_S = 3600.0
+
+
+def reap_superseded(family: str, keep: str) -> list[str]:
+    """Generation GC for the build-once artifact caches (without it
+    ``user_cache_root()`` accretes one directory per (sf,
+    file-identity, params) forever).  Removes sibling cache dirs
     that share ``family`` (the stable prefix: artifact kind + every
     component that may legitimately coexist, e.g. the SF) but are not
     ``keep`` — i.e. generations whose file-identity/params/version
     component changed, which by the cache-key contract means their
-    input or code is gone.  The ``age_s`` guard (default 1 h) keeps a
+    input or code is gone.  The 1 h age guard keeps a
     concurrent session on an older code version from having its
     artifact reaped mid-read: a superseded dir is only removed once it
     has sat untouched past the guard.  Returns the reaped names (for
@@ -112,7 +110,7 @@ def reap_superseded(family: str, keep: str, age_s: float = 3600.0) -> list[str]:
             continue
         path = os.path.join(root, name)
         try:
-            if not os.path.isdir(path) or now - os.path.getmtime(path) < age_s:
+            if not os.path.isdir(path) or now - os.path.getmtime(path) < _REAP_AGE_S:
                 continue
             shutil.rmtree(path, ignore_errors=True)
             reaped.append(name)
@@ -121,9 +119,7 @@ def reap_superseded(family: str, keep: str, age_s: float = 3600.0) -> list[str]:
     return reaped
 
 
-def publish_cached(
-    cache_name: str, build, family: str | None = None, reap_age_s: float = 3600.0
-) -> str:
+def publish_cached(cache_name: str, build, family: str | None = None) -> str:
     """The ONE stage-then-atomic-rename cache publish (previously
     copy-pasted between the mapreduce corpus spill and the kv-sink
     cache — a hardening of the publish race must land once, here).
@@ -148,13 +144,13 @@ def publish_cached(
     Lazy-read window (documented limit): the mtime touch below marks
     last USE at cache-lookup time, but a Spark plan built over the
     returned path executes lazily — an action fired more than
-    ``reap_age_s`` after the lookup, with a newer generation published
-    in between and no intervening lookup, can lose the superseded
-    parquet mid-read to another session's sweep.  The repo's readers
-    re-resolve the cache per query invocation (every *_probe key calls
-    its cache fn before building the plan), which bounds the
-    lookup-to-action gap to one query's planning time — orders of
-    magnitude inside the 1 h guard.
+    :func:`reap_superseded`'s 1 h age guard after the lookup, with a
+    newer generation published in between and no intervening lookup,
+    can lose the superseded parquet mid-read to another session's
+    sweep.  The repo's readers re-resolve the cache per query
+    invocation (every *_probe key calls its cache fn before building
+    the plan), which bounds the lookup-to-action gap to one query's
+    planning time — orders of magnitude inside the 1 h guard.
     """
     import shutil
     import tempfile
@@ -165,9 +161,7 @@ def publish_cached(
         # age guard keys on mtime, and reads alone never update it — a
         # session steadily USING an older-generation artifact would
         # otherwise look idle and get reaped mid-read by a newer
-        # session's publish (round-10 review finding).  With the touch,
-        # mtime approximates last use and the guard means what its
-        # docstring says.
+        # session's publish.
         try:
             os.utime(dest)
         except OSError:
@@ -185,13 +179,13 @@ def publish_cached(
             # TMPDIR moved across filesystems between calls, EACCES —
             # must not fall through to "return a path that isn't
             # there": that surfaces later as a baffling missing-path
-            # error far from the cause (round-9 ADVICE).
+            # error far from the cause.
             if not os.path.isdir(dest):
                 shutil.rmtree(stage, ignore_errors=True)
                 raise
         shutil.rmtree(stage, ignore_errors=True)
     if family is not None:
-        reap_superseded(family, keep=cache_name, age_s=reap_age_s)
+        reap_superseded(family, keep=cache_name)
     return dest
 
 
@@ -264,15 +258,3 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         return df
     return spark.read.parquet(path)
 
-
-def read_text_corpus(spark: SparkSession, path: str) -> DataFrame:
-    """Reference-fidelity text source: one row per line, line-boundary-safe
-    splits (reference fixes word boundaries by hand, worker.h:196-232;
-    Spark's text source does this natively)."""
-    return spark.read.text(path)
-
-
-def write_parquet(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Default sink. One file per partition mirrors the reference's
-    ``out_<reducer_id>`` blob-per-reducer layout (workerimpl.cc:319-333)."""
-    df.write.mode(mode).parquet(path)

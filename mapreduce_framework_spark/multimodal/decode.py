@@ -112,9 +112,11 @@ def decode_images(payloads: DataFrame, codec: str = "fake") -> DataFrame:
 
 
 FRAME_SCHEMA = "doc_id long, frame_idx int, ts_ms long, frame_bytes long"
+FRAME_STEP_MS = 40
+MAX_FRAMES = 5
 
 
-def make_fake_frame_sampler(fps_ms: int = 40, max_frames: int = 5):
+def make_fake_frame_sampler():
     """Deterministic fake video frame-sampler: emits ROWS-PER-INPUT
     (1 + n_bytes // 1000, capped) 'frames' per payload — the expand
     shape of real frame sampling, where one mapInPandas input row
@@ -125,11 +127,11 @@ def make_fake_frame_sampler(fps_ms: int = 40, max_frames: int = 5):
         for pdf in batches:
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 n = len(payload)
-                frames = min(n // 1000 + 1, max_frames)
+                frames = min(n // 1000 + 1, MAX_FRAMES)
                 for i in range(frames):
                     out_doc.append(doc_id)
                     out_idx.append(i)
-                    out_ts.append(i * fps_ms)
+                    out_ts.append(i * FRAME_STEP_MS)
                     out_len.append(n)
         yield pd.DataFrame(
             {
@@ -151,9 +153,10 @@ def sample_frames(payloads: DataFrame) -> DataFrame:
 
 
 AUDIO_FEATURE_SCHEMA = "doc_id long, duration_ms long, features array<float>"
+N_AUDIO_FEATURES = 8
 
 
-def make_fake_audio_featurizer(n_features: int = 8):
+def make_fake_audio_featurizer():
     """Deterministic fake audio featurizer: fixed-size float vector per
     payload (byte-histogram moments stand in for MFCCs).  The
     array<float> output column is the exact shape an embedding /
@@ -167,7 +170,7 @@ def make_fake_audio_featurizer(n_features: int = 8):
                 docs.append(doc_id)
                 durs.append(n * 8)  # fake: 8 ms per byte
                 feats.append(
-                    [float((n >> k) & 0xFF) / 255.0 for k in range(n_features)]
+                    [float((n >> k) & 0xFF) / 255.0 for k in range(N_AUDIO_FEATURES)]
                 )
         yield pd.DataFrame(
             {
@@ -191,9 +194,10 @@ def extract_audio_features(payloads: DataFrame) -> DataFrame:
 RESIZE_SCHEMA = (
     "doc_id long, width int, height int, out_width int, out_height int, thumb binary"
 )
+THUMB_MAX_SIDE = 64
 
 
-def make_fake_resizer(max_side: int = 64):
+def make_fake_resizer():
     """Deterministic fake image resize: aspect-preserving target dims
     from the fake decoder's (width, height), 'thumbnail' = payload
     truncated to out_width*out_height bytes.  Real path: PIL
@@ -210,9 +214,9 @@ def make_fake_resizer(max_side: int = 64):
                 # differently across engines (Python int() truncates,
                 # SQL CAST rounds) and would break oracle parity.
                 m = max(w, h)
-                if m > max_side:
-                    ow = max((w * max_side) // m, 1)
-                    oh = max((h * max_side) // m, 1)
+                if m > THUMB_MAX_SIDE:
+                    ow = max((w * THUMB_MAX_SIDE) // m, 1)
+                    oh = max((h * THUMB_MAX_SIDE) // m, 1)
                 else:
                     ow, oh = max(w, 1), max(h, 1)
                 docs.append(doc_id)
@@ -232,10 +236,10 @@ def make_fake_resizer(max_side: int = 64):
     return resize_batches
 
 
-def resize_images(payloads: DataFrame, max_side: int = 64) -> DataFrame:
+def resize_images(payloads: DataFrame) -> DataFrame:
     """payloads(doc_id, payload binary) → resized-thumbnail rows
     (binary out column — sinks back to parquet losslessly)."""
-    return payloads.mapInPandas(make_fake_resizer(max_side), schema=RESIZE_SCHEMA)
+    return payloads.mapInPandas(make_fake_resizer(), schema=RESIZE_SCHEMA)
 
 
 FINGERPRINT_SCHEMA = "doc_id long, fp60 long"

@@ -14,7 +14,7 @@ replays it exactly:
   and the exact tail ranks only their members.  ``persist_cell_index``
   partitions the assignment by cell_id, so a probe prunes whole
   directories;
-- int8: ``quantize`` + ``quantized_topk``, an exact integer dot
+- int8: ``int8_quantize`` + ``quantized_topk``, an exact integer dot
   product rescaled by two per-vector factors;
 - LSH: ``hyperplane_buckets`` signs integer projections into
   (tbl, bucket) rows; ``lsh_topk`` re-ranks the Hamming-ball
@@ -172,7 +172,7 @@ def probe_cell_index(
     return brute_force_topk(pruned, query, k=k)
 
 
-def quantize(vectors: DataFrame) -> DataFrame:
+def int8_quantize(vectors: DataFrame) -> DataFrame:
     """Symmetric per-vector int8 quantization: scale = 127 / max|v|,
     codes = round(v·scale) ∈ [-127, 127].
 
@@ -202,7 +202,7 @@ def quantize(vectors: DataFrame) -> DataFrame:
 
 def quantized_topk(vectors: DataFrame, query: DataFrame, k: int = 10) -> DataFrame:
     """Top-k by rescaled quantized dot product.  ``vectors``/(1-row)
-    ``query`` are quantize() outputs (query columns: query_qv,
+    ``query`` are int8_quantize() outputs (query columns: query_qv,
     query_scale).  The integer dot is exact; the only float ops are the
     two scale factors — rounded to 6 for cross-engine hashing."""
     from mapreduce_framework_spark.functions.vector import dot
@@ -220,15 +220,19 @@ def quantized_topk(vectors: DataFrame, query: DataFrame, k: int = 10) -> DataFra
     )
 
 
-def occupancy_planes(n_vectors: int, target_occupancy: int = 64) -> int:
-    """Plane count for ~``target_occupancy`` vectors per bucket:
+# Target vectors per LSH bucket (see ``occupancy_planes``).
+_TARGET_OCCUPANCY = 64
+
+
+def occupancy_planes(n_vectors: int) -> int:
+    """Plane count for ~``_TARGET_OCCUPANCY`` vectors per bucket:
     smallest np ≥ 8 with 2^np ≥ n / target — i.e. the per-table bucket
     count GROWS with the corpus so candidate-set size (≈ ball_volume ·
     occupancy) stays bounded instead of growing linearly (a fixed 8
     planes grew the candidate set 5.8× for a 10× corpus).  Pure integer
     arithmetic ((n−1).bit_length(), no libm log2) so the DuckDB
     oracle's ``length(bin(n−1))`` reproduces it bit-exactly at any n."""
-    return max(8, (n_vectors - 1).bit_length() - (target_occupancy.bit_length() - 1))
+    return max(8, (n_vectors - 1).bit_length() - (_TARGET_OCCUPANCY.bit_length() - 1))
 
 
 def hyperplane_buckets(

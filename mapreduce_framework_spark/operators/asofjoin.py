@@ -31,23 +31,15 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def asof_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    ts: str,
-    payload_cols: list[str] | None = None,
-    suffix: str = "_asof",
-) -> DataFrame:
+def asof_join(left: DataFrame, right: DataFrame, on: str, ts: str) -> DataFrame:
     """For each left row, attach the payload of the latest right row
     with ``right.ts <= left.ts`` within the same ``on`` key (NULL
     payload when no prior right row exists).
 
-    ``payload_cols`` defaults to every right column except the key and
-    timestamp; attached columns are renamed ``<name><suffix>``.
+    The payload is every right column except the key and timestamp;
+    attached columns are renamed ``<name>_asof``.
     """
-    if payload_cols is None:
-        payload_cols = [c for c in right.columns if c not in (on, ts)]
+    payload_cols = [c for c in right.columns if c not in (on, ts)]
 
     lcols = left.columns
     l_tagged = left.select(
@@ -74,7 +66,7 @@ def asof_join(
         *lcols,
         "_side",
         *[
-            F.last(F.col(f"_p_{c}"), ignorenulls=True).over(w).alias(f"{c}{suffix}")
+            F.last(F.col(f"_p_{c}"), ignorenulls=True).over(w).alias(f"{c}_asof")
             for c in payload_cols
         ],
     )

@@ -66,12 +66,11 @@ def plan_size_estimate(df: DataFrame) -> int:
     return size if isinstance(size, int) else int(size.toString())
 
 
-def sized_local_checkpoint(df: DataFrame, *, min_bytes: int | None = None) -> DataFrame:
-    """``df`` unchanged if its estimated size is below ``min_bytes``
-    (default ``$SPARK_GRAFT_CKPT_MIN_BYTES``), else :func:`checkpoint`
-    of it — see the module docstring."""
-    if min_bytes is None:
-        min_bytes = int(os.environ.get("SPARK_GRAFT_CKPT_MIN_BYTES", _MIN_DEFAULT))
+def sized_local_checkpoint(df: DataFrame) -> DataFrame:
+    """``df`` unchanged if its estimated size is below
+    ``$SPARK_GRAFT_CKPT_MIN_BYTES`` (read per call), else
+    :func:`checkpoint` of it — see the module docstring."""
+    min_bytes = int(os.environ.get("SPARK_GRAFT_CKPT_MIN_BYTES", _MIN_DEFAULT))
     if plan_size_estimate(df) < min_bytes:
         return df
     return checkpoint(df)

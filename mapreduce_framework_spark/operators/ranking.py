@@ -1,9 +1,8 @@
 """Distributed exact global ranking and ntile — no single-partition window.
 
 A ``Window.orderBy(...)`` with no ``partitionBy`` funnels the ENTIRE
-input through one task: invisible at test scale, fatal at 100 TB (the
-same class as the round-6 watermark-fixture ntile, de-scaled in round
-7).  These helpers compute the identical numbers with the classic
+input through one task: invisible at test scale, fatal at 100 TB.
+These helpers compute the identical numbers with the classic
 distributed-ranking construction instead:
 
 1. ``repartitionByRange`` on the order expressions — partitions hold
@@ -76,14 +75,12 @@ def _ranked_and_counts(
     return ranked, counts
 
 
-def global_ranks(
-    df: DataFrame, order_cols: list[Column], rank_col: str = "rank"
-) -> DataFrame:
-    """``df`` plus a 1-based exact global ``rank_col`` under
+def global_ranks(df: DataFrame, order_cols: list[Column]) -> DataFrame:
+    """``df`` plus a 1-based exact global ``rank`` column under
     ``order_cols`` (which MUST define a total order — append a unique
     id as the last key), computed without any single-partition pass
     over the data."""
-    ranked, _ = _ranked_and_counts(df, order_cols, rank_col)
+    ranked, _ = _ranked_and_counts(df, order_cols, "rank")
     return ranked
 
 

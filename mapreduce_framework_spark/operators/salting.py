@@ -68,13 +68,16 @@ def salted_agg(
     return stage2
 
 
+# Cap on one hot key's salt count in ``adaptive_salted_join``.
+_MAX_SALTS = 256
+
+
 def adaptive_salted_join(
     big: DataFrame,
     small: DataFrame,
     on: str,
     salt_source: Column,
     rows_per_salt: int = 1_000_000,
-    max_salts: int = 256,
     how: str = "inner",
 ) -> DataFrame:
     """Two-pass skew-AWARE equi-join: the salt factor is derived per key
@@ -84,7 +87,7 @@ def adaptive_salted_join(
     Pass 1 (skinny, stays in the SAME plan — no driver action): per-key
     counts on the big side; keys above ``rows_per_salt`` become the hot
     set, each with its own salt count ``ceil(count / rows_per_salt)``
-    capped at ``max_salts``.  The hot set is a handful of (key, n_salts)
+    capped at ``_MAX_SALTS``.  The hot set is a handful of (key, n_salts)
     rows — broadcast.
 
     Pass 2: big rows on cold keys keep salt 0; hot-key rows spread over
@@ -112,7 +115,7 @@ def adaptive_salted_join(
         raise ValueError(f"adaptive_salted_join supports {sorted(allowed)}, not {how!r}")
     n_salts_col = F.least(
         F.ceil(F.col("_k_rows") / F.lit(rows_per_salt)).cast("int"),
-        F.lit(max_salts),
+        F.lit(_MAX_SALTS),
     )
     hot = (
         big.groupBy(on)
@@ -153,7 +156,6 @@ def salted_join(
     on: str,
     salt_source: Column,
     n_salts: int = 16,
-    how: str = "inner",
 ) -> DataFrame:
     """Skew-safe equi-join: salt the BIG side's hot keys across S
     partitions and replicate the small side S× so every salted row
@@ -175,4 +177,4 @@ def salted_join(
     small_replicated = small.withColumn(
         "_salt", F.explode(F.array(*[F.lit(i) for i in range(n_salts)]))
     )
-    return big_salted.join(small_replicated, [on, "_salt"], how).drop("_salt")
+    return big_salted.join(small_replicated, [on, "_salt"]).drop("_salt")

@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from mapreduce_framework_spark.operators.materialize import checkpoint
+from mapreduce_framework_spark.operators.minhash import MAX_BUCKET
 
 
 def md5_prefix60(token: Column) -> Column:
@@ -52,15 +53,15 @@ def fingerprints(
 
     ``dictionary_hash=True`` evaluates ``token_hash`` once per DISTINCT
     token instead of once per occurrence: distinct tokens → hash → join
-    the (token, hash) dictionary back onto the occurrences (round-13;
-    guide §1.2 "don't recompute").  Identical fingerprints — the hash is
-    a pure function of the token — with the hash evaluated |vocab| times
-    instead of |occurrences| times, which is the lever when the hash is
-    expensive (md5+base-16 conv costs ~20× an xxhash64).  The join stays
-    un-hinted: on a bounded vocabulary AQE broadcasts the dictionary
-    (map-side, no new shuffle of the occurrences); on an open vocabulary
-    it degrades to a shuffle join on the token — at that point prefer
-    the default per-occurrence lane, which shuffles nothing extra.
+    the (token, hash) dictionary back onto the occurrences.  Identical
+    fingerprints — the hash is a pure function of the token — with the
+    hash evaluated |vocab| times instead of |occurrences| times, which
+    is the lever when the hash is expensive (md5+base-16 conv costs
+    ~20× an xxhash64).  The join stays un-hinted: on a bounded
+    vocabulary AQE broadcasts the dictionary (map-side, no new shuffle
+    of the occurrences); on an open vocabulary it degrades to a shuffle
+    join on the token — at that point prefer the default
+    per-occurrence lane, which shuffles nothing extra.
     Leave False for cheap hashes: the dictionary's distinct aggregate
     costs more than xxhash64 saves."""
     if token_hash is None:
@@ -172,13 +173,13 @@ def _keyed_combo(fps: DataFrame, total_bits: int, max_distance: int) -> DataFram
     )
 
 
-def _bucket_pairs(keyed: DataFrame, max_distance: int, max_bucket: int) -> DataFrame:
+def _bucket_pairs(keyed: DataFrame, max_distance: int) -> DataFrame:
     """Group the keyed rows into buckets, generate pairs array-side
     inside each bucket, filter by exact Hamming distance."""
     buckets = (
         keyed.groupBy("key_id", "key_val")
         .agg(F.collect_list(F.struct(F.col("_id"), F.col("_fp"))).alias("xs"))
-        .where((F.size("xs") >= 2) & (F.size("xs") <= max_bucket))
+        .where((F.size("xs") >= 2) & (F.size("xs") <= MAX_BUCKET))
     )
 
     def pairs_of(xs: Column) -> Column:
@@ -212,7 +213,6 @@ def near_pairs(
     max_distance: int = 3,
     n_chunks: int = 4,
     width: int = 16,
-    max_bucket: int = 100_000,
     pair_budget_per_doc: int = 64,
     pair_budget_floor: int = 5_000_000,
 ) -> DataFrame:
@@ -220,15 +220,15 @@ def near_pairs(
     shuffle on fingerprint chunk keys (valid for max_distance ≤
     n_chunks−1), pairs generated within each bucket array-side.
 
-    ``max_bucket`` drops degenerate buckets, with the same rationale
-    and recall caveat as operators/minhash.py — a bucket of k docs
-    builds k² pair structs inside ONE collect_list row, so an unguarded
-    hot bucket is a memory hazard before it is a time problem.
+    Buckets past minhash's ``MAX_BUCKET`` members are dropped, with the
+    same rationale and recall caveat as operators/minhash.py — a bucket
+    of k docs builds k² pair structs inside ONE collect_list row, so an
+    unguarded hot bucket is a memory hazard before it is a time
+    problem.
 
-    HOMOGENEITY FALLBACK (automated; the round-3 probe measured the
-    problem, this closes it): on a low-vocabulary corpus fingerprints
-    concentrate and Σk² over MID-SIZE buckets — not one hot bucket —
-    dominates (244M pair structs at 400k synthetic ~100-word-vocab
+    HOMOGENEITY FALLBACK (automated): on a low-vocabulary corpus
+    fingerprints concentrate and Σk² over MID-SIZE buckets — not one
+    hot bucket — dominates (244M pair structs at 400k synthetic ~100-word-vocab
     docs, 21.6× time at 10× data, no bucket over 2.1k; the cap cannot
     fix that shape).  So before generating pairs, the operator measures
     the single-chunk bucket histogram — a one-row aggregate over ≤
@@ -270,4 +270,4 @@ def near_pairs(
         if over_budget
         else keyed_base
     )
-    return _bucket_pairs(keyed, max_distance, max_bucket)
+    return _bucket_pairs(keyed, max_distance)

@@ -15,12 +15,10 @@ from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 
-def observed(
-    df: DataFrame, *metrics: Column, name: str | None = None
-) -> tuple[DataFrame, Observation]:
+def observed(df: DataFrame, *metrics: Column) -> tuple[DataFrame, Observation]:
     """Attach metric expressions to the plan; read ``obs.get`` after an
     action.  Default metric set: row count."""
-    obs = Observation(name) if name else Observation()
+    obs = Observation()
     if not metrics:
         metrics = (F.count(F.lit(1)).alias("n_rows"),)
     return df.observe(obs, *metrics), obs

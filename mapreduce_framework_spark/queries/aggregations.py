@@ -283,7 +283,7 @@ def agg_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def approx_quantiles_frame(
-    df: DataFrame, group: str, col: str, probs: list[float], accuracy: int = 1000
+    df: DataFrame, group: str, col: str, probs: list[float]
 ) -> DataFrame:
     """Pure approx-percentile aggregate — the 100-TB serving path on
     its own, with no exact twin in the plan: ``approx_percentile`` is a
@@ -291,11 +291,11 @@ def approx_quantiles_frame(
     plan-pinned in tests/test_plans.py), so per-group quantiles cost
     one pass and NO per-group sort, and daily partials would merge the
     way agg_hll_partial_merge's sketches do.  Rank-error contract:
-    every returned value's rank is within ±1/accuracy of its target."""
+    every returned value's rank is within ±1/1000 of its target."""
     probs_sql = ", ".join(str(p) for p in probs)
     return df.groupBy(group).agg(
         F.expr(
-            f"approx_percentile({col}, array({probs_sql}), {accuracy})"
+            f"approx_percentile({col}, array({probs_sql}), 1000)"
         ).alias("aq")
     )
 
@@ -318,8 +318,8 @@ GROUP BY l_returnflag
     bench=True,
 )
 def agg_percentile_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The approx-percentile serving twin of agg_percentile (round-10
-    verdict task #7): exact percentile is a full-sort-per-group
+    """The approx-percentile serving twin of agg_percentile: exact
+    percentile is a full-sort-per-group
     operation, so the 100-TB path is ``approx_percentile`` — a
     GK/KLL-style mergeable sketch whose partials combine map-side and
     whose answer carries a RANK-error guarantee of ±1/accuracy.
@@ -335,7 +335,7 @@ def agg_percentile_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan — sketch aggregate only, no exact twin, no per-group sort —
     is :func:`approx_quantiles_frame`, plan-pinned separately.
 
-    Mergeability scope (round-11 verdict task #6, explicit non-goal):
+    Mergeability scope (explicit non-goal):
     the sketch's partials merge WITHIN a job — that is exactly the
     ObjectHashAggregate partial_merge the plan pin asserts, and it is
     what makes the single-pass 100-TB aggregate work.  CROSS-JOB
@@ -1033,10 +1033,8 @@ SELECT user_id, frequency, monetary_cents, r_score, f_score, m_score,
 FROM scored
 """.strip(),
     tags=("agg", "segmentation"),
-    # Gated (round-8 verdict task #5): PRICES_r07 one-shot moved
-    # 0.5->2.5 s coinciding with the deliberate exact_ntile rewrite —
-    # the distributed de-scale-kill price belongs in the gated suite
-    # (min-of-3 first recording in BENCH_r08, adjudicated in BASELINE.md).
+    # Bench member: the distributed exact_ntile price (one-shot 0.5 ->
+    # 2.5 s, adjudicated in BASELINE.md) belongs in the gated suite.
     bench=True,
 )
 def events_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1047,7 +1045,7 @@ def events_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     user_id tie-breaks keep ntile deterministic) and a CASE maps scores
     to named segments.
 
-    Scale (round 7 — prose made code): the per-user aggregate shuffles
+    Scale: the per-user aggregate shuffles
     purchases once; the three quartile scores then run through
     ``operators/ranking.exact_ntile`` — range repartition +
     partition-local ranks + broadcast offsets — instead of the

@@ -245,8 +245,8 @@ ray AS (
   -- The PER-TERM product must be hugeint too: when the adaptive cap
   -- engages, |w| is bounded only by 2^61 and v*w can exceed int64 —
   -- a bigint product would raise exactly in the regime the cap
-  -- exists for (round-9 review finding).  The SUM is then int128-
-  -- exact, the decimal lane's mirror; cast AFTER the division.
+  -- exists for.  The SUM is then int128-exact, the decimal lane's
+  -- mirror; cast AFTER the division.
   SELECT CAST(SUM(CAST(v2.v AS HUGEINT) * w3.w)
               // SUM(CAST(v2.v AS HUGEINT) * v2.v) AS BIGINT) AS lam
   FROM v2 JOIN w3 ON v2.j = w3.i
@@ -274,29 +274,15 @@ def embedding_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     G = XᵀX is an exact int64 outer-product aggregate, v₀ = 1,
     vₖ₊₁ = (G·vₖ) div (max|G·vₖ| div B + 1) — truncating division,
     identical toward-zero semantics in both engines.  The cap B is
-    ADAPTIVE (round-8 verdict task #2, de-cliffing the round-7
-    honest-headroom note): B = least(1000, 2^61 div (dim·max|G|)),
-    computed in-plan from G — equal to the constant 1000 at every
-    realistic scale (so the recorded hashes and the constant-1000
-    DuckDB oracle are unchanged; at the test SFs the adaptive term is
-    ≥ 1e13) and shrinking exactly when dim·max|G|·1000 would overflow
-    int64, which the old constant did past n ≈ 1.4e10 vectors.  The
-    remaining boundary is round 0's un-normalizable v₀ = 1: int64-safe
-    to n ≈ 1.4e13 vectors (≈3.5 PB raw fp32 at dim 64 — past a 100 TB
-    corpus); see power_rounds_frame for the bound derivation and the
-    overflow demonstration test.  Output: the 64 integer loadings plus
-    the Rayleigh quotient λ = ⌊vᵀGv / vᵀv⌋ — all hash-checked,
-    iteration included.
+    adaptive, B = least(1000, 2^61 div (dim·max|G|)), computed in-plan
+    from G (power_rounds_frame derives the bound).  Output: the 64
+    integer loadings plus the Rayleigh quotient λ = ⌊vᵀGv / vᵀv⌋ — all
+    hash-checked, iteration included.
 
-    Scale (100 TB): the ONLY corpus-sized work is building G, and the
-    EXECUTED lane (round 8, verdict task #2) is the Arrow accumulator
-    — each partition collapses to one dim² = 4096-cell int64 partial
-    per ~10k-row Arrow batch, then a single skinny dim² merge shuffle
-    (gram_matrix_arrow below; measured 3.2× faster than the exploded
-    posexplode+self-join at 2M vectors and ~linear beyond, where the
-    exploded lane's n×dim² intermediate turns super-linear).  The
-    exploded form is retained as the SQL-oracle mirror and pinned
-    bit-identical.  The power rounds run on the 4096-row G with the
+    Scale (100 TB): the ONLY corpus-sized work is building G, on the
+    Arrow accumulator (gram_matrix_arrow below; measured 3.2× faster
+    than the exploded posexplode+self-join at 2M vectors).  The power
+    rounds run on the 4096-row G with the
     64-row v broadcast — free at any scale, and more rounds cost only
     64×64-sized joins (the same reason Spark's own SVD does XᵀX first).
     Convergence to the true top eigenvector is data-dependent (spectral
@@ -308,47 +294,36 @@ def embedding_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     return power_iteration_frame(vecs)
 
 
-def power_iteration_frame(vecs: DataFrame, gram_lane: str = "arrow") -> DataFrame:
+def power_iteration_frame(vecs: DataFrame) -> DataFrame:
     """Two integer power-iteration rounds over the Gram matrix of a
     (vec_id, v array<double>) frame — reusable heart of
     embedding_power_iteration, shared with tools/scale_probe.py.
 
-    ``gram_lane`` picks how G = XᵀX is materialized: ``"arrow"``
-    (default — per-partition numpy int64 accumulation, one dim² partial
-    per Arrow batch; the 100 TB lane) or ``"exploded"`` (posexplode +
-    self-join, pure Catalyst; the SQL-oracle mirror). The two are
-    bit-identical (pinned by tests/test_scale_operators.py::
+    G = XᵀX comes from ``gram_matrix_arrow`` (per-partition numpy int64
+    accumulation, one dim² partial per Arrow batch; the 100 TB lane).
+    It is bit-identical to ``gram_matrix_exploded``, the pure-Catalyst
+    SQL-oracle mirror (pinned by tests/test_scale_operators.py::
     test_gram_arrow_equals_exploded), so everything downstream —
-    normalization, mat-vec rounds, Rayleigh quotient — is lane-
-    independent and stays hash-checked against the exploded oracle."""
-    if gram_lane == "arrow":
-        gram = gram_matrix_arrow(vecs)
-    elif gram_lane == "exploded":
-        gram = gram_matrix_exploded(vecs)
-    else:  # pragma: no cover - guarded misuse
-        raise ValueError(f"unknown gram_lane {gram_lane!r}")
-    return power_rounds_frame(gram)
+    normalization, mat-vec rounds, Rayleigh quotient — stays
+    hash-checked against the exploded oracle."""
+    return power_rounds_frame(gram_matrix_arrow(vecs))
 
 
 def power_rounds_frame(gram: DataFrame, adaptive_cap: bool = True) -> DataFrame:
     """Two integer power rounds + Rayleigh quotient over an (i, j, g)
     int64 Gram frame.
 
-    Normalization cap (round-8 verdict task #2 — the admitted int64
-    cliff, de-cliffed): each round renormalizes to |v| ≤ B where
+    Normalization cap: each round renormalizes to |v| ≤ B where
     ``B = least(1000, greatest(1, 2^61 div (dim · max|G|)))`` computed
     IN-PLAN from G itself (one skinny agg, broadcast everywhere).  The
     mat-vec intermediate is then |Σⱼ G·v| ≤ dim·max|G|·B ≤ 2^61 < 2^63
-    by construction at ANY corpus size — the old constant-1000 cap
-    overflowed past n ≈ 1.4e10 vectors.  Below that cliff the adaptive
-    term exceeds 1000, least() picks the constant, and results are
-    BIT-IDENTICAL to the recorded hashes (at the test SFs the adaptive
-    term is ≥ 1e13); past it the cap shrinks exactly as the old
-    docstring prescribed.  The remaining boundary is round 0's
-    un-normalizable v₀ = 1 (|G·1| ≤ dim·max|G|, int64-safe to
-    n ≈ 1.4e13 vectors ≈ 3.5 PB fp32 at dim 64) — three orders past
-    the old cliff and past a 100 TB corpus.  ``adaptive_cap=False``
-    keeps the legacy constant-1000 math; it exists so
+    by construction at ANY corpus size; a constant 1000 overflows past
+    n ≈ 1.4e10 vectors.  Below that point the adaptive term exceeds
+    1000 (≥ 1e13 at the test SFs), so least() picks the constant and
+    the constant-1000 DuckDB oracle matches.  The remaining boundary is
+    the first round's un-normalizable v₀ = 1 (|G·1| ≤ dim·max|G|,
+    int64-safe to n ≈ 1.4e13 vectors ≈ 3.5 PB fp32 at dim 64).
+    ``adaptive_cap=False`` keeps the constant-1000 math; it exists so
     tests/test_scale_operators.py can demonstrate the overflow the
     adaptive cap removes (Spark 4 ANSI mode turns the wraparound into
     an explicit error)."""
@@ -421,9 +396,9 @@ def power_rounds_frame(gram: DataFrame, adaptive_cap: bool = True) -> DataFrame:
 
 def gram_matrix_exploded(vecs: DataFrame) -> DataFrame:
     """Exact int64 Gram matrix (i, j, g) of a (vec_id, v array<double>)
-    frame via posexplode + self-join — the pure-Catalyst path
-    power_iteration_frame uses (hash-checkable against SQL, but pays a
-    dim² row blowup per vector)."""
+    frame via posexplode + self-join — the pure-Catalyst mirror of
+    gram_matrix_arrow (hash-checkable against SQL, but pays a dim² row
+    blowup per vector)."""
     e = vecs.select(
         "vec_id",
         F.posexplode(
@@ -440,10 +415,10 @@ def gram_matrix_exploded(vecs: DataFrame) -> DataFrame:
 
 
 def gram_matrix_arrow(vecs: DataFrame) -> DataFrame:
-    """The 100 TB Gram path — and, since round 8, the lane
-    embedding_power_iteration actually executes: Arrow-batched
-    per-partition outer-product accumulation.  Each mapInPandas batch quantizes its vectors to the
-    same int lattice and emits ONE dim×dim partial (4096 rows per
+    """The Gram path embedding_power_iteration executes: Arrow-batched
+    per-partition outer-product accumulation.  Each mapInPandas batch
+    quantizes its vectors to the same int lattice and emits ONE dim×dim
+    partial (4096 rows per
     BATCH, not per vector — the dim² row blowup the exploded path pays
     per row is paid once per ~10k-row Arrow batch); the final groupBy
     merges partials.  numpy's int64 matmul is exact, summation order
@@ -470,7 +445,7 @@ def gram_matrix_arrow(vecs: DataFrame) -> DataFrame:
             # Quantize HALF-AWAY-FROM-ZERO to match F.round / SQL round
             # (np.rint rounds half-to-even, which would silently diverge
             # from the Catalyst and oracle lanes on values whose x*100
-            # lands on .5 — round-7 ADVICE item).  PRECONDITION: the
+            # lands on .5).  PRECONDITION: the
             # floor(abs+0.5) emulation matches F.round only for inputs
             # already on (or near) the 1e-2 lattice this repo's
             # embeddings use — for arbitrary doubles the abs(x)+0.5

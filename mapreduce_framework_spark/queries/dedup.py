@@ -404,10 +404,9 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.split("text", " ").alias("toks")
     )
     # dictionary_hash: md5+conv is ~the whole fingerprint stage when
-    # evaluated per occurrence (round-12 profile); hashing the distinct
-    # token dictionary once and joining it back computes identical
-    # fingerprints with |vocab| md5 evaluations instead of
-    # |occurrences| (round-13; guide §1.2).
+    # evaluated per occurrence; hashing the distinct token dictionary
+    # once and joining it back computes identical fingerprints with
+    # |vocab| md5 evaluations instead of |occurrences|.
     fps = fingerprints(
         d,
         "doc_id",
@@ -510,15 +509,19 @@ def _sub_split(
     )
 
 
-def semantic_dedup_frame(
-    e: DataFrame, tau: float = 0.4, occupancy: int = 64, cluster_cap: int = 1024
-) -> DataFrame:
+# SemDeDup's cosine keep threshold and its per-cluster sub-split cap
+# (16× the expected occupancy).
+_SEMDEDUP_TAU = 0.4
+_CLUSTER_CAP = 1024
+
+
+def semantic_dedup_frame(e: DataFrame, occupancy: int = 64) -> DataFrame:
     """Frame core of dedup_semantic over ``e = (vec_id, v:
     array<double>)`` — separated so tools/scale_probe.py can measure
     growth on synthetic corpora with the REAL operator code.  Returns
     (vec_id, cluster_id, keep).
 
-    ``cluster_cap`` is the ENFORCED guard against assignment skew.  k
+    ``_CLUSTER_CAP`` is the ENFORCED guard against assignment skew.  k
     pins EXPECTED occupancy at ~``occupancy``, but a near-identical
     vector ball can still pile one cluster to O(n); any cluster over
     the cap is sub-split by the balanced key ``vec_id mod ceil(m_c /
@@ -532,7 +535,7 @@ def semantic_dedup_frame(
     tiers.  HOW OFTEN the cap engages (and the exact count of pairs it
     declined to compare) is surfaced by the companion key
     `dedup_semantic_cap_report`."""
-    m = _sub_split(*_semantic_assignment(e, occupancy), cluster_cap)
+    m = _sub_split(*_semantic_assignment(e, occupancy), _CLUSTER_CAP)
     a = m.select(
         F.col("vec_id").alias("id_a"), "cid", "_sub", F.col("vd").alias("va")
     )
@@ -542,7 +545,7 @@ def semantic_dedup_frame(
     drops = (
         a.join(b, ["cid", "_sub"])
         .where(F.col("id_a") < F.col("id_b"))
-        .where(F.round(cosine(F.col("va"), F.col("vb")), 6) >= F.lit(tau))
+        .where(F.round(cosine(F.col("va"), F.col("vb")), 6) >= F.lit(_SEMDEDUP_TAU))
         .select(F.col("id_b").alias("vec_id"))
         .distinct()
         .withColumn("_d", F.lit(1))
@@ -619,7 +622,7 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     transitive closure — no iteration, fully deterministic.
 
     Assignment SKEW is guarded in-plan, not by expectation: clusters
-    over ``cluster_cap`` (1024 = 16× expected occupancy) sub-split on
+    over ``_CLUSTER_CAP`` (1024 = 16× expected occupancy) sub-split on
     the balanced key ``vec_id mod ceil(m_c/cap)`` — oracle-mirrored,
     identity below the cap, bounded pair work above it (a planted
     near-identical ball of n/2 vectors measures 1.1× wall at 4× data
@@ -687,8 +690,8 @@ FROM clus GROUP BY cap
     bench=True,
 )
 def dedup_semantic_cap_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cluster-cap engagement accounting for `dedup_semantic` (round-5
-    verdict ask: the cap must not lower recall SILENTLY).  Runs the
+    """Cluster-cap engagement accounting for `dedup_semantic` (the cap
+    must not lower recall SILENTLY).  Runs the
     exact assignment `dedup_semantic` runs (`_semantic_assignment` is
     shared code, not a re-derivation) and reports, per cap tier, how
     the sub-split guard would engage: the production cap (1024) and a
@@ -946,7 +949,7 @@ def dedup_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     kernel affordable at corpus scale (same blocked-verify shape as
     the exact tier of dedup_minhash).
 
-    Round-6 kernel upgrade, both LOSSLESS: (a) the length band
+    Two LOSSLESS kernel prunes: (a) the length band
     |len_a−len_b| ≤ 24 prunes before any DP (≥ k length delta forces
     ≥ k edits); (b) the THRESHOLDED levenshtein builtin runs the banded
     O(threshold·n) DP with early exit instead of the full O(m·n) table
@@ -1430,27 +1433,28 @@ def _gate_dup_broadcast(
     return cached
 
 
-def chunk_dedup_frame(d: DataFrame, span_tokens: int = 16) -> DataFrame:
+# Token width of every span/chunk dedup window.
+_SPAN_TOKENS = 16
+
+
+def chunk_dedup_frame(d: DataFrame) -> DataFrame:
     """Span-dedup core over a (doc_id, text) frame — the reusable heart
     of dedup_chunk_exact, shared with tools/scale_probe.py so the probe
     times the real operator."""
+    k = _SPAN_TOKENS
     tk = F.split("text", " ")
-    n_chunks = F.ceil(F.size(tk) / F.lit(float(span_tokens))).cast("int")
+    n_chunks = F.ceil(F.size(tk) / F.lit(float(k))).cast("int")
     chunks = d.select(
         "doc_id",
         # The span key that shuffles is a 128-bit digest, not the span
         # text: min-owner grouping only needs EQUALITY of spans, and
         # md5 is injective in practice, so results are identical while
         # every shuffled key is 16 bytes regardless of span length —
-        # the same re-key trick as contamination_ngram, now code
-        # instead of the "at 100 TB you would" prose this line carried
-        # through round 6.
+        # the same re-key trick as contamination_ngram.
         F.explode(
             F.transform(
                 F.sequence(F.lit(0), n_chunks - F.lit(1)),
-                lambda i: F.md5(
-                    F.array_join(F.slice(tk, i * span_tokens + 1, span_tokens), " ")
-                ),
+                lambda i: F.md5(F.array_join(F.slice(tk, i * k + 1, k), " ")),
             )
         ).alias("chunk"),
     )
@@ -1482,7 +1486,7 @@ def chunk_dedup_frame(d: DataFrame, span_tokens: int = 16) -> DataFrame:
         .where(F.col("c") >= 2)
         .select("chunk", "owner"),
         d,
-        span_tokens,
+        _SPAN_TOKENS,
     )
     owned = chunks.join(owners, "chunk", "left").select("doc_id", "owner")
     kept = F.sum(
@@ -1533,8 +1537,8 @@ def dedup_span_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     the offset-alignment miss of dedup_chunk_exact: a span duplicated
     at offset 3 in one doc and offset 9 in another straddles 16-token
     ALIGNED chunk boundaries in both and chunk dedup never sees it
-    (round-9 verdict task #2; tests/test_operators.py pins the miss
-    with exactly that fixture).
+    (tests/test_operators.py pins the miss with exactly that
+    fixture).
 
     Semantics: every 16-token window at EVERY offset (the suffix-array
     k-gram equivalent; 16 tokens ≈ the paper's 50-char threshold on
@@ -1563,12 +1567,14 @@ def dedup_span_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return span_dedup_frame(table(spark, sf_dir, "documents"))
 
 
-def span_grams(d: DataFrame, k: int = 16) -> DataFrame:
-    """(doc_id, pos, g): the content digest of every k-token window at
-    every token offset of a (doc_id, text) frame.  Docs shorter than k
+def span_grams(d: DataFrame) -> DataFrame:
+    """(doc_id, pos, g): the content digest of every ``_SPAN_TOKENS``
+    window at every token offset of a (doc_id, text) frame.  Docs
+    shorter than the window
     emit nothing (F.sequence with start > stop would run DESCENDING,
     silently minting phantom grams — hence the filter).  Shared by the
     full-corpus span pass and the incremental batch-vs-corpus probe."""
+    k = _SPAN_TOKENS
     tk = F.split("text", " ")
     toks = d.select("doc_id", tk.alias("tk"), F.size(tk).alias("n"))
     return (
@@ -1589,7 +1595,7 @@ def span_grams(d: DataFrame, k: int = 16) -> DataFrame:
     )
 
 
-def span_dup_positions(d: DataFrame, k: int = 16) -> DataFrame:
+def span_dup_positions(d: DataFrame) -> DataFrame:
     """DISTINCT duplicated token positions (doc_id, p) under the
     offset-exact keep-first gram semantics — the shared core of the
     span-dedup report (dedup_span_exact) and the removal twin
@@ -1639,7 +1645,7 @@ def span_dup_positions(d: DataFrame, k: int = 16) -> DataFrame:
     makes the choice: cheap gram-count upper bound, exact pre-flight
     count only when the bound overflows, AQE-skew-splittable shuffle
     join when the dup set is genuinely corpus-scale."""
-    grams = span_grams(d, k)
+    grams = span_grams(d)
     pos_bits = 25
     ord_ = F.when(
         F.col("doc_id").between(0, (1 << (63 - pos_bits)) - 1)
@@ -1660,17 +1666,18 @@ def span_dup_positions(d: DataFrame, k: int = 16) -> DataFrame:
         1,  # grams/doc = max(0, n_tok - k + 1) ≤ n_tok
     )
     dup = grams.join(first, "g").where(ord_ != F.col("first_ord"))
+    span_end = F.col("pos") + (_SPAN_TOKENS - 1)
     covered = dup.select(
-        "doc_id", F.explode(F.sequence(F.col("pos"), F.col("pos") + (k - 1))).alias("p")
+        "doc_id", F.explode(F.sequence(F.col("pos"), span_end)).alias("p")
     )
     return covered.distinct()
 
 
-def span_dedup_frame(d: DataFrame, k: int = 16) -> DataFrame:
+def span_dedup_frame(d: DataFrame) -> DataFrame:
     """Offset-exact span-dedup core over a (doc_id, text) frame — the
     reusable heart of dedup_span_exact, shared with
     tools/scale_probe.py so the probe times the real operator."""
-    per_doc = span_dup_positions(d, k).groupBy("doc_id").agg(
+    per_doc = span_dup_positions(d).groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_dup")
     )
     n_dup = F.coalesce(F.col("n_dup"), F.lit(0))
@@ -1854,8 +1861,8 @@ def dedup_span_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from pyspark.sql import Window
 
-    k = 16
-    grams_all = span_grams(d.select("doc_id", "text"), k).join(
+    k = _SPAN_TOKENS
+    grams_all = span_grams(d.select("doc_id", "text")).join(
         d.select("doc_id", "split"), "doc_id"
     )
     corpus_g = (
@@ -2053,7 +2060,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     containment ≈ 1), which is why curation pipelines (RefinedWeb
     shape) run a containment tier besides the symmetric one.
 
-    Guarded by :func:`containment_pairs` (round-5): same enforced
+    Guarded by :func:`containment_pairs`: same enforced
     ``block_cap`` category routing as dedup_ngram_jaccard, with a
     LOSSLESS prefix-filter overflow tier instead of MinHash — the
     result equals the oracle's plain quadratic join at ANY corpus size,
@@ -2121,12 +2128,11 @@ def dedup_ladder_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Checkpoint of the fingerprinted/tokenized frame: its lazy form is
     # evaluated twice even inside one `flagged` computation (the keeper
     # aggregate side and the probe side of the fp join), so without it
-    # the corpus is scanned + md5'd + tokenized 2× per consumer
-    # (round-12; guide §1.2).  Size-gated (round-13): the driver's r12
-    # bench showed the eager form LOSING at sf0.1 (0.78× — two
-    # materialization jobs on a few-MB corpus cost more than the
+    # the corpus is scanned + md5'd + tokenized 2× per consumer.
+    # Size-gated: an unconditional eager form measured 0.78× at sf0.1
+    # (two materialization jobs on a few-MB corpus cost more than the
     # re-scans they save); operators/materialize.py keeps small inputs
-    # lazy and bounds the corpus-sized case per guide §5.
+    # lazy.
     d = sized_local_checkpoint(
         table(spark, sf_dir, "documents").select(
             "doc_id",
@@ -2137,7 +2143,7 @@ def dedup_ladder_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     keeper = d.groupBy("fp").agg(F.min("doc_id").alias("keep_id"))
-    # Materialize the tier-1 verdict ONCE (round-12; guide §1.2): the
+    # Materialize the tier-1 verdict ONCE: the
     # lazy `flagged` is consumed both by tier 2 (via `surv`, whose
     # lineage the banded tier would otherwise re-derive) and by the
     # final attrition rollup (`full`) — each re-running the documents

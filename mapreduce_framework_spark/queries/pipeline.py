@@ -558,8 +558,6 @@ SELECT source, tokens, share_ppm,
 FROM ranked
 """.strip(),
     tags=("pipeline", "mix"),
-    # Gated round 8 (verdict task #6): every other round-7 key is in
-    # the headline suite; priced 0.69 s one-shot in PRICES_r07.
     bench=True,
 )
 def corpus_token_budget_plan(spark: SparkSession, sf_dir: str) -> DataFrame:

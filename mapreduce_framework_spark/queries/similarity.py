@@ -13,6 +13,7 @@ from mapreduce_framework_spark.operators.annsearch import (
     PQ_SUB_DIM,
     assign_cells,
     brute_force_topk,
+    int8_quantize,
     ivf_topk,
     ivf_topk_batch,
     lsh_topk,
@@ -22,12 +23,11 @@ from mapreduce_framework_spark.operators.annsearch import (
     pq_subvectors,
     probe_cells,
     probe_pq_index,
-    quantize,
     quantized_topk,
     read_pq_index,
     topk_per_query,
 )
-from mapreduce_framework_spark.operators.kmeans import quantize as kquantize
+from mapreduce_framework_spark.operators.kmeans import quantize
 from mapreduce_framework_spark.operators.materialize import checkpoint
 from mapreduce_framework_spark.registry import register
 
@@ -46,7 +46,7 @@ def _views(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     e = F.col("embedding")
     return (
         emb.select("vec_id", "label", e.cast("array<double>").alias("v")),
-        emb.select("vec_id", kquantize(e).alias("v")),
+        emb.select("vec_id", quantize(e).alias("v")),
     )
 
 
@@ -398,7 +398,7 @@ def sim_search_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate set (tests pin the recall of this pass vs the exact
     baseline)."""
     vectors = _vectors(spark, sf_dir).select("vec_id", "v")
-    q = quantize(vectors)
+    q = int8_quantize(vectors)
     query = q.where(F.col("vec_id") == 0).select(
         F.col("qv").alias("query_qv"), F.col("scale").alias("query_scale")
     )

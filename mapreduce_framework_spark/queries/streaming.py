@@ -137,7 +137,7 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stream_watermark_late",
-    # Exact watermark-semantics oracle (round 6; was rows-only): the
+    # Exact watermark-semantics oracle: the
     # explicit batch assignment (batch_col path of run_file_stream) is
     # pure SQL, so DuckDB replays the watermark progression itself —
     # batches 1-3 are the non-late rows split at the 1/3 and 2/3 points
@@ -358,17 +358,14 @@ def stream_watermark_drop_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg((F.max("ts") - F.expr("INTERVAL 10 MINUTES")).alias("wm"))
     )
     fwm = events.agg((F.max("ts") - F.expr("INTERVAL 10 MINUTES")).alias("fw"))
-    # ONE grouped pass computes every semantic count (round-12
-    # optimization; guide §1.2 "don't compute things twice" / §2.3
-    # "aggregate before you shuffle"): the round-9 shape ran SIX
-    # separate count jobs — n_input, n_late, admitted, dropped-groups
-    # distinct, kept-windows — each rescanning events (and several
-    # re-deriving the watermark subtree inside their broadcasts).  All
-    # of them are functions of the per-(window, event_type) group
-    # totals: a late row is admitted iff its window's end > wm (a
-    # GROUP-level predicate — every row of a group shares its window),
-    # so one aggregate keyed on (window, type) + one scalar roll-up
-    # yields identical numbers with one events scan.
+    # ONE grouped pass computes every semantic count: six separate count
+    # jobs (n_input, n_late, admitted, dropped-groups distinct,
+    # kept-windows) would each rescan events.  All of them are functions
+    # of the per-(window, event_type) group totals: a late row is
+    # admitted iff its window's end > wm (a GROUP-level predicate —
+    # every row of a group shares its window), so one aggregate keyed
+    # on (window, type) + one scalar roll-up yields identical numbers
+    # with one events scan.
     per_group = (
         events.crossJoin(F.broadcast(wmf))
         .crossJoin(F.broadcast(fwm))
@@ -487,9 +484,8 @@ JOIN events p
  AND p.ts < c.ts + INTERVAL 10 MINUTE
 """.strip(),
     tags=("streaming", "join"),
-    # Gated (round-8 verdict task #5): its one-shot PRICES_r07 moved
-    # 5.3->15.5 s on a loaded box; bench membership makes drift visible
-    # against a min-of-3 first recording instead of one-shot noise.
+    # Bench member: its one-shot price swung 5.3->15.5 s on a loaded
+    # box; min-of-3 makes drift visible instead of one-shot noise.
     bench=True,
 )
 def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -815,8 +811,8 @@ WHERE a.sid < m.max_sid OR end_ms + 43200000 < w
     bench=True,
 )
 def stream_session_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TIMER-DRIVEN session emission on the real micro-batch path
-    (round-8 verdict task #5): per-user 12 h-gap sessions where the
+    """TIMER-DRIVEN session emission on the real micro-batch path:
+    per-user 12 h-gap sessions where the
     closing row is produced because TIME passed — the event-time timer
     re-armed at last_ts + gap fires when the watermark crosses it and
     emits the session — not because an input row arrived (arriving

@@ -438,7 +438,7 @@ def contamination_frame(d: DataFrame, n: int = 5) -> DataFrame:
         # string-exact DuckDB oracle stays collision-free and green.
         .select("doc_id", "split", F.xxhash64("gram").alias("gh"))
     )
-    # One gram pass (round-12; guide §1.2): lazily, the 5-gram
+    # One gram pass: lazily, the 5-gram
     # construction ran THREE times (train side, eval-hits side,
     # eval-denominator side).  Materialize the hashed gram frame once
     # (skinny (doc_id, split, int64) rows — the expensive string work
@@ -447,8 +447,8 @@ def contamination_frame(d: DataFrame, n: int = 5) -> DataFrame:
     # distinct train set: train is distinct on gh, so the left join
     # preserves eval row multiplicity — count(*) is the old `base`
     # and count(match) the old `hits`, bit-identically.  Size-gated
-    # (round-13; operators/materialize.py): lazy below the
-    # materialization break-even, bounded above the §5 disk risk.
+    # (operators/materialize.py): lazy below the materialization
+    # break-even.
     g = sized_local_checkpoint(g)
     train = (
         g.where(F.col("split") == "train")
@@ -803,7 +803,7 @@ def lm_perplexity_frame(d: DataFrame) -> DataFrame:
     """Bigram-LM scoring core over a (doc_id, text) frame — reusable
     heart of quality_lm_perplexity, shared with tools/scale_probe.py.
 
-    The count-table joins carry NO broadcast hint (round-5; a hint
+    The count-table joins carry NO broadcast hint (a hint
     bypasses Spark's size threshold, so on an open vocabulary the full
     bigram table would be collected to the driver — exactly the OOM
     the docstring's scale note warns about).  AQE sizes the actual
@@ -904,8 +904,8 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ngram_novelty_frame(d)
 
 
-def ngram_novelty_frame(d: DataFrame, n: int = 5) -> DataFrame:
-    """Per-source duplicate-n-gram coverage from a (doc_id, source, t)
+def ngram_novelty_frame(d: DataFrame) -> DataFrame:
+    """Per-source duplicate-5-gram coverage from a (doc_id, source, t)
     frame — the reusable core of text_ngram_novelty, shared with
     tools/scale_probe.py so the probe times the real operator."""
     from mapreduce_framework_spark.functions.tokenize import word_ngrams
@@ -915,20 +915,19 @@ def ngram_novelty_frame(d: DataFrame, n: int = 5) -> DataFrame:
             "doc_id",
             "source",
             F.explode_outer(
-                F.array_distinct(word_ngrams(F.col("t"), n))
+                F.array_distinct(word_ngrams(F.col("t"), 5))
             ).alias("gram"),
         )
         .where(F.col("gram").isNotNull())
         .select("doc_id", "source", F.xxhash64("gram").alias("gh"))
     )
-    # Join back only the DUPLICATED grams (round-12 optimization; guide
-    # §2.3 "shuffle fewer bytes"): every gram matches the full df table
-    # (df ≥ 1 by construction), so the inner join carried the whole
-    # gram vocabulary as build side just to evaluate df >= 2.  Filtering
-    # to the df ≥ 2 set first shrinks the build side to the duplicated
-    # minority (the quantity this audit exists to measure), which keeps
-    # it broadcastable far longer at scale; a left join + null flag is
-    # then exactly df >= 2.  Identical output.
+    # Join back only the DUPLICATED grams: every gram matches the full
+    # df table (df ≥ 1 by construction), so an inner join would carry
+    # the whole gram vocabulary as build side just to evaluate df >= 2.
+    # Filtering to the df ≥ 2 set first shrinks the build side to the
+    # duplicated minority (the quantity this audit exists to measure),
+    # which keeps it broadcastable far longer at scale; a left join +
+    # null flag is then exactly df >= 2.
     dup = (
         g.groupBy("gh")
         .agg(F.count(F.lit(1)).alias("df"))

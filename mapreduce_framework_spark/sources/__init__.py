@@ -27,17 +27,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 
-def read_csv(
-    spark: SparkSession, path: str, schema: StructType, header: bool = True
-) -> DataFrame:
+def read_csv(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
     """CSV scan with a declared schema (no inference pass).  Pushdown:
     Spark's CSV source supports filter pushdown at the parser level —
     skipped rows are never materialized."""
-    return spark.read.schema(schema).option("header", header).csv(path)
+    return spark.read.schema(schema).option("header", True).csv(path)
 
 
-def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).option("header", True).csv(path)
+def write_csv(df: DataFrame, path: str) -> None:
+    df.write.mode("overwrite").option("header", True).csv(path)
 
 
 def read_json_lines(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
@@ -46,8 +44,8 @@ def read_json_lines(spark: SparkSession, path: str, schema: StructType) -> DataF
     return spark.read.schema(schema).json(path)
 
 
-def write_json_lines(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).json(path)
+def write_json_lines(df: DataFrame, path: str) -> None:
+    df.write.mode("overwrite").json(path)
 
 
 def read_orc(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
@@ -57,17 +55,15 @@ def read_orc(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
     return spark.read.schema(schema).orc(path)
 
 
-def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).orc(path)
+def write_orc(df: DataFrame, path: str) -> None:
+    df.write.mode("overwrite").orc(path)
 
 
-def write_partitioned(
-    df: DataFrame, path: str, partition_cols: list[str], mode: str = "overwrite"
-) -> None:
+def write_partitioned(df: DataFrame, path: str, partition_cols: list[str]) -> None:
     """Hive-layout parquet: one directory per partition-column value.
     Reads filtered on partition columns list only matching directories
     (PartitionFilters in the scan — zero I/O for pruned partitions)."""
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
+    df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
 
 
 def overwrite_partitions_dynamic(
@@ -87,19 +83,18 @@ def overwrite_partitions_dynamic(
     )
 
 
-def write_compacted(
-    df: DataFrame,
-    path: str,
-    target_file_bytes: int = 256 * 1024 * 1024,
-    mode: str = "overwrite",
-) -> None:
-    """Write parquet with a bounded file count sized to a target file
-    size — the small-files defense.  A shuffle-heavy plan otherwise
+# Target parquet file size of ``write_compacted``.
+_TARGET_FILE_BYTES = 256 * 1024 * 1024
+
+
+def write_compacted(df: DataFrame, path: str) -> None:
+    """Write parquet with a bounded file count sized to a 256 MiB
+    target file size — the small-files defense.  A shuffle-heavy plan otherwise
     writes one file per task (thousands of KB-sized files at 100 TB,
     which poisons every later scan's listing and footer-read cost).
     File count is estimated from the plan's size statistics; AQE
     coalescing handles the intra-write partitioning."""
     plan = df._jdf.queryExecution().optimizedPlan()
     est_bytes = int(str(plan.stats().sizeInBytes()))
-    n_files = max(1, min(10_000, est_bytes // target_file_bytes))
-    df.repartition(int(n_files)).write.mode(mode).parquet(path)
+    n_files = max(1, min(10_000, est_bytes // _TARGET_FILE_BYTES))
+    df.repartition(int(n_files)).write.mode("overwrite").parquet(path)

@@ -71,8 +71,8 @@ MANIFEST_NAME = "_manifest"
 # \d{6,} (not exactly 6): the writer formats {epoch:06d}, which emits
 # SEVEN digits once epoch reaches 10**6 — an exact-width pattern would
 # return None for the just-published live generation and make the
-# whole dataset invisible to every reader after that flip (round-11
-# ADVICE #3).  The trailing '-' keeps parsing unambiguous at any width.
+# whole dataset invisible to every reader after that flip.  The
+# trailing '-' keeps parsing unambiguous at any width.
 _EPOCH_RE = r"\Apart-e(\d{6,})-"
 
 
@@ -119,10 +119,9 @@ def live_generation(root: str) -> tuple[int, list[str]]:
     ARE the publish).  Epoch-TAGGED shards in a manifest-less dir are
     an in-flight or crashed FIRST overwrite's pre-flip generation and
     must stay invisible until its manifest flip publishes them —
-    returning them (the pre-round-12 behavior) let a reader racing the
-    first overwrite of an append-only sink observe a torn mixture of
-    old untagged shards plus partially-renamed new epoch shards
-    (round-11 ADVICE #1).
+    returning them would let a reader racing the first overwrite of an
+    append-only sink observe a torn mixture of old untagged shards plus
+    partially-renamed new epoch shards.
 
     Manifested dir: only shards of the manifest's epoch — shards of
     other epochs are either the superseded generation awaiting
@@ -165,13 +164,17 @@ def live_shard_names(root: str) -> list[str]:
     return live_generation(root)[1]
 
 
-def sweep_stale_stage(root: str, keep_run: str, age_s: float = 3600.0) -> None:
+# Age past which a FOREIGN run's staged file counts as dead debris.
+_STALE_STAGE_AGE_S = 3600.0
+
+
+def sweep_stale_stage(root: str, keep_run: str) -> None:
     """Age-guarded reclamation of FOREIGN-run ``.part-*.tmp`` stage
-    files (round-10 ADVICE #4): run-id-scoped sweeps cannot touch a
-    dead run's stragglers (its run id is gone forever), so commit/abort
-    additionally reap tmp files of OTHER runs once they sit untouched
-    past the guard — old enough that no live writer is mid-commit on
-    them (a live run's stage is minutes old at most; the guard matches
+    files: run-id-scoped sweeps cannot touch a dead run's stragglers
+    (its run id is gone forever), so commit/abort additionally reap tmp
+    files of OTHER runs once they sit untouched past the 1 h guard —
+    old enough that no live writer is mid-commit on them (a live run's
+    stage is minutes old at most; the guard matches
     io.reap_superseded's cross-session posture).  Never raises."""
     import os
     import time
@@ -191,7 +194,7 @@ def sweep_stale_stage(root: str, keep_run: str, age_s: float = 3600.0) -> None:
             continue
         path = os.path.join(root, name)
         try:
-            if now - os.path.getmtime(path) > age_s:
+            if now - os.path.getmtime(path) > _STALE_STAGE_AGE_S:
                 os.remove(path)
         except OSError:
             continue
@@ -205,10 +208,10 @@ def parse_kv_lines(path: str, want: set | None = None):
     sign variants/whitespace/underscores/unicode digits (``int()``
     alone is laxer than the Java regex and would make the two lanes
     diverge on lenient foreign sinks).  Non-conforming lines are
-    skipped — and since round 10 the JVM lane (compat.read_kv_text)
-    filters the SAME grammar with RLIKE, so both lanes skip
-    identically on dirty/foreign sinks (round-9 ADVICE closed; pinned
-    by tests/test_kvtext_source.py::test_lanes_skip_malformed_identically);
+    skipped — and the JVM lane (compat.read_kv_text) filters the SAME
+    grammar with RLIKE, so both lanes skip identically on dirty/foreign
+    sinks (pinned by
+    tests/test_kvtext_source.py::test_lanes_skip_malformed_identically);
     a grammar-valid value outside int64 raises loudly rather than
     silently dropping data the schema cannot carry."""
     import re
@@ -296,8 +299,8 @@ class KvTextReader(DataSourceReader):
         # non-hidden file — foreign sinks need not follow our part-*
         # naming) EXCEPT epoch-tagged shards, which are an in-flight or
         # crashed FIRST overwrite's unpublished generation and must
-        # stay invisible until its manifest flip (round-11 ADVICE #1 —
-        # same filter as live_generation's manifest-less branch).
+        # stay invisible until its manifest flip (same filter as
+        # live_generation's manifest-less branch).
         epoch, live = live_generation(self._root)
         if epoch != -1:
             files = [os.path.join(self._root, n) for n in live]
@@ -335,35 +338,23 @@ class KvTextCommit(WriterCommitMessage):
         self.tmp_path = tmp_path
 
 
-class KvTextWriter(DataSourceWriter):
-    """``df.write.format("kvtext").save(path)`` with the two-phase
-    commit the format never had in the reference (workers wrote sink
-    files in place; a dead reducer left a truncated shard for the
-    chained job to mis-read).  Tasks stage ``.part-*.tmp`` files;
-    ``commit`` (driver, runs once, only after EVERY task succeeded)
-    renames them all to uniquely-suffixed ``part-*`` shards; under
-    OVERWRITE the new shards land under a fresh epoch tag and one
-    atomic ``_manifest`` replace flips the live generation (see
-    ``commit`` — round-10 verdict task #3); ``abort`` deletes the
-    stage.  Readers therefore only ever see complete shards of one
-    complete generation.  Rename-as-commit assumes the sink dir is on
-    a rename-atomic FS (local disk/HDFS; on S3-like stores use a
-    manifest commit instead — the sink_snapshot_time_travel pattern).
-    """
+class _StagedWriter:
+    """The staging half shared by the batch and the stream writer: each
+    task stages one ``.part-{run}-*.tmp`` file, and ``abort`` plus the
+    post-commit sweep reclaim the stage; only ``commit`` differs."""
 
-    def __init__(self, options: dict, overwrite: bool) -> None:
+    def __init__(self, options: dict, overwrite: bool = False) -> None:
         import uuid
 
         self._root = options.get("path")
         if not self._root:
-            raise ValueError("kvtext: .save(path) is required")
+            raise ValueError("kvtext: a sink path is required")
         self._overwrite = overwrite
         # Writer-instance run id, minted on the DRIVER and shipped
         # inside the pickled writer to every task: staged names carry
-        # it, so commit/abort sweeps can distinguish THIS job's
-        # stragglers from a concurrent append's live stage (round-10
-        # review finding — a global .tmp sweep broke the concurrent
-        # appends the unique shard names were designed to allow).
+        # it, so sweeps can tell THIS job's stragglers from a concurrent
+        # writer's live stage (a global .tmp sweep would break the
+        # concurrent appends the unique shard names are designed for).
         self._run = uuid.uuid4().hex[:8]
 
     def write(self, iterator) -> KvTextCommit:
@@ -389,9 +380,57 @@ class KvTextWriter(DataSourceWriter):
                 f.write(f"{key}:{value}\n")
         return KvTextCommit(tmp)
 
+    def _sweep_stage(self) -> None:
+        # Every remaining `.part-{run}-*.tmp` of THIS run (retried or
+        # lost speculative attempts, tasks that died mid-write — none
+        # reached ``messages``), then dead FOREIGN runs' stragglers.
+        import os
+
+        prefix = f".part-{self._run}-"
+        try:
+            for name in os.listdir(self._root):
+                if name.startswith(prefix) and name.endswith(".tmp"):
+                    try:
+                        os.remove(os.path.join(self._root, name))
+                    except OSError:
+                        pass
+        except FileNotFoundError:
+            pass
+        sweep_stale_stage(self._root, self._run)
+
+    def abort(self, messages, *_batch_id) -> None:
+        # The stream writer's batchId is not needed: the stage is
+        # run-scoped.
+        import os
+
+        for msg in messages:
+            if msg is not None:
+                try:
+                    os.remove(msg.tmp_path)
+                except OSError:
+                    pass
+        self._sweep_stage()
+
+
+class KvTextWriter(_StagedWriter, DataSourceWriter):
+    """``df.write.format("kvtext").save(path)`` with the two-phase
+    commit the format never had in the reference (workers wrote sink
+    files in place; a dead reducer left a truncated shard for the
+    chained job to mis-read).  Tasks stage ``.part-*.tmp`` files;
+    ``commit`` (driver, runs once, only after EVERY task succeeded)
+    renames them all to uniquely-suffixed ``part-*`` shards; under
+    OVERWRITE the new shards land under a fresh epoch tag and one
+    atomic ``_manifest`` replace flips the live generation (see
+    ``commit``); ``abort`` deletes the stage.  Readers therefore only
+    ever see complete shards of one complete generation.
+    Rename-as-commit assumes the sink dir is on a rename-atomic FS
+    (local disk/HDFS; on S3-like stores use a manifest commit instead —
+    the sink_snapshot_time_travel pattern).
+    """
+
     def commit(self, messages) -> None:
-        """Publish the staged set.  Atomicity contract (round-10
-        verdict task #3 — generation-atomic overwrite):
+        """Publish the staged set.  Atomicity contract (generation-atomic
+        overwrite):
 
         **Append** (per-shard atomic): each rename publishes one
         complete file under a run-id-unique name; the old generation is
@@ -480,52 +519,14 @@ class KvTextWriter(DataSourceWriter):
                 )
                 os.rename(msg.tmp_path, final)
         # Failed-then-retried (or lost speculative) task attempts staged
-        # .tmp files that never made it into ``messages`` — only abort()
-        # used to sweep those, so a job that ultimately SUCCEEDED after
-        # task retries left orphan debris in the live sink dir forever
-        # (round-9 ADVICE).  Sweep is scoped to THIS writer's run id:
-        # the committed set was renamed away above, so every remaining
-        # `.part-{run}-*` is one of our stragglers, and a concurrent
-        # append's in-flight stage (different run id) is untouched.
-        # Foreign DEAD runs' stragglers are reclaimed by the
-        # age-guarded sweep (round-10 ADVICE #4).
-        self._sweep_own_stage()
-        sweep_stale_stage(self._root, self._run)
-
-    def _sweep_own_stage(self) -> None:
-        import os
-
-        prefix = f".part-{self._run}-"
-        try:
-            for name in os.listdir(self._root):
-                if name.startswith(prefix) and name.endswith(".tmp"):
-                    try:
-                        os.remove(os.path.join(self._root, name))
-                    except OSError:
-                        pass
-        except FileNotFoundError:
-            pass
-
-    def abort(self, messages) -> None:
-        import os
-
-        for msg in messages:
-            if msg is not None:
-                try:
-                    os.remove(msg.tmp_path)
-                except OSError:
-                    pass
-        # Tasks that died MID-write never returned a commit message, so
-        # their staged files are invisible to the loop above — sweep
-        # the rest of OUR stage (run-id-scoped: a concurrent writer's
-        # stage survives) so failed jobs don't accrete hidden debris.
-        # Dead FOREIGN runs' stragglers go through the age-guarded
-        # sweep (round-10 ADVICE #4).
-        self._sweep_own_stage()
-        sweep_stale_stage(self._root, self._run)
+        # .tmp files that never made it into ``messages``; a job that
+        # SUCCEEDED after task retries must not leave them as debris in
+        # the live sink dir.  The committed set was renamed away above,
+        # so every remaining `.part-{run}-*` is one of our stragglers.
+        self._sweep_stage()
 
 
-class KvTextStreamWriter(DataSourceStreamWriter):
+class KvTextStreamWriter(_StagedWriter, DataSourceStreamWriter):
     """``df.writeStream.format("kvtext")`` — the streaming half of the
     sink, completing the format matrix (batch read/write + stream
     read/write): the reference's reducer sink as an EXACTLY-ONCE
@@ -535,10 +536,10 @@ class KvTextStreamWriter(DataSourceStreamWriter):
     writer; the driver's ``commit(messages, batchId)`` publishes them
     as ``part-b{batchId:06d}-{i:05d}`` shards (``part-e{epoch:06d}-
     b{batchId:06d}-{i:05d}`` when the sink dir is manifested, so the
-    shards stay visible to generation-aware readers — round-11 ADVICE
-    #2) — and FIRST removes any existing shards of the SAME batchId
-    at any epoch tag, which is what makes the sink
-    exactly-once under structured streaming's recovery contract: a
+    shards stay visible to generation-aware readers) — and FIRST
+    removes any existing shards of the SAME batchId at any epoch tag,
+    which is what makes the sink exactly-once under structured
+    streaming's recovery contract: a
     batch replayed after a crash between sink-commit and checkpoint-
     commit re-commits the same batchId, and the stale generation of
     that batch is replaced instead of doubled.  Batch-scoped names also
@@ -550,39 +551,10 @@ class KvTextStreamWriter(DataSourceStreamWriter):
     sink under ``outputMode("complete")``): each commit first clears
     EVERY previous ``part-*`` shard, so the sink always holds exactly
     the latest batch's full result instead of silently accumulating
-    stale generations as if it were append (round-10 review finding).
-    ``abort`` removes the failed batch's stage; straggler .tmp
-    sweeping is scoped to this writer's run id, exactly like the batch
-    writer, so even an unsupported second writer's in-flight stage is
-    never swept."""
-
-    def __init__(self, options: dict, overwrite: bool = False) -> None:
-        import uuid
-
-        self._root = options.get("path")
-        if not self._root:
-            raise ValueError("kvtext: .option/.start(path) is required")
-        self._truncate = overwrite
-        self._run = uuid.uuid4().hex[:8]
-
-    def write(self, iterator) -> KvTextCommit:
-        import os
-        import uuid
-
-        os.makedirs(self._root, exist_ok=True)
-        tmp = os.path.join(
-            self._root, f".part-{self._run}-{uuid.uuid4().hex}.tmp"
-        )
-        with open(tmp, "w", encoding="utf-8") as f:
-            for row in iterator:
-                key, value = row[0], row[1]
-                if key is None or value is None:
-                    raise ValueError(
-                        "kvtext: null key/value is not representable "
-                        f"in the line format (got key={key!r} value={value!r})"
-                    )
-                f.write(f"{key}:{value}\n")
-        return KvTextCommit(tmp)
+    stale generations as if it were append.  ``abort`` removes the
+    failed batch's stage; straggler .tmp sweeping is scoped to this
+    writer's run id, exactly like the batch writer, so even an
+    unsupported second writer's in-flight stage is never swept."""
 
     def commit(self, messages, batchId: int) -> None:
         import os
@@ -594,7 +566,7 @@ class KvTextStreamWriter(DataSourceStreamWriter):
         # else-branch): an untagged shard in a manifested dir is
         # invisible to every reader (generation resolution filters by
         # epoch) and the next overwrite's post-flip GC deletes it —
-        # silent data loss (round-11 ADVICE #2).
+        # silent data loss.
         man = read_manifest(self._root)
         tag = f"e{man['epoch']:06d}-" if man else ""
         prefix = f"part-{tag}b{batchId:06d}-"
@@ -606,7 +578,7 @@ class KvTextStreamWriter(DataSourceStreamWriter):
         # tag, so a replay that straddles a batch overwrite of the
         # sink still replaces rather than doubles its own batch.
         batch_re = re.compile(
-            r"\Apart-(?:e\d{6,}-)?" + ("" if self._truncate else f"b{batchId:06d}-")
+            r"\Apart-(?:e\d{6,}-)?" + ("" if self._overwrite else f"b{batchId:06d}-")
         )
         for name in os.listdir(self._root):
             if batch_re.match(name):
@@ -614,41 +586,14 @@ class KvTextStreamWriter(DataSourceStreamWriter):
         for i, msg in enumerate(m for m in messages if m is not None):
             final = os.path.join(self._root, f"{prefix}{i:05d}")
             os.rename(msg.tmp_path, final)
-        self._sweep_own_stage()
-        sweep_stale_stage(self._root, self._run)
-
-    def _sweep_own_stage(self) -> None:
-        import os
-
-        prefix = f".part-{self._run}-"
-        try:
-            for name in os.listdir(self._root):
-                if name.startswith(prefix) and name.endswith(".tmp"):
-                    try:
-                        os.remove(os.path.join(self._root, name))
-                    except OSError:
-                        pass
-        except FileNotFoundError:
-            pass
-
-    def abort(self, messages, batchId: int) -> None:
-        import os
-
-        for msg in messages:
-            if msg is not None:
-                try:
-                    os.remove(msg.tmp_path)
-                except OSError:
-                    pass
-        self._sweep_own_stage()
-        sweep_stale_stage(self._root, self._run)
+        self._sweep_stage()
 
 
 class KvTextStreamReader(DataSourceStreamReader):
     """``spark.readStream.format("kvtext")`` over a GROWING sink dir —
     the reference's chained-job poll loop (client.sh:226-233 waits for
-    R output blobs) as a real incremental source, now DATA-PLANE
-    shaped (round-9 verdict task #1): a partition-planning
+    R output blobs) as a real incremental source, DATA-PLANE shaped: a
+    partition-planning
     ``DataSourceStreamReader``, not the driver-side Simple variant.
     Per micro-batch the driver only LISTS the directory
     (``latestOffset``) and plans one ``InputPartition`` per new shard
@@ -665,8 +610,8 @@ class KvTextStreamReader(DataSourceStreamReader):
     commit while replay re-reads the WRONG files under the same
     indices, and a prefix comparison assumes new shards SORT AFTER
     consumed ones — false under the writer's uniquely-suffixed names
-    (``part-00000-<uuid>`` sorts either side of its predecessor;
-    caught as a 50/50 in-suite flake in round 9).  Named set-offsets
+    (``part-00000-<uuid>`` sorts either side of its predecessor; it
+    showed as a 50/50 in-suite flake).  Named set-offsets
     make every failure mode loud: planning raises when any consumed
     shard vanished from the directory (the overwrite signature —
     restart from a fresh checkpoint), new shards are whatever names
@@ -677,13 +622,13 @@ class KvTextStreamReader(DataSourceStreamReader):
     immutable (the writer's 2PC renames complete files), so set
     membership is exact on the supported (append-only) path.
 
-    Offset encoding & size bound (round-11 verdict task #3 — epoch-
-    compact offsets on the overwrite machinery): an offset is
+    Offset encoding & size bound (epoch-compact offsets on the
+    overwrite machinery): an offset is
     ``{"epoch": E, "names": [...]}`` where E is the sink's live
     manifest epoch (``-1`` for never-manifested dirs) and ``names`` is
     the consumed-shard set WITHIN that generation.  The manifest epoch
-    is the ordering-safe generation id the round-9 sort-prefix flake
-    analysis said shard NAMES lack: epochs are minted strictly
+    is the ordering-safe generation id that shard NAMES lack (the
+    sort-prefix flake above): epochs are minted strictly
     increasing under the single-overwriter contract, so comparing
     epochs — unlike comparing name sort positions — is always valid.
     Consequences:
@@ -692,7 +637,7 @@ class KvTextStreamReader(DataSourceStreamReader):
       (~40 bytes/name), not by total shards ever consumed: at each
       epoch flip the names set RESETS.  Within one generation shards
       only accrete (appends), so the in-generation set is exact and
-      the round-9 by-name properties are unchanged.
+      the by-name properties above are unchanged.
     - **An overwrite between batches is now a SUPPORTED transition**,
       not a forced checkpoint restart: ``end.epoch > start.epoch``
       means the dataset was atomically replaced, and the next batch
@@ -708,7 +653,7 @@ class KvTextStreamReader(DataSourceStreamReader):
       executor-side as FileNotFoundError on the GC'd shard — loud,
       never wrong data.
 
-    Pre-round-12 checkpoints (``{"names": [...]}`` with no epoch) are
+    Epoch-less checkpoints (``{"names": [...]}``) are
     read as epoch ``-1``: on a still-manifest-less sink that is
     exactly the old semantics; on a sink manifested since the
     checkpoint was written, the epoch mismatch delivers the live

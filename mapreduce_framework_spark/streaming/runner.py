@@ -33,15 +33,14 @@ def run_file_stream(
     watermark: tuple[str, str] | None = None,
     output_mode: str = "complete",
     n_batches: int = 4,
-    order_col: str = "ts",
-    state_partitions: int | None = None,
     state_rows_per_partition: int = 25_000,
     max_files_per_trigger: int | None = 1,
     batch_col: str | None = None,
     collect_progress: list | None = None,
 ) -> DataFrame:
-    """Replay ``source_df`` as ``n_batches`` time-ordered micro-batches
-    through ``transform``; return the memory-sink contents.
+    """Replay ``source_df`` as ``n_batches`` micro-batches, time-ordered
+    on its ``ts`` column, through ``transform``; return the memory-sink
+    contents.
 
     ``max_files_per_trigger`` sets how many source files each
     micro-batch consumes (None → no cap: availableNow processes
@@ -49,17 +48,16 @@ def run_file_stream(
     complete/update-mode state the final result must be invariant —
     tests/test_streaming.py pins that across 1, 2, and all-at-once.
 
-    ``state_partitions`` bounds the stateful-operator parallelism for
-    the run: every micro-batch commits one state-store delta PER
-    shuffle partition, so over-partitioning a small replay spends most
-    of its time fsyncing near-empty state files (measured ~2× the
-    whole query at 32 partitions on the windowed keys), while
-    UNDER-partitioning starves the operators that do real per-row work
-    (the Python stateful lanes measured 1.25× faster at 16 than at the
-    former fixed 8).  Default ``None`` = AUTOSCALE from the replay's
-    actual row count (parquet footer metadata of the staged files —
-    driver-side, no job): ``clamp(rows / state_rows_per_partition, 2,
-    defaultParallelism)``.  ``state_rows_per_partition`` is the
+    The stateful-operator parallelism of the run autoscales from the
+    replay's actual row count (parquet footer metadata of the staged
+    files — driver-side, no job): ``clamp(rows /
+    state_rows_per_partition, 2, defaultParallelism)``.  Every
+    micro-batch commits one state-store delta PER shuffle partition, so
+    over-partitioning a small replay spends most of its time fsyncing
+    near-empty state files (measured ~2× the whole query at 32
+    partitions on the windowed keys), while UNDER-partitioning starves
+    the operators that do real per-row work (the Python stateful lanes
+    measured 1.25× faster at 16 than at a fixed 8).  ``state_rows_per_partition`` is the
     per-operator-class cost knob: the default 25 000 fits JVM windowed
     aggregates and stream-stream joins (per-row work is ns-scale, so
     the per-partition state-commit cost dominates early); Python
@@ -90,25 +88,24 @@ def run_file_stream(
     src_dir = tempfile.mkdtemp(prefix="mfs_stream_src_")
     ckpt_dir = tempfile.mkdtemp(prefix="mfs_stream_ckpt_")
     try:
-        part_files = _stage_batches(source_df, src_dir, n_batches, order_col, batch_col)
-        if state_partitions is None:
-            # Scale-adaptive partitioning ("fewer, larger partitions"):
-            # the staged files' parquet footers give the exact replay row
-            # count for free (driver-side metadata, no job), and the A/B
-            # grid in OPTIMIZATION_r13.md shows both failure modes a
-            # constant invites — 8 partitions starves the Python stateful
-            # lanes on 32 cores, 32 partitions drowns the windowed/join
-            # lanes in near-empty state-store commits.
-            import pyarrow.parquet as pq
+        part_files = _stage_batches(source_df, src_dir, n_batches, "ts", batch_col)
+        # Scale-adaptive partitioning ("fewer, larger partitions"): the
+        # staged files' parquet footers give the exact replay row count
+        # for free (driver-side metadata, no job), and the A/B grid in
+        # OPTIMIZATION_r13.md shows both failure modes a constant
+        # invites — 8 partitions starves the Python stateful lanes on 32
+        # cores, 32 partitions drowns the windowed/join lanes in
+        # near-empty state-store commits.
+        import pyarrow.parquet as pq
 
-            n_rows = sum(pq.ParquetFile(f).metadata.num_rows for f in part_files)
-            state_partitions = max(
-                2,
-                min(
-                    spark.sparkContext.defaultParallelism,
-                    n_rows // max(state_rows_per_partition, 1) + 1,
-                ),
-            )
+        n_rows = sum(pq.ParquetFile(f).metadata.num_rows for f in part_files)
+        state_partitions = max(
+            2,
+            min(
+                spark.sparkContext.defaultParallelism,
+                n_rows // max(state_rows_per_partition, 1) + 1,
+            ),
+        )
 
         reader = spark.readStream.schema(source_df.schema)
         if max_files_per_trigger is not None:
@@ -170,12 +167,10 @@ def _stage_batches(
         from pyspark.sql import functions as F
 
         tiebreak = [c for c in source_df.columns if c not in (order_col, batch_col)]
-        # ONE pass stages every batch (round-12 optimization; guide §2.4
-        # "remove shuffles outright"): the old loop ran a distinct+collect
-        # of the batch ids and then one filtered write PER id — five full
-        # computations of source_df (which for the watermark keys embeds
-        # the events scan + cutoff aggregate) where one suffices.  A
-        # dynamic-partition write by the batch column emits exactly one
+        # ONE pass stages every batch: a filtered write PER batch id
+        # would recompute source_df (for the watermark keys, the events
+        # scan + cutoff aggregate) once per batch.  A dynamic-partition
+        # write by the batch column emits exactly one
         # file per batch value: hash-repartitioning ON the batch column
         # puts all of a batch's rows in one task, and the partitioned
         # writer starts a new file per partition value within a task.

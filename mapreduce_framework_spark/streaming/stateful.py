@@ -69,17 +69,21 @@ SESSION_OUTPUT_SCHEMA = (
 )
 
 
-def timeout_sessions(stream_df: DataFrame, gap_ms: int = 43_200_000) -> DataFrame:
+# Idle gap that closes a session: 12 h.
+SESSION_GAP_MS = 43_200_000
+
+
+def timeout_sessions(stream_df: DataFrame) -> DataFrame:
     """Event-time-timer sessionization on ``applyInPandasWithState`` +
-    ``EventTimeTimeout``: per-user sessions with an idle gap, where a
-    session nothing follows is emitted because TIME passed, not because
-    an input row arrived.
+    ``EventTimeTimeout``: per-user sessions with a ``SESSION_GAP_MS``
+    idle gap, where a session nothing follows is emitted because TIME
+    passed, not because an input row arrived.
 
     An arriving event either extends the open session (Δt ≤ gap) or
     PROVES the old one closed (Δt > gap — emitted immediately).  One
     event-time timeout per key is exactly one timer per key, which is
     all sessionization needs: each update re-arms
-    ``setTimeoutTimestamp(last_ms + gap_ms)``; when the watermark
+    ``setTimeoutTimestamp(last_ms + SESSION_GAP_MS)``; when the watermark
     passes it Spark re-invokes the function with ``state.hasTimedOut``
     and no rows, and the session emits + clears.  Sessions still open
     at the final watermark are deliberately NOT emitted (they are not
@@ -114,7 +118,7 @@ def timeout_sessions(stream_df: DataFrame, gap_ms: int = 43_200_000) -> DataFram
             for t in np.sort(arr).tolist():
                 if start is None:
                     start, last, cnt = t, t, 1
-                elif t - last > gap_ms:
+                elif t - last > SESSION_GAP_MS:
                     closed.append((int(key[0]), start, last, cnt))
                     start, last, cnt = t, t, 1
                 else:
@@ -126,7 +130,7 @@ def timeout_sessions(stream_df: DataFrame, gap_ms: int = 43_200_000) -> DataFram
                     start, last, cnt = min(start, t), max(last, t), cnt + 1
         if start is not None:
             state.update((start, last, cnt))
-            state.setTimeoutTimestamp(last + gap_ms)
+            state.setTimeoutTimestamp(last + SESSION_GAP_MS)
         if closed:
             yield pd.DataFrame(closed, columns=cols)
 

@@ -69,7 +69,7 @@ def test_reap_superseded_reaps_old_generation_keeps_live():
     other_family = _touch_cache_dir(f"mfs_test_other_{pid}_size1", age_s=7200)
     fresh = _touch_cache_dir(f"{fam}_size3_mtime3")  # young: inside the guard
 
-    reaped = reap_superseded(fam, keep=os.path.basename(keep), age_s=3600)
+    reaped = reap_superseded(fam, keep=os.path.basename(keep))
 
     assert os.path.basename(old) in reaped
     assert not os.path.isdir(old), "superseded generation must be reaped"

@@ -173,11 +173,11 @@ def test_quantized_topk_recall_and_error(spark):
     from pyspark.sql import functions as F
 
     from mapreduce_framework_spark.functions.vector import dot
-    from mapreduce_framework_spark.operators.annsearch import quantize
+    from mapreduce_framework_spark.operators.annsearch import int8_quantize
     from mapreduce_framework_spark.queries.similarity import _vectors
 
     vectors = _vectors(spark, SF_DIR).select("vec_id", "v")
-    q = quantize(vectors)
+    q = int8_quantize(vectors)
     # (a) |v_i - qv_i/scale| <= 0.5/scale for every element
     bad = (
         q.join(vectors, "vec_id")
@@ -1020,9 +1020,9 @@ def test_span_removal_is_consistent_with_span_report(spark):
 
 def test_sized_checkpoint_paths_identical(spark, monkeypatch):
     """The size gate picks WHERE bytes live, never WHAT the frame is:
-    the lazy (below min_bytes) and eagerly-checkpointed paths must
-    produce identical rows, and the lazy path must return the input
-    frame unchanged (no job, no copy).  An overshooting estimate fails
+    the lazy (below ``$SPARK_GRAFT_CKPT_MIN_BYTES``) and eagerly-
+    checkpointed paths must produce identical rows, and the lazy path
+    must return the input frame unchanged (no job, no copy).  An overshooting estimate fails
     toward materializing: a planted 1 PiB estimate still checkpoints."""
     from mapreduce_framework_spark.operators import materialize
     from mapreduce_framework_spark.operators.materialize import (
@@ -1037,10 +1037,12 @@ def test_sized_checkpoint_paths_identical(spark, monkeypatch):
     est = plan_size_estimate(df)
     assert est > 0
 
-    lazy_small = sized_local_checkpoint(df, min_bytes=est + 1)
+    monkeypatch.setenv("SPARK_GRAFT_CKPT_MIN_BYTES", str(est + 1))
+    lazy_small = sized_local_checkpoint(df)
     assert lazy_small is df, "below min_bytes the frame must pass through"
 
-    ckpt = sized_local_checkpoint(df, min_bytes=0)
+    monkeypatch.setenv("SPARK_GRAFT_CKPT_MIN_BYTES", "0")
+    ckpt = sized_local_checkpoint(df)
     assert ckpt is not df, "at or above min_bytes the frame must materialize"
 
     monkeypatch.delenv("SPARK_GRAFT_CKPT_MIN_BYTES", raising=False)

@@ -9,6 +9,7 @@ stream scratch is removed when the stream ends.
 
 from __future__ import annotations
 
+import ast
 import gc
 import os
 import re
@@ -21,7 +22,8 @@ from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
 
-PKG = Path(__file__).resolve().parent.parent / "mapreduce_framework_spark"
+REPO = Path(__file__).resolve().parent.parent
+PKG = REPO / "mapreduce_framework_spark"
 
 STATEFUL_KEYS = (
     "graph_pagerank_deep",
@@ -210,3 +212,59 @@ def test_engine_patterns_go_through_their_helper():
                 if rel not in files and line.strip() not in lines and re.search(pattern, line):
                     hits.append(f"{what}: {rel}:{lineno}: {line.strip()}")
     assert hits == [], "\n".join(hits)
+
+
+def _names(tree: ast.AST) -> list[tuple[str, int]]:
+    """(name, line) of every way a module refers to a function: a Name,
+    an Attribute, an import alias or an identifier-valued string (the
+    benchmark wraps functions listed by name)."""
+    out = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            out.append((node.id, node.lineno))
+        elif isinstance(node, ast.Attribute):
+            out.append((node.attr, node.lineno))
+        elif isinstance(node, ast.alias):
+            out.append((node.name.rsplit(".", 1)[-1], node.lineno))
+        elif (
+            isinstance(node, ast.Constant)
+            and isinstance(node.value, str)
+            and node.value.isidentifier()
+        ):
+            out.append((node.value, node.lineno))
+    return out
+
+
+def test_every_engine_function_is_reachable():
+    """Every module-level function of the package that the registry
+    does not call through ``@register`` is named somewhere outside its
+    own body: in the package, tools/, bench.py, __spark_entry__.py,
+    perfbench/ or tests/.  A function nothing names is dead code."""
+    outside = (
+        [REPO / "bench.py", REPO / "__spark_entry__.py"]
+        + sorted((REPO / "tools").rglob("*.py"))
+        + sorted((REPO / "perfbench").rglob("*.py"))
+        + sorted((REPO / "tests").rglob("*.py"))
+    )
+    named_outside = {n for p in outside for n, _ in _names(ast.parse(p.read_text()))}
+    modules = {p: ast.parse(p.read_text()) for p in sorted(PKG.rglob("*.py"))}
+    refs = {p: _names(tree) for p, tree in modules.items()}
+
+    def registered(fn: ast.FunctionDef) -> bool:
+        return any(
+            isinstance(d, ast.Call)
+            and getattr(d.func, "id", getattr(d.func, "attr", None)) == "register"
+            for d in fn.decorator_list
+        )
+
+    dead = []
+    for p, tree in modules.items():
+        named = named_outside | {n for q in modules if q != p for n, _ in refs[q]}
+        for fn in tree.body:
+            if not isinstance(fn, ast.FunctionDef) or registered(fn):
+                continue
+            own_body = range(fn.lineno, fn.end_lineno + 1)
+            local = {n for n, line in refs[p] if line not in own_body}
+            if fn.name not in named | local:
+                dead.append(f"{p.relative_to(PKG).as_posix()}:{fn.lineno}: {fn.name}")
+    assert dead == [], "\n".join(dead)

@@ -2,7 +2,7 @@
 """Phase-level profile of one streaming bench key: staging write vs
 stream execution vs per-batch durations (from StreamingQueryProgress).
 
-Usage: python tools/stream_profile.py stream_session_timers [--state-partitions N]
+Usage: python tools/stream_profile.py stream_session_timers [--sf-dir DIR] [--reps N]
 """
 
 from __future__ import annotations
