@@ -20,6 +20,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
+from mapreduce_framework_spark.io import TABLES  # noqa: E402
 from mapreduce_framework_spark.registry import bench_queries  # noqa: E402
 from mapreduce_framework_spark.session import get_spark  # noqa: E402
 
@@ -41,8 +42,7 @@ def main() -> None:
     # so per-query numbers measure steady-state execution rather than
     # charging first-touch initialization to whichever query runs first.
     spark.range(1_000_000).selectExpr("sum(id)").collect()
-    for t in ("region", "nation", "customer", "supplier", "part", "orders",
-              "lineitem", "events", "documents", "embeddings"):
+    for t in TABLES:
         # Touch every input file into the page cache: the suite measures
         # engine compute, not the host's cold-read disk latency.  Tables
         # may ship as a single file OR a directory-style parquet dataset.

@@ -13,6 +13,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -26,10 +27,6 @@ TABLES = (
     "documents",
     "embeddings",
 )
-
-# Dimensions small enough to broadcast at ANY scale factor (bounded-size
-# tables: 5 regions / 25 nations, fixed by the schema not by SF).
-ALWAYS_BROADCAST = frozenset({"region", "nation"})
 
 
 def user_tmp_root(prefix: str) -> str:
@@ -224,9 +221,41 @@ def user_scratch_dir(kind: str) -> str:
     return path
 
 
+def table_identity(sf_dir: str, name: str) -> str:
+    """``<size>_<mtime_ns>`` of one sf table's file: the identity every
+    build-once cache and :func:`table`'s schema cache key on.  A rewrite
+    of the file changes it."""
+    st = os.stat(os.path.join(sf_dir, f"{name}.parquet"))
+    return f"{st.st_size}_{st.st_mtime_ns}"
+
+
+# The session confs a parquet footer's inferred schema depends on
+# besides the file's bytes.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+)
+
+# Absolute table path -> ((identity, inference conf values), schema).
+_schemas: dict[str, tuple[tuple, StructType]] = {}
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one table. Parquet scan → column pruning + predicate pushdown
     happen automatically once the caller selects/filters.
+
+    Reading parquet without a schema runs a one-task Spark job that reads
+    the file's footer.  The schema is inferred once per file identity
+    (:func:`table_identity`) and reused through ``spark.read.schema``,
+    which runs no job; a rewritten file or a changed value of one of
+    ``_INFERENCE_CONFS`` infers again.  A directory-style table bypasses
+    the cache and infers on every call, since a part file rewritten in
+    place leaves the directory's own size and mtime unchanged.  Frames
+    are not cached: each call builds a fresh read with fresh attribute
+    ids, so a self-join of two calls stays unambiguous, and every call
+    still scans the file.
 
     ``events.ts`` must surface as TIMESTAMP (not TIMESTAMP_NTZ):
     watermarks and epoch casts require it, and with the session timezone
@@ -240,8 +269,21 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     session infers as TIMESTAMP_NTZ; both normalize to TIMESTAMP here.
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
-    if name == "events":
+    if os.path.isfile(path):
+        key = (
+            table_identity(sf_dir, name),
+            tuple(spark.conf.get(k) for k in _INFERENCE_CONFS),
+        )
+        slot = os.path.abspath(path)
+        hit = _schemas.get(slot)
+        if hit is not None and hit[0] == key:
+            df = spark.read.schema(hit[1]).parquet(path)
+        else:
+            df = spark.read.parquet(path)
+            _schemas[slot] = (key, df.schema)
+    else:
         df = spark.read.parquet(path)
+    if name == "events":
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":
             from pyspark.sql import functions as F
@@ -255,6 +297,4 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # NTZ→LTZ cast interprets the naive value in the session
             # timezone; pinned UTC makes it value-preserving.
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        return df
-    return spark.read.parquet(path)
-
+    return df

@@ -253,9 +253,9 @@ def _bpe_vocab_cache(spark: SparkSession, sf_dir: str) -> str:
     import inspect
     import os
 
-    from mapreduce_framework_spark.io import cache_sf_token, publish_cached
+    from mapreduce_framework_spark.io import cache_sf_token, publish_cached, table_identity
 
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
+    file_id = table_identity(sf_dir, "documents")
     sf_base = cache_sf_token(sf_dir)
     code = "".join(
         inspect.getsource(f) for f in (bpe_train, _pair_counts, _words0)
@@ -263,7 +263,7 @@ def _bpe_vocab_cache(spark: SparkSession, sf_dir: str) -> str:
     ver = hashlib.sha1(
         (_merges_oracle(N_MERGES) + code).encode()
     ).hexdigest()[:8]
-    ident = f"{sf_base}_m{N_MERGES}_{st.st_size}_{st.st_mtime_ns}_{ver}"
+    ident = f"{sf_base}_m{N_MERGES}_{file_id}_{ver}"
 
     def build(staged: str) -> None:
         os.makedirs(staged)

@@ -544,14 +544,12 @@ def persisted_cosupply_adjacency(spark: SparkSession, sf_dir: str) -> DataFrame:
     immutable inputs — staged privately and atomically renamed into
     place, so concurrent sessions race safely and readers only ever see
     a complete artifact."""
-    import os
+    from mapreduce_framework_spark.io import cache_sf_token, publish_cached, table_identity
 
-    from mapreduce_framework_spark.io import cache_sf_token, publish_cached
-
-    st = os.stat(os.path.join(sf_dir, "lineitem.parquet"))
+    file_id = table_identity(sf_dir, "lineitem")
     sf_base = cache_sf_token(sf_dir)
     params = f"k{_KNN_K}b{_ADJ_BUCKETS}"
-    ident = f"{sf_base}_{params}_{st.st_size}_{st.st_mtime_ns}"
+    ident = f"{sf_base}_{params}_{file_id}"
 
     def build(staged: str) -> None:
         l = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")

@@ -41,14 +41,13 @@ def _spill_corpus(spark: SparkSession, sf_dir: str) -> str:
     concurrent-create race discards its copy, and readers only ever
     see a complete directory (rename is atomic; no partially-written
     corpus exists under the published name)."""
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
+    from mapreduce_framework_spark.io import cache_sf_token, publish_cached, table_identity
+
     # cache_sf_token: path-hash-suffixed basename, so no sf_dir
     # basename can nest inside another SF's GC family (round-10
     # ADVICE; also covers the older trailing-slash degeneration).
-    from mapreduce_framework_spark.io import cache_sf_token, publish_cached
-
     sf_base = cache_sf_token(sf_dir)
-    key = f"{sf_base}_{st.st_size}_{st.st_mtime_ns}"
+    key = f"{sf_base}_{table_identity(sf_dir, 'documents')}"
 
     def build(staged: str) -> None:
         table(spark, sf_dir, "documents").select("text").write.mode(

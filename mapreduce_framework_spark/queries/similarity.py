@@ -890,11 +890,9 @@ def _per_sf_cached_index(sf_dir: str, kind: str, build) -> str:
     bench's min-of-3 records pure serving latency on a prebuilt index —
     the number that matters at 100 TB, where the build amortizes across
     every query."""
-    import os
+    from mapreduce_framework_spark.io import cache_sf_token, publish_cached, table_identity
 
-    from mapreduce_framework_spark.io import cache_sf_token, publish_cached
-
-    st = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
+    ident = table_identity(sf_dir, "embeddings")
     # The family holds the axes that may coexist (kind, SF, geometry):
     # two parameterizations of one SF must not reap each other.  Only
     # superseded file-identity or layout-version generations are reaped
@@ -905,7 +903,7 @@ def _per_sf_cached_index(sf_dir: str, kind: str, build) -> str:
         f"_ns{PQ_SUB}sd{PQ_SUB_DIM}se{PQ_SEEDS}"
     )
     return publish_cached(
-        f"{family}_v{PQ_INDEX_VERSION}_{st.st_size}_{st.st_mtime_ns}",
+        f"{family}_v{PQ_INDEX_VERSION}_{ident}",
         build,
         family=family,
     )

@@ -324,16 +324,16 @@ def _kv_sink_cache(spark: SparkSession, sf_dir: str) -> str:
     import hashlib
 
     from mapreduce_framework_spark.compat import write_kv_text
-    from mapreduce_framework_spark.io import cache_sf_token, publish_cached
+    from mapreduce_framework_spark.io import cache_sf_token, publish_cached, table_identity
     from mapreduce_framework_spark.queries.wordcount import _ORACLE, wordcount
 
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
+    ident = table_identity(sf_dir, "documents")
     ver = hashlib.sha1(_ORACLE.encode()).hexdigest()[:8]
     # cache_sf_token (path-hash-suffixed basename): an sf_dir basename
     # that extends another with an underscore must not nest inside its
     # GC family (round-10 ADVICE).
     sf_base = cache_sf_token(sf_dir)
-    key = f"{sf_base}_{st.st_size}_{st.st_mtime_ns}_{ver}"
+    key = f"{sf_base}_{ident}_{ver}"
 
     def build(staged: str) -> None:
         counts = wordcount(spark, sf_dir).select(

@@ -1,10 +1,10 @@
-"""io.py cache-publish hardening: failed-publish detection (round-9
-ADVICE) and generation GC for the build-once artifact caches (round-9
-verdict task #6)."""
+"""io.py caches: failed-publish detection and generation GC for the
+build-once artifact caches, and io.table's per-file schema cache."""
 
 from __future__ import annotations
 
 import os
+import shutil
 import time
 
 import pytest
@@ -13,8 +13,11 @@ from mapreduce_framework_spark.io import (
     cache_sf_token,
     publish_cached,
     reap_superseded,
+    table,
     user_cache_root,
 )
+from mapreduce_framework_spark.session import scoped_confs
+from tests.conftest import SF_DIR
 
 
 def _touch_cache_dir(name: str, age_s: float = 0.0) -> str:
@@ -113,3 +116,62 @@ def test_publish_cached_with_family_sweeps_superseded():
     dest = publish_cached(f"{fam}_gen2", build, family=fam)
     assert os.path.isdir(dest)
     assert not os.path.isdir(old), "publish must sweep the superseded generation"
+
+
+def _table_and_jobs(spark, sf_dir: str, name: str):
+    """io.table's frame and the number of Spark jobs the call ran."""
+    sc = spark.sparkContext
+    group = f"io_table_{name}_{time.monotonic_ns()}"
+    sc.setJobGroup(group, group)
+    try:
+        df = table(spark, sf_dir, name)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return df, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _copy_table(tmp_path, name: str) -> str:
+    # copyfile, not copy: the testdata is read-only and the copy is rewritten.
+    shutil.copyfile(os.path.join(SF_DIR, f"{name}.parquet"), tmp_path / f"{name}.parquet")
+    return str(tmp_path)
+
+
+def test_table_infers_schema_once_per_file_identity(spark, tmp_path):
+    """The footer is read once: a second table() of an unchanged file
+    runs no job and returns the same schema and rows.  A rewrite of the
+    file (new identity) infers again and surfaces the new column."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    sf_dir = _copy_table(tmp_path, "lineitem")
+    first, jobs_first = _table_and_jobs(spark, sf_dir, "lineitem")
+    second, jobs_second = _table_and_jobs(spark, sf_dir, "lineitem")
+    assert jobs_first >= 1 and jobs_second == 0
+    assert second.schema == first.schema
+    assert sorted(second.collect()) == sorted(first.collect())
+
+    path = os.path.join(sf_dir, "lineitem.parquet")
+    data = pq.read_table(path)
+    pq.write_table(data.append_column("extra", pa.array([7] * data.num_rows)), path)
+    third, jobs_third = _table_and_jobs(spark, sf_dir, "lineitem")
+    assert jobs_third >= 1, "a rewritten file must infer its schema again"
+    assert third.columns == first.columns + ["extra"]
+    assert third.select("extra").distinct().collect()[0][0] == 7
+
+
+def test_table_infers_again_when_an_inference_conf_changes(spark, tmp_path):
+    sf_dir = _copy_table(tmp_path, "documents")
+    _table_and_jobs(spark, sf_dir, "documents")
+    assert _table_and_jobs(spark, sf_dir, "documents")[1] == 0
+    flipped = str(spark.conf.get("spark.sql.parquet.binaryAsString") != "true").lower()
+    with scoped_confs(spark, {"spark.sql.parquet.binaryAsString": flipped}):
+        assert _table_and_jobs(spark, sf_dir, "documents")[1] >= 1
+
+
+def test_cached_events_read_keeps_ts_a_timestamp(spark, tmp_path):
+    sf_dir = _copy_table(tmp_path, "events")
+    first, _ = _table_and_jobs(spark, sf_dir, "events")
+    cached, jobs = _table_and_jobs(spark, sf_dir, "events")
+    assert jobs == 0
+    assert dict(cached.dtypes)["ts"] == "timestamp" == dict(first.dtypes)["ts"]
+    assert sorted(cached.collect()) == sorted(first.collect())

@@ -108,6 +108,18 @@ ENGINE_RULES = (
         {"operators/materialize.py"},
         set(),
     ),
+    (
+        "file identity outside io.table_identity",
+        r"os\.stat\(",
+        {"io.py"},
+        set(),
+    ),
+    (
+        "sf-table reads outside io.table",
+        r"\.read\b.*sf_dir",
+        {"io.py"},
+        set(),
+    ),
 )
 
 
@@ -202,8 +214,9 @@ def test_engine_patterns_go_through_their_helper():
     (session.py), takes scratch directories only from
     io.user_scratch_dir, intersects token sets only in the
     operators/minhash.py kernels, trains or encodes PQ codes only in
-    operators/annsearch.py, and materializes eagerly only in
-    operators/materialize.py; see ENGINE_RULES."""
+    operators/annsearch.py, materializes eagerly only in
+    operators/materialize.py, and stats or reads an sf table only in
+    io.py (io.table_identity, io.table); see ENGINE_RULES."""
     hits = []
     for path in sorted(PKG.rglob("*.py")):
         rel = path.relative_to(PKG).as_posix()
